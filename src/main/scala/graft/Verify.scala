@@ -1,8 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/oracle_check.py).
+  * Every query runs and every output is written even when some fail;
+  * the process then exits nonzero if any query threw, so a broken
+  * query fails the run instead of surfacing only as a missing output
+  * directory. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -19,6 +23,7 @@ object Verify {
         s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: " +
           unknown.toSeq.sorted.mkString(", "))
     }
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries.filter(kv => only.forall(_.contains(kv._1)))
       .foreach { case (name, fn) =>
       // coalesce(1) is oracle-dump-only convenience at sf0.01 — real sinks
@@ -27,6 +32,7 @@ object Verify {
         .option("compression", "zstd").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       } finally spark.catalog.clearCache() // drop operator-persisted frames
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -45,5 +51,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} query(ies) failed: " +
+        failed.sorted.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

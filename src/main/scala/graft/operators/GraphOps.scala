@@ -345,12 +345,8 @@ object GraphOps {
   def connectedComponents(und: DataFrame, maxRounds: Int = 30): DataFrame =
     ccWithRounds(und, maxRounds)._1
 
-  private[graft] def ccWithRounds(und: DataFrame, maxRounds: Int,
-      // observability hook (GraphTailProbe): called after each round's
-      // signature action with (round, seconds) — the ONLY per-round
-      // action, so its wall IS the round's wall (lazy checkpoints
-      // materialize inside it; there is no separate checkpoint pass)
-      onRound: (Int, Double) => Unit = null): (DataFrame, Int) = {
+  private[graft] def ccWithRounds(und: DataFrame,
+      maxRounds: Int): (DataFrame, Int) = {
     // largeStar emits a MULTISET on purpose (round-17): its output is
     // at most one row per (a, b) adjacency pair with b > a — never
     // more than |e| rows — and smallStar is duplicate-insensitive
@@ -417,10 +413,8 @@ object GraphOps {
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {
-      val t0 = System.nanoTime()
       val next = smallStar(largeStar(e)).lineageCut(eager = false)
       val nextSig = signature(next)
-      if (onRound != null) onRound(rounds, (System.nanoTime() - t0) / 1e9)
       e = next
       converged = nextSig == sig
       sig = nextSig

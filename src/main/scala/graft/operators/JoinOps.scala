@@ -1,272 +1,84 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 
-/** Join operators beyond the built-in surface: backward as-of join and a
-  * salted equi-join for skewed keys.
+/** Join operators beyond the built-in surface: the as-of join family,
+  * binned range and interval-overlap joins, a bloom semi-join reduction
+  * and a salted equi-join for skewed keys.
   *
-  * Both are compositions of stock Catalyst operators, chosen for their
-  * scale shape: the as-of join is ONE shuffle of the unioned inputs plus
-  * a keyed window (no time-range cross product, no per-row probing); the
-  * salted join trades k-fold duplication of the build side for breaking
-  * a hot key across k reducers.
+  * The as-of join has ONE entry, [[JoinOps.asOfJoin]], which builds the
+  * native [[graft.plans.AsOfJoin]] node; the planner then picks the exec
+  * from stats (broadcast when the right side is dimension-sized,
+  * shuffled streaming merge otherwise). [[JoinOps.asOfJoinTimeSliced]]
+  * and [[JoinOps.asOfJoinAuto]] are the skew paths over that same node.
+  * The other joins are compositions of stock Catalyst operators, chosen
+  * for their scale shape: the range joins equi-join on time bins
+  * instead of running an inequality join; the salted join trades k-fold
+  * duplication of the build side for breaking a hot key across k
+  * reducers.
   */
 object JoinOps {
 
-  /** Backward as-of join: for each left row, the most recent right row
-    * with rightTime <= leftTime on the same key. Inner semantics by
-    * default (left rows with no prior right row are dropped);
-    * `leftOuter = true` retains them with null `asof_*` columns — the
-    * ASOF LEFT JOIN shape, including SQL LEFT JOIN null-key behavior: a
-    * NULL key/time never matches but the left row itself survives.
+  /** As-of join: for each left row, the latest right row with
+    * rightTime <= leftTime on the same key (backward, the default), or
+    * with `forward = true` the EARLIEST right row with rightTime >=
+    * leftTime (pandas merge_asof direction='forward'). Inner semantics
+    * by default (left rows with no match drop); `leftOuter = true`
+    * retains them with null `asof_*` columns — the ASOF LEFT JOIN shape,
+    * including SQL LEFT JOIN null-key behavior: a NULL key/time never
+    * matches but the left row itself survives. `tolerance` (time-column
+    * units; micros for timestamps) caps the match's staleness — pandas
+    * merge_asof(tolerance=...): a too-distant match drops (inner) or
+    * null-pads (leftOuter), identical to never-matched. `strict`
+    * excludes exact time ties (DuckDB's `>`/`<` comparators).
     *
-    * Implementation: tag and union both inputs, then per-key
-    * last-non-null over the merged time order — right rows sort before
-    * left rows at equal timestamps so "<=" is inclusive. Cost is a
-    * single hash shuffle on the key + an in-partition sort: O((L+R) log)
-    * per key, independent of time-range density — the shape that
-    * survives 100 TB where an inequality-join range explosion would not.
+    * Key columns may be ANY orderable type (bigint, string, date,
+    * decimal, or a struct for composite keys), the same type on both
+    * sides; time columns bigint or timestamp, the same type on both
+    * sides. Integral keys and times widen to bigint. Output is
+    * `left.columns ++ asof_<rightVals>`.
     *
-    * `rightVals` are the right-side columns to carry; they appear
-    * prefixed with `asof_`. */
-  def asOfJoinBackward(left: DataFrame, right: DataFrame,
-                       leftKey: String, rightKey: String,
-                       leftTime: String, rightTime: String,
-                       rightVals: Seq[String],
-                       leftOuter: Boolean = false,
-                       tolerance: Option[Long] = None): DataFrame =
-    asOfJoinComposed(left, right, leftKey, rightKey, leftTime, rightTime,
-      rightVals, leftOuter, forward = false, tolerance)
-
-  /** Forward as-of join: for each left row, the EARLIEST right row with
-    * rightTime >= leftTime on the same key (pandas merge_asof
-    * direction='forward' — "the next event after this one": next quote
-    * after an order, next maintenance slot after a failure). The exact
-    * time-mirror of [[asOfJoinBackward]]: the merged window scans time
-    * DESCENDING so last-non-null picks the nearest FUTURE right row;
-    * everything else (null semantics, leftOuter, cost shape) is
-    * identical. */
-  def asOfJoinForward(left: DataFrame, right: DataFrame,
-                      leftKey: String, rightKey: String,
-                      leftTime: String, rightTime: String,
-                      rightVals: Seq[String],
-                      leftOuter: Boolean = false,
-                      tolerance: Option[Long] = None): DataFrame =
-    asOfJoinComposed(left, right, leftKey, rightKey, leftTime, rightTime,
-      rightVals, leftOuter, forward = true, tolerance)
-
-  /** a time column as a raw long in its own units (micros for
-    * timestamps) — the units `tolerance` is stated in */
-  private def timeAsLong(c: Column,
-                         dt: org.apache.spark.sql.types.DataType): Column =
-    dt match {
-      case org.apache.spark.sql.types.TimestampType => unix_micros(c)
-      case _ => c.cast("long")
-    }
-
-  private def asOfJoinComposed(left: DataFrame, right: DataFrame,
-                               leftKey: String, rightKey: String,
-                               leftTime: String, rightTime: String,
-                               rightVals: Seq[String],
-                               leftOuter: Boolean,
-                               forward: Boolean,
-                               tolerance: Option[Long] = None): DataFrame = {
-    val leftCols = left.columns.toSeq
-    require(tolerance.isEmpty || !rightVals.contains("_mt"),
-      "rightVals may not contain the reserved name _mt when tolerance is set")
-    // the right payload travels as ONE nullable struct: null on left rows,
-    // non-null on every right row (even when individual fields are null),
-    // so one last(ignoreNulls) both finds the match and keeps its fields
-    // atomic — per-column fills could tear values from different rows.
-    // With a tolerance, the match's own time rides INSIDE the struct
-    // (field _mt) so the staleness check reads the time of the exact row
-    // last() picked — a separate column could tear.
-    val mtCols: Seq[Column] = if (tolerance.isDefined)
-      Seq(timeAsLong(col(rightTime), right.schema(rightTime).dataType)
-        .as("_mt"))
-    else Nil
-    val mtFields: Seq[org.apache.spark.sql.types.StructField] =
-      if (tolerance.isDefined)
-        Seq(org.apache.spark.sql.types.StructField("_mt",
-          org.apache.spark.sql.types.LongType))
-      else Nil
-    val payload = struct(mtCols ++ rightVals.map(col): _*)
-    val l = left
-      .withColumn("_k", col(leftKey)).withColumn("_t", col(leftTime))
-      .withColumn("_is_left", lit(1))
-      .withColumn("_p", lit(null).cast(
-        org.apache.spark.sql.types.StructType(
-          mtFields ++ rightVals.map(v => right.schema(v)))))
-    val rAligned = leftCols.foldLeft(
-      right.withColumn("_k", col(rightKey)).withColumn("_t", col(rightTime))
-        .withColumn("_is_left", lit(0)).withColumn("_p", payload))(
-      (df, c) => if (df.columns.contains(c)) df
-        else df.withColumn(c, lit(null).cast(left.schema(c).dataType)))
-      .select(l.columns.map(col).toSeq: _*)
-
-    // SQL join null semantics: a NULL key or time never matches. Without
-    // this filter the window partitioning would group null-key rows
-    // TOGETHER (groupBy-style null equality) and happily as-of-match
-    // them — the divergence the native exec's equality spec caught.
-    val merged = l.unionByName(rAligned)
-      .filter(col("_k").isNotNull && col("_t").isNotNull)
-    // right rows sort before left rows at equal timestamps (either
-    // direction), so the time inequality stays inclusive
-    val tOrder = if (forward) col("_t").desc else col("_t").asc
-    val w = Window.partitionBy(col("_k"))
-      .orderBy(tOrder, col("_is_left").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val windowed0 = merged
-      .withColumn("_p", last(col("_p"), ignoreNulls = true).over(w))
-      .filter(col("_is_left") === 1)
-    // staleness cap: a match farther than `tolerance` (in the time
-    // column's own units) from the left row is NO match — nulled here,
-    // BEFORE the inner/outer resolution, so inner drops and outer
-    // null-pads, exactly like the never-matched case
-    val windowed = tolerance.map { tol =>
-      val lt = timeAsLong(col("_t"), left.schema(leftTime).dataType)
-      val diff = if (forward) col("_p._mt") - lt else lt - col("_p._mt")
-      windowed0.withColumn("_p",
-        when(col("_p").isNotNull && diff <= tol, col("_p")))
-    }.getOrElse(windowed0)
-    val resolved =
-      if (!leftOuter) windowed.filter(col("_p").isNotNull)
-      // outer: unmatched left rows keep their null payload; null-key/time
-      // left rows (excluded from the window above) rejoin here, also
-      // null-padded — they carry _p = null already
-      else windowed.unionByName(
-        l.filter(col("_k").isNull || col("_t").isNull))
-    resolved.select(leftCols.map(col) ++
-      rightVals.map(v => col(s"_p.$v").as(s"asof_$v")): _*)
-  }
-
-  /** [[asOfJoinBackward]] through the NATIVE whole-operator plan
-    * ([[graft.plans.AsOfJoin]] → AsOfJoinExec): same inner backward
-    * as-of semantics and the same (leftCols..., asof_<v>...) output
-    * shape, but planned as a co-partitioned two-sided sort + one O(1)-
-    * state streaming merge per partition instead of union + window —
-    * no null padding through the shuffle, no window buffering. Key
-    * columns may be ANY orderable type (bigint, string, date, decimal,
-    * or a struct for composite keys), same type on both sides; time
-    * columns bigint/timestamp (the exec's contract). `tolerance`
-    * (time-column units; micros for timestamps) caps the match's
-    * staleness — pandas merge_asof(tolerance=...): a too-distant match
-    * drops (inner) or null-pads (leftOuter), identical to never-matched.
-    * The spec pins result equality with the composed form; e24 gates it
-    * against the DuckDB ASOF JOIN oracle, e29 the string-keyed form,
-    * e30 the tolerance form. */
-  def asOfJoinNative(left: DataFrame, right: DataFrame,
-                     leftKey: String, rightKey: String,
-                     leftTime: String, rightTime: String,
-                     rightVals: Seq[String],
-                     leftOuter: Boolean = false,
-                     forward: Boolean = false,
-                     tolerance: Option[Long] = None,
-                     strict: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
-    import org.apache.spark.sql.catalyst.plans.logical.Project
-    val spark = left.sparkSession
+    * Planned as the native [[graft.plans.AsOfJoin]] node (built by
+    * [[graft.plans.AsOfJoin.build]]): the strategy broadcasts a right
+    * side under `spark.sql.autoBroadcastJoinThreshold` (the fact side
+    * reaches the join with zero exchanges — a stream-static join when
+    * the left is a stream) and otherwise co-partitions both sides for a
+    * streaming merge. e24 gates it against the DuckDB ASOF JOIN oracle,
+    * e29 the string-keyed form, e30 the tolerance form; the equality
+    * specs compare it with the composed union+window reference in the
+    * test tree. */
+  def asOfJoin(left: DataFrame, right: DataFrame,
+               leftKey: String, rightKey: String,
+               leftTime: String, rightTime: String,
+               rightVals: Seq[String],
+               leftOuter: Boolean = false,
+               forward: Boolean = false,
+               tolerance: Option[Long] = None,
+               strict: Boolean = false): DataFrame = {
     val lPlan = left.queryExecution.analyzed
-    // fresh-alias the right side: when both inputs derive from the same
-    // source (the self-join case), their outputs share exprIds, and the
-    // analyzer's DeduplicateRelations only rewrites built-in Join nodes —
-    // without this the optimizer resolves right-side references against
-    // the LEFT's identical ids and prunes the right child's columns away
-    val rAliases = right.queryExecution.analyzed.output
-      .map(a => Alias(a, a.name)())
-    val rPlan = Project(rAliases, right.queryExecution.analyzed)
-    def attr(out: Seq[Attribute], n: String) =
-      out.find(_.name == n).getOrElse(
+    val rPlan = right.queryExecution.analyzed
+    def attr(plan: LogicalPlan, n: String) =
+      plan.output.find(_.name == n).getOrElse(
         throw new IllegalArgumentException(s"column $n not found"))
-    val plan = graft.plans.AsOfJoin(lPlan, rPlan,
-      attr(lPlan.output, leftKey), attr(rPlan.output, rightKey),
-      attr(lPlan.output, leftTime), attr(rPlan.output, rightTime),
-      leftOuter, forward, tolerance, strict)
+    val plan = graft.plans.AsOfJoin.build(lPlan, rPlan,
+      attr(lPlan, leftKey), attr(rPlan, rightKey),
+      attr(lPlan, leftTime), attr(rPlan, rightTime),
+      leftOuter, forward, tolerance, strict,
+      msg => throw new IllegalArgumentException(s"asOfJoin: $msg"))
     // positional rename: output = left columns ++ right columns, which
     // may share names — rename right side to asof_<name>, then cut to
     // the requested payload
-    val renamed = org.apache.spark.sql.GraftPlanBridge.ofRows(spark, plan)
+    val renamed = org.apache.spark.sql.GraftPlanBridge
+      .ofRows(left.sparkSession, plan)
       .toDF(left.columns.toSeq ++ right.columns.map("asof_" + _): _*)
     renamed.select(left.columns.map(col).toSeq ++
       rightVals.map(v => col(s"asof_$v")): _*)
   }
 
-  /** Broadcast as-of join — the shuffle-free scale path when the RIGHT
-    * side is dimension-sized (a rate table, a config history, a quotes
-    * snapshot): [[asOfJoinNative]] shuffles BOTH sides on the key, which
-    * at 100 TB means moving the entire fact table to look up a table
-    * that fits in one executor. Here the right side collapses to one row
-    * per key holding its time-sorted (time, payload) array (one small
-    * keyed shuffle over the DIM side only), that aggregate BROADCASTS,
-    * and the fact side flows scan -> BroadcastHashJoin -> project with
-    * ZERO exchanges — the plan shape is pinned in AsOfBroadcastSpec.
-    * The per-row match is `element_at(filter(arr, ...), -1/1)`: a linear
-    * scan of the key's history inside whole-stage codegen, O(rows per
-    * key) per probe — the right trade when the history is dim-sized
-    * (the broadcast bound, ~10MB-1GB, enforces that honestly).
-    *
-    * Full contract parity with the native exec, proven by equality
-    * specs: backward/forward, inner/LEFT OUTER, tolerance, SQL-null
-    * semantics (NULL key/time never matches; inner drops the row, outer
-    * null-pads). Ties on (key, rightTime) break by payload order (the
-    * sort_array tiebreak) vs physical order natively — both unspecified
-    * contracts. Output is `left.columns ++ asof_<rightVals>`, same as
-    * every as-of variant, so all share one oracle. */
-  def asOfJoinBroadcast(left: DataFrame, right: DataFrame,
-                        leftKey: String, rightKey: String,
-                        leftTime: String, rightTime: String,
-                        rightVals: Seq[String],
-                        leftOuter: Boolean = false,
-                        forward: Boolean = false,
-                        tolerance: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.types.TimestampType
-    // reserved internal names — fail loud instead of silently shadowing
-    Seq("__bk", "__arr", "__m").foreach(n =>
-      require(!left.columns.contains(n) && !right.columns.contains(n),
-        s"asOfJoinBroadcast reserves the column name `$n`; rename the " +
-          "caller's column first"))
-    def micros(df: DataFrame, c: String, e: Column): Column =
-      if (df.schema(c).dataType == TimestampType) unix_micros(e) else
-        e.cast("long")
-    // dim side: one row per key, history sorted by (time, payload) —
-    // ascending, so backward takes the LAST qualifying element and
-    // forward the FIRST
-    val rAgg = right
-      .filter(col(rightKey).isNotNull && col(rightTime).isNotNull)
-      .groupBy(col(rightKey).as("__bk"))
-      .agg(sort_array(collect_list(struct(
-        col(rightTime).as("__rt"),
-        struct(rightVals.distinct.map(col).toIndexedSeq: _*).as("__pv"))))
-        .as("__arr"))
-    // always a LEFT broadcast join: inner as-of semantics are applied
-    // AFTER the match probe (a key present in the dim table whose rows
-    // are all out of tolerance must still drop under inner — a plain
-    // inner join would keep it through the probe)
-    val probe = left.join(broadcast(rAgg),
-      col(leftKey) === col("__bk"), "left")
-    val lt = micros(left, leftTime, col(leftTime))
-    def inBound(x: Column): Column = {
-      val rt = micros(right, rightTime, x("__rt"))
-      val dir = if (forward) rt >= lt else rt <= lt
-      tolerance.fold(dir)(tol =>
-        dir && (if (forward) rt - lt else lt - rt) <= lit(tol))
-    }
-    // try_element_at, not element_at: an empty qualifying set must be
-    // NULL (no match), never an ANSI out-of-bounds error
-    val m = try_element_at(
-      filter(col("__arr"), inBound _), lit(if (forward) 1 else -1))
-    val withMatch = probe.withColumn("__m",
-      when(col(leftTime).isNotNull, m))
-    val kept = if (leftOuter) withMatch
-               else withMatch.filter(col("__m").isNotNull)
-    kept.select((left.columns.map(col) ++ rightVals.map(v =>
-      col(s"__m.__pv.$v").as(s"asof_$v"))).toIndexedSeq: _*)
-  }
-
   /** Time-sliced skew-split as-of join — the hot-key scale path for
-    * [[asOfJoinNative]]. AQE's skew-join optimization pattern-matches
+    * [[asOfJoin]]. AQE's skew-join optimization pattern-matches
     * only the built-in SortMergeJoin/ShuffledHashJoin execs, so the
     * native as-of exec's ClusteredDistribution exchanges are OUTSIDE
     * runtime skew splitting (pinned by AsOfSkewSpec): one key carrying
@@ -286,7 +98,7 @@ object JoinOps {
     * (key, slice)), so the extra work is metadata-scale: the slice
     * inequality join touches |keys| x |slices| rows, not the corpus.
     *
-    * Same output contract and null semantics as [[asOfJoinNative]]
+    * Same output contract and null semantics as [[asOfJoin]]
     * (NULL key/time never matches; inner drops, `leftOuter` pads) — the
     * composite struct key is nulled whenever either component is null so
     * struct ordering cannot resurrect SQL-null equality. `forward` is
@@ -385,7 +197,7 @@ object JoinOps {
     // tie with a left time in the destination slice — only the
     // within-slice merge needs the tie exclusion, and the native exec
     // applies it
-    asOfJoinNative(lS, rAug, leftKey = "__kk", rightKey = "__kk",
+    asOfJoin(lS, rAug, leftKey = "__kk", rightKey = "__kk",
         leftTime = leftTime, rightTime = rightTime,
         rightVals = rightVals, leftOuter = leftOuter,
         forward = forward, tolerance = tolerance, strict = strict)
@@ -410,10 +222,9 @@ object JoinOps {
     *     each hot key's slice width from an exact count+span lookup
     *     over just the candidate keys (a pruned second pass); the MIN
     *     width across hot keys becomes the global sliceWidth (w19's
-    *     arithmetic). `exactHistogram = true` keeps the round-16
-    *     exact-groupBy twin (one full keyed shuffle, ReuseExchange'd
-    *     total — the w19 gate shape, and the fallback when an explicit
-    *     `targetRowsPerTask` is finer than the sketch can certify);
+    *     arithmetic). When an explicit `targetRowsPerTask` is finer
+    *     than the sketch can certify, it falls back to the exact
+    *     histogram (one full keyed shuffle — the w19 gate shape);
     *  2. keys above `targetRowsPerTask` (default: left total /
     *     defaultParallelism — w14's hot bar) are HOT, capped at the
     *     top max(4*parallelism, 64) by count (the remainder routes
@@ -423,7 +234,7 @@ object JoinOps {
     *  3. both inputs split on hot-key membership (an isin predicate —
     *     it folds into the scan as an In filter, no extra shuffle):
     *     hot rows route through [[asOfJoinTimeSliced]] at the planned
-    *     width, cold rows through [[asOfJoinNative]] (which keeps the
+    *     width, cold rows through [[asOfJoin]] (which keeps the
     *     cost-based broadcast/shuffled choice), results union.
     *
     * No hot keys → the plain native plan, zero routing overhead beyond
@@ -440,18 +251,15 @@ object JoinOps {
                    forward: Boolean = false,
                    tolerance: Option[Long] = None,
                    strict: Boolean = false,
-                   targetRowsPerTask: Long = 0L,
-                   exactHistogram: Boolean = false,
-                   sketchCapacity: Int = 4096): DataFrame = {
+                   targetRowsPerTask: Long = 0L): DataFrame = {
     require(!left.schema(leftKey).dataType
       .isInstanceOf[org.apache.spark.sql.types.StructType],
       "asOfJoinAuto requires an atomic key column — composite keys: " +
         "pre-concat, or size asOfJoinTimeSliced from the w19 plan directly")
     def native(l: DataFrame, r: DataFrame): DataFrame =
-      asOfJoinNative(l, r, leftKey, rightKey, leftTime, rightTime,
+      asOfJoin(l, r, leftKey, rightKey, leftTime, rightTime,
         rightVals, leftOuter, forward, tolerance, strict)
-    asOfSkewPlan(left, leftKey, leftTime, targetRowsPerTask,
-        exactHistogram, sketchCapacity) match {
+    asOfSkewPlan(left, leftKey, leftTime, targetRowsPerTask) match {
       case None => native(left, right)
       case Some((hotKeys, sliceWidth)) =>
         val lHot = left.filter(col(leftKey).isInCollection(hotKeys))

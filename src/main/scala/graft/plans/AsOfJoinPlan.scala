@@ -2,12 +2,13 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, Descending, Expression, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
+import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeMap, AttributeReference, BindReferences, Cast, Descending, Expression, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.types.{LongType, TimestampType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, TimestampType}
 
 /** Native as-of join — the whole-operator Catalyst tier
   * (logical node + strategy + physical exec, injected through
@@ -43,16 +44,15 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * times, strict at t is definitionally non-strict at t-1 — the
   * equality AsOfStrictSpec pins on a tie-rich fixture.
   *
-  * Why a physical operator when JoinOps.asOfJoinBackward already
-  * composes it from stock pieces: the composition UNIONS both inputs
-  * through one exchange and runs a window with a last(ignoreNulls)
-  * frame, which means (a) every left row is padded with a null struct
-  * and every right row is padded with null left columns before the
-  * shuffle, (b) the window operator buffers each key group and
-  * materializes a running payload column, and (c) the unioned frame
-  * must be filtered back apart afterwards. The native exec shuffles
-  * each side as-is (same total rows moved, no padding), sorts each
-  * side by (key, time) — both via EnsureRequirements, so AQE still
+  * Why a physical operator instead of the stock-operator composition
+  * (tag and union both inputs, then a keyed window with a
+  * last(ignoreNulls) frame — kept in the test tree as the reference the
+  * equality specs compare against): the composition pads every left
+  * row with a null struct and every right row with null left columns
+  * before its one shuffle, buffers each key group in the window, and
+  * filters the unioned frame back apart afterwards. The native exec
+  * shuffles each side as-is (same total rows moved, no padding), sorts
+  * each side by (key, time) — both via EnsureRequirements, so AQE still
   * plans and coalesces the exchanges — and then streams BOTH sorted
   * iterators once per partition with O(1) state (one lookahead row +
   * one matched-row copy). No buffering, no padding, no re-filtering.
@@ -68,14 +68,15 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   *  - key expressions may be ANY orderable type (atomic — bigint,
   *    string, date, decimal — or a struct of orderables for COMPOSITE
   *    keys: pass `struct(colA, colB)` on both sides), same type on both
-  *    sides; the single-type require() fails at planning, and
-  *    [[ResolveAsOfJoin]] raises the same check at ANALYSIS for SQL
-  *    callers. Non-bigint keys compare through the type's interpreted
+  *    sides (integral keys widen to bigint first); [[AsOfJoin.build]]
+  *    raises the check when the node is built, naming the columns.
+  *    Non-bigint keys compare through the type's interpreted
   *    ordering (a virtual call per merge step vs the bigint primitive
   *    compare); the sorts still dominate either way;
   *  - time expressions must be LongType or TimestampType (micros-backed
-  *    long) — event time is a totally-ordered physical axis, so the
-  *    engine's convention stays narrow on purpose;
+  *    long; integral times widen to bigint), the SAME type on both sides
+  *    — event time is a totally-ordered physical axis, so the engine's
+  *    convention stays narrow on purpose;
   *  - rows with a NULL key or time never match (skipped on both sides,
   *    the composed operator's na-semantics);
   *  - ties: among right rows with equal (key, time) the one latest in
@@ -83,16 +84,18 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   *  - volcano-mode (no codegen): the merge is a per-partition streaming
   *    pass whose cost is (|L|+|R|) comparisons after the sorts, which
   *    dominate (measured: interpreted output projection = 0.24% of
-  *    e24's wall, tools/AsOfProjectionProbe.scala).
+  *    e24's wall, SURVEY.md).
+  *
+  * Build the node with [[AsOfJoin.build]], the one constructor every
+  * front end shares (`JoinOps.asOfJoin`, the `asof_join` table function,
+  * the `ASOF JOIN` syntax).
   */
 case class AsOfJoin(
     left: LogicalPlan, right: LogicalPlan,
     leftKey: Expression, rightKey: Expression,
     leftTime: Expression, rightTime: Expression,
-    leftOuter: Boolean = false,
-    forward: Boolean = false,
-    tolerance: Option[Long] = None,
-    strict: Boolean = false) extends BinaryNode {
+    leftOuter: Boolean, forward: Boolean,
+    tolerance: Option[Long], strict: Boolean) extends BinaryNode {
   // outer: the right side's attributes become nullable in the output —
   // downstream IsNotNull simplification would otherwise wrongly prune
   // the null-padded rows
@@ -104,6 +107,111 @@ case class AsOfJoin(
     copy(left = newLeft, right = newRight)
 }
 
+object AsOfJoin {
+
+  /** integral keys and times widen to bigint, so an INT column against
+    * a BIGINT one just works; every other type passes through */
+  def widen(e: Expression): Expression = e.dataType match {
+    case IntegerType | ShortType | ByteType => Cast(e, LongType)
+    case _ => e
+  }
+
+  /** The one constructor of the [[AsOfJoin]] node. `left` and `right`
+    * are resolved plans; the key and time expressions reference their
+    * outputs.
+    *
+    * The right side is fresh-aliased: when both inputs derive from the
+    * same source (the self-join case) their outputs share exprIds, and
+    * the analyzer's DeduplicateRelations only rewrites built-in Join
+    * nodes — without the alias the optimizer resolves right-side
+    * references against the LEFT's identical ids and prunes the right
+    * child's columns away. The node's output is `left.output` followed
+    * by the fresh right attributes, positionally aligned with
+    * `right.output`.
+    *
+    * Keys and times widen ([[widen]]) and are type-checked HERE, when
+    * the node is built, so a bad type fails naming its columns instead
+    * of surfacing from a running task. `fail` raises in the caller's
+    * error class. */
+  def build(left: LogicalPlan, right: LogicalPlan,
+      leftKey: Expression, rightKey: Expression,
+      leftTime: Expression, rightTime: Expression,
+      leftOuter: Boolean, forward: Boolean,
+      tolerance: Option[Long], strict: Boolean,
+      fail: String => Nothing): AsOfJoin = {
+    def name(e: Expression): String = e match {
+      case a: Attribute => a.name
+      case other => other.sql
+    }
+    val (lk, rk) = (widen(leftKey), widen(rightKey))
+    if (!DataType.equalsIgnoreNullability(lk.dataType, rk.dataType))
+      fail(s"key columns `${name(leftKey)}` (${lk.dataType.sql}) and " +
+        s"`${name(rightKey)}` (${rk.dataType.sql}) must have the same type")
+    if (!RowOrdering.isOrderable(lk.dataType))
+      fail(s"key type ${lk.dataType.sql} is not orderable")
+    val (lt, rt) = (widen(leftTime), widen(rightTime))
+    def isTime(e: Expression) =
+      e.dataType == LongType || e.dataType == TimestampType
+    val times = s"time columns `${name(leftTime)}` (${lt.dataType.sql}) " +
+      s"and `${name(rightTime)}` (${rt.dataType.sql})"
+    if (!isTime(lt) || !isTime(rt))
+      fail(s"$times must be bigint or timestamp")
+    // a bigint-vs-timestamp mix would compare raw units against micros —
+    // silently garbage if the bigint is millis/seconds
+    if (lt.dataType != rt.dataType)
+      fail(s"$times must have the SAME type — cast one side so the " +
+        "units are explicit")
+    tolerance.filter(_ < 0L).foreach(t =>
+      fail(s"tolerance must be >= 0, got $t"))
+    val fresh = Project(right.output.map(a => Alias(a, a.name)()), right)
+    val renamed = AttributeMap(right.output.zip(fresh.output))
+    def onFresh(e: Expression): Expression = e.transform {
+      case a: AttributeReference => renamed.getOrElse(a, a)
+    }
+    AsOfJoin(left, fresh, lk, onFresh(rk), lt, onFresh(rt),
+      leftOuter, forward, tolerance, strict)
+  }
+
+  /** The analysis-time skew route shared by the `asof_join_auto` table
+    * functions and the `ASOF JOIN` syntax under `spark.graft.asof.auto`:
+    * hands a built node's inputs to `JoinOps.asOfJoinAuto` (hot keys
+    * time-sliced, cold keys on the plain node). Hot-key detection needs
+    * runtime statistics, so this RUNS the detection jobs on the driver
+    * during analysis — plan-only operations (EXPLAIN, re-analysing a
+    * view) pay them too; the sliced plan is a different LOGICAL
+    * composition (filters, a slice-key union, two as-of nodes), which a
+    * physical-planning decision could not express.
+    *
+    * Both sides are renamed positionally first (`__l0..`/`__r0..`, key
+    * and time as `__lk`/`__lt` and `__rk`/`__rt`): the router addresses
+    * columns by name, and a side may carry duplicate names. The result's
+    * output is positionally aligned with `aoj.output` — same names,
+    * fresh exprIds. The router requires an atomic key. */
+  def routeAuto(aoj: AsOfJoin, targetRowsPerTask: Long): LogicalPlan = {
+    val spark = SparkSession.active
+    def side(p: LogicalPlan, tag: String, key: Expression,
+             time: Expression) =
+      GraftPlanBridge.ofRows(spark, Project(
+        p.output.zipWithIndex.map { case (a, i) => Alias(a, s"__$tag$i")() } ++
+          Seq(Alias(key, s"__${tag}k")(), Alias(time, s"__${tag}t")()), p))
+    val routed = graft.operators.JoinOps.asOfJoinAuto(
+      side(aoj.left, "l", aoj.leftKey, aoj.leftTime),
+      side(aoj.right, "r", aoj.rightKey, aoj.rightTime),
+      leftKey = "__lk", rightKey = "__rk", leftTime = "__lt",
+      rightTime = "__rt",
+      rightVals = aoj.right.output.indices.map(i => s"__r$i"),
+      leftOuter = aoj.leftOuter, forward = aoj.forward,
+      tolerance = aoj.tolerance, strict = aoj.strict,
+      targetRowsPerTask = targetRowsPerTask).queryExecution.analyzed
+    val byName = routed.output.map(a => a.name -> a).toMap
+    val nLeft = aoj.left.output.size
+    Project(aoj.output.zipWithIndex.map { case (a, i) =>
+      val src = if (i < nLeft) s"__l$i" else s"asof___r${i - nLeft}"
+      Alias(byName(src), a.name)()
+    }, routed)
+  }
+}
+
 /** Planner rule mapping the logical [[AsOfJoin]] to a physical exec;
   * injected by [[graft.GraftExtensions]]. COST-BASED, the way Spark's
   * own JoinSelection picks BroadcastHashJoin over SortMergeJoin: when
@@ -113,22 +221,18 @@ case class AsOfJoin(
   * otherwise the shuffled streaming-merge [[AsOfJoinExec]]. Setting the
   * threshold to -1 forces the shuffled plan, same switch as for
   * built-in joins. */
-class AsOfJoinStrategy(session: org.apache.spark.sql.SparkSession)
-    extends SparkStrategy {
-  // legacy zero-arg constructor: shuffled-only planning (used by specs
-  // that pin the merge exec's behavior in isolation)
-  def this() = this(null)
+class AsOfJoinStrategy(session: SparkSession) extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case AsOfJoin(l, r, lk, rk, lt, rt, outer, fwd, tol, strict) =>
-      val threshold =
-        if (session == null) -1L
-        else session.sessionState.conf.autoBroadcastJoinThreshold
-      if (threshold > 0 && r.stats.sizeInBytes <= threshold)
-        BroadcastAsOfJoinExec(lk, rk, lt, rt, outer, fwd, tol, strict,
-          planLater(l), planLater(r)) :: Nil
+    case j: AsOfJoin =>
+      val threshold = session.sessionState.conf.autoBroadcastJoinThreshold
+      if (threshold > 0 && j.right.stats.sizeInBytes <= threshold)
+        BroadcastAsOfJoinExec(j.leftKey, j.rightKey, j.leftTime,
+          j.rightTime, j.leftOuter, j.forward, j.tolerance, j.strict,
+          planLater(j.left), planLater(j.right)) :: Nil
       else
-        AsOfJoinExec(lk, rk, lt, rt, outer, fwd, tol, strict,
-          planLater(l), planLater(r)) :: Nil
+        AsOfJoinExec(j.leftKey, j.rightKey, j.leftTime, j.rightTime,
+          j.leftOuter, j.forward, j.tolerance, j.strict,
+          planLater(j.left), planLater(j.right)) :: Nil
     case _ => Nil
   }
 }
@@ -140,30 +244,7 @@ case class AsOfJoinExec(
     tolerance: Option[Long], strict: Boolean,
     left: SparkPlan, right: SparkPlan) extends BinaryExecNode {
 
-  private def isTime(e: Expression): Boolean =
-    e.dataType == LongType || e.dataType == TimestampType
-  // equalsIgnoreNullability, not ==: nullability (incl. struct FIELD nullability, which
-  // differs whenever one side's key is provably non-null) is irrelevant
-  // to the interpreted ordering the merge uses
-  require(org.apache.spark.sql.types.DataType.equalsIgnoreNullability(
-      leftKey.dataType, rightKey.dataType),
-    s"as-of keys must have the same type on both sides, got " +
-      s"${leftKey.dataType.sql} / ${rightKey.dataType.sql}")
-  require(RowOrdering.isOrderable(leftKey.dataType),
-    s"as-of key type must be orderable, got ${leftKey.dataType.sql}")
-  require(isTime(leftTime) && isTime(rightTime),
-    s"as-of times must be bigint or timestamp, got " +
-      s"${leftTime.dataType.sql} / ${rightTime.dataType.sql}")
-  // a bigint-vs-timestamp mix would compare raw units against micros —
-  // silently garbage if the bigint is millis/seconds. Make the caller
-  // state the units by casting one side.
-  require(leftTime.dataType == rightTime.dataType,
-    s"as-of time columns must have the SAME type on both sides " +
-      s"(got ${leftTime.dataType.sql} / ${rightTime.dataType.sql}) — " +
-      "cast one side so the units are explicit")
-  require(tolerance.forall(_ >= 0L),
-    s"as-of tolerance must be >= 0, got ${tolerance.get}")
-
+  // key/time types and the tolerance sign were checked by AsOfJoin.build
   override def output: Seq[Attribute] =
     left.output ++ (if (leftOuter) right.output.map(_.withNullability(true))
                     else right.output)

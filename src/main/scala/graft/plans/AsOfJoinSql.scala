@@ -51,7 +51,7 @@ import org.apache.spark.sql.types.StringType
   * literal type-dispatched from the payload list; pandas
   * merge_asof(tolerance=...) semantics per [[AsOfJoin]]), then one or
   * more right payload column names, which surface as `asof_<name>` —
-  * the exact output contract of `JoinOps.asOfJoinNative`, so e24/e25
+  * the exact output contract of `JoinOps.asOfJoin`, so e24/e25
   * share one oracle.
   *
   * Resolution happens in two steps because a TVF builder only sees
@@ -59,14 +59,13 @@ import org.apache.spark.sql.types.StringType
   * placeholder over two `UnresolvedRelation`s; the analyzer's builtin
   * rules resolve those children in the same fixed-point batch, and the
   * injected [[ResolveAsOfJoin]] rule then rewrites the placeholder to
-  * `Project(left ++ asof_-aliased payload, AsOfJoin(...))` — the
-  * identical plan `asOfJoinNative` builds, including the fresh-alias of
-  * the right side that keeps a self-join's exprIds distinct. */
+  * `Project(left ++ asof_-aliased payload, <node>)`, the node built by
+  * [[AsOfJoin.build]] exactly as `JoinOps.asOfJoin` builds it. */
 object AsOfJoinTvf {
 
   /** placeholder emitted by the TVF builder; never survives analysis.
     * `auto = true` marks the `asof_join_auto` family: the resolver then
-    * routes through `JoinOps.asOfJoinAuto` (hot keys time-sliced, cold
+    * routes through [[AsOfJoin.routeAuto]] (hot keys time-sliced, cold
     * keys native) instead of planning one [[AsOfJoin]];
     * `autoTarget > 0` is its explicit targetRowsPerTask. */
   case class UnresolvedAsOfJoin(
@@ -211,113 +210,33 @@ object AsOfJoinTvf {
 }
 
 /** Analyzer rule (injected via `injectResolutionRule`) completing
-  * [[AsOfJoinTvf.UnresolvedAsOfJoin]] once both relations resolved. */
+  * [[AsOfJoinTvf.UnresolvedAsOfJoin]] once both relations resolved:
+  * argument names resolve against the children with the session
+  * resolver, [[AsOfJoin.build]] makes the node (the `_auto` family then
+  * goes through [[AsOfJoin.routeAuto]] — its hot-key detection RUNS at
+  * analysis, see there), and the payload columns surface as
+  * `asof_<name as typed>`. */
 object ResolveAsOfJoin extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.resolveOperatorsUp {
-      // the _auto family delegates to the Scala router once both
-      // relations resolve: hot-key detection needs RUNTIME statistics,
-      // so this rewrite EXECUTES the detection jobs (the Misra-Gries
-      // sketch pass, or the exact histogram fallback) on the driver
-      // during analysis — the same moment AQE would gather stats, just
-      // one layer up. The placeholder is rewritten exactly once (it
-      // never re-enters the fixed point), so the detection cost is paid
-      // once per query, and the resulting plan is the identical
-      // sliced-union/native plan a Scala asOfJoinAuto caller gets.
-      // KNOWN COST of the analysis-time choice: plan-only operations —
-      // EXPLAIN, df.explain, re-analysis of a view wrapping the TVF —
-      // also pay the detection scans. Deciding at physical planning
-      // would avoid that but cannot express this rewrite (the sliced
-      // plan is a different LOGICAL composition: filters, a slice-key
-      // union, TWO as-of nodes), so the TVF trades explain-purity for
-      // routing the actual executions; a caller who only wants the
-      // plan shape should EXPLAIN the non-auto sibling.
       case AsOfJoinTvf.UnresolvedAsOfJoin(l, r, lk, rk, lt, rt, rv, outer,
-          fwd, tol, strict, true, autoTarget)
+          fwd, tol, strict, auto, autoTarget)
           if l.resolved && r.resolved =>
-        val spark = org.apache.spark.sql.SparkSession.active
-        // resolve argument names against the children with the session
-        // resolver FIRST: JoinOps.asOfJoinAuto's schema(name) lookups
-        // are case-sensitive, and the auto TVF must accept exactly the
-        // spellings its non-auto siblings accept (review r17)
-        def actual(out: Seq[Attribute], n: String, side: String): String =
-          out.find(a => conf.resolver(a.name, n)).map(_.name).getOrElse(
-            throw new IllegalArgumentException(
-              s"asof_join_auto: column `$n` not found in the $side " +
-                s"table (${out.map(_.name).mkString(", ")})"))
-        val actualVals = rv.map(actual(r.output, _, "right"))
-        val routed = graft.operators.JoinOps.asOfJoinAuto(
-          org.apache.spark.sql.GraftPlanBridge.ofRows(spark, l),
-          org.apache.spark.sql.GraftPlanBridge.ofRows(spark, r),
-          leftKey = actual(l.output, lk, "left"),
-          rightKey = actual(r.output, rk, "right"),
-          leftTime = actual(l.output, lt, "left"),
-          rightTime = actual(r.output, rt, "right"),
-          rightVals = actualVals,
-          leftOuter = outer, forward = fwd,
-          tolerance = tol, strict = strict,
-          targetRowsPerTask = autoTarget)
-        // the non-auto TVF aliases payloads asof_<AS TYPED>; match it
-        val renamed = rv.zip(actualVals).foldLeft(routed) {
-          case (df, (typed, act)) =>
-            if (typed == act) df
-            else df.withColumnRenamed(s"asof_$act", s"asof_$typed")
-        }
-        renamed.queryExecution.analyzed
-      case AsOfJoinTvf.UnresolvedAsOfJoin(l, r, lk, rk, lt, rt, rv, outer,
-          fwd, tol, strict, false, _) if l.resolved && r.resolved =>
+        def fail(msg: String): Nothing =
+          throw new IllegalArgumentException(s"asof_join: $msg")
         def attr(out: Seq[Attribute], n: String, side: String): Attribute =
-          out.find(a => conf.resolver(a.name, n)).getOrElse(
-            throw new IllegalArgumentException(
-              s"asof_join: column `$n` not found in the $side table " +
-                s"(${out.map(_.name).mkString(", ")})"))
-        // fresh-alias the right side — same reason as asOfJoinNative:
-        // a self-join's two sides share exprIds and nothing else rewrites
-        // a non-builtin join node
-        val rp = Project(r.output.map(a => Alias(a, a.name)()), r)
-        // type discipline at ANALYSIS time, not mid-execution: integral
-        // keys/times widen to bigint (so an INT key against a BIGINT key
-        // just works); anything else must satisfy the exec's contract
-        // here, where the error can name the offending columns instead
-        // of surfacing as a ClassCastException from a running task
-        def widen(a: Attribute): Expression = a.dataType match {
-          case _: org.apache.spark.sql.types.IntegerType |
-               _: org.apache.spark.sql.types.ShortType |
-               _: org.apache.spark.sql.types.ByteType =>
-            org.apache.spark.sql.catalyst.expressions.Cast(a,
-              org.apache.spark.sql.types.LongType)
-          case _ => a
-        }
-        val (lkE, rkE) = (widen(attr(l.output, lk, "left")),
-          widen(attr(rp.output, rk, "right")))
-        if (!org.apache.spark.sql.types.DataType.equalsIgnoreNullability(
-            lkE.dataType, rkE.dataType))
-          throw new IllegalArgumentException(
-            s"asof_join: key columns `$lk` (${lkE.dataType.sql}) and " +
-              s"`$rk` (${rkE.dataType.sql}) must have the same type")
-        if (!org.apache.spark.sql.catalyst.expressions.RowOrdering
-            .isOrderable(lkE.dataType))
-          throw new IllegalArgumentException(
-            s"asof_join: key type ${lkE.dataType.sql} is not orderable")
-        val (ltE, rtE) = (widen(attr(l.output, lt, "left")),
-          widen(attr(rp.output, rt, "right")))
-        def isTime(e: Expression) =
-          e.dataType == org.apache.spark.sql.types.LongType ||
-            e.dataType == org.apache.spark.sql.types.TimestampType
-        if (!isTime(ltE) || !isTime(rtE))
-          throw new IllegalArgumentException(
-            s"asof_join: time columns `$lt` (${ltE.dataType.sql}) and " +
-              s"`$rt` (${rtE.dataType.sql}) must be bigint or timestamp")
-        if (ltE.dataType != rtE.dataType)
-          throw new IllegalArgumentException(
-            s"asof_join: time columns `$lt` (${ltE.dataType.sql}) and " +
-              s"`$rt` (${rtE.dataType.sql}) must have the SAME type — " +
-              "cast one side so the units are explicit")
-        val aoj = AsOfJoin(l, rp, lkE, rkE, ltE, rtE, outer, fwd, tol, strict)
-        // payload attrs come from aoj.output (NOT rp.output): outer mode
-        // rewrites their nullability there
-        val rightOut = aoj.output.drop(l.output.size)
-        Project(l.output ++ rv.map(v =>
-          Alias(attr(rightOut, v, "right"), s"asof_$v")()), aoj)
+          out.find(a => conf.resolver(a.name, n)).getOrElse(fail(
+            s"column `$n` not found in the $side table " +
+              s"(${out.map(_.name).mkString(", ")})"))
+        val aoj = AsOfJoin.build(l, r,
+          attr(l.output, lk, "left"), attr(r.output, rk, "right"),
+          attr(l.output, lt, "left"), attr(r.output, rt, "right"),
+          outer, fwd, tol, strict, fail)
+        val joined = if (auto) AsOfJoin.routeAuto(aoj, autoTarget) else aoj
+        // payload attrs come from the joined output (NOT r.output): outer
+        // mode rewrites their nullability there
+        val (leftOut, rightOut) = joined.output.splitAt(l.output.size)
+        Project(leftOut ++ rv.map(v =>
+          Alias(attr(rightOut, v, "right"), s"asof_$v")()), joined)
     }
 }

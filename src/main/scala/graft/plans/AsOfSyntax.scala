@@ -3,12 +3,12 @@ package graft.plans
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast, CreateStruct, EqualTo, Expression, ExpressionInfo, GreaterThan, GreaterThanOrEqual, LeafExpression, LessThan, LessThanOrEqual, Literal, PredicateHelper, RowOrdering, Unevaluable}
+import org.apache.spark.sql.catalyst.expressions.{Alias, CreateStruct, EqualTo, Expression, ExpressionInfo, GreaterThan, GreaterThanOrEqual, If, IsNull, LeafExpression, LessThan, LessThanOrEqual, Literal, Or, PredicateHelper, Unevaluable}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, IntegerType, LongType, ShortType, StructType, TimestampType}
+import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, IntegerType, LongType, ShortType, StructType}
 
 /** Parser-level `ASOF JOIN` syntax — the last rung of the SQL frontend
   * ladder for the native [[AsOfJoin]] operator. e25/e32 gave `spark.sql`
@@ -27,7 +27,7 @@ import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, IntegerType,
   *
   * Skew: with `SET spark.graft.asof.auto=true` (and optionally
   * `spark.graft.asof.auto.target=N` rows per task) the SAME text routes
-  * through `JoinOps.asOfJoinAuto` — hot keys detected by the
+  * through [[AsOfJoin.routeAuto]] — hot keys detected by the
   * Misra-Gries sketch pass and time-sliced, cold keys on the native
   * plan, identical results by construction. The detection runs at
   * ANALYSIS time (the asof_join_auto TVF's documented trade), so
@@ -53,10 +53,10 @@ import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, IntegerType,
   *     conjuncts, classifies each equality by which side its references
   *     come from (multiple equalities compose into a struct key — the
   *     exec orders any orderable type), reads the single time inequality
-  *     for direction (`l >= r` backward, `l <= r` forward), widens
-  *     integral types, and replaces the Join with the same [[AsOfJoin]]
-  *     node the Scala API and the TVF build. Output attributes (and
-  *     outer-side nullability) match the Join's exactly, so parent
+  *     for direction (`l >= r` backward, `l <= r` forward), and
+  *     replaces the Join with the node [[AsOfJoin.build]] makes for the
+  *     Scala API and the TVF too. Output attributes (and outer-side
+  *     nullability) are aliased back to the Join's exactly, so parent
   *     operators' resolved references survive the swap.
   *
   * Bounds, stated rather than discovered: all four DuckDB comparators
@@ -343,11 +343,6 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 object ResolveAsOfSyntax extends Rule[LogicalPlan] with PredicateHelper {
   import AsOfSyntax.AsOfMarker
 
-  private def widen(e: Expression): Expression = e.dataType match {
-    case IntegerType | ShortType | ByteType => Cast(e, LongType)
-    case _ => e
-  }
-
   private def fail(msg: String): Nothing = AsOfSyntax.err(msg)
 
   override def apply(plan: LogicalPlan): LogicalPlan =
@@ -410,101 +405,50 @@ object ResolveAsOfSyntax extends Rule[LogicalPlan] with PredicateHelper {
           "serialize the whole input through one task)")
         // several equalities compose into ONE struct key — the exec
         // orders any orderable type, structs included. Components are
-        // aliased POSITIONALLY (_1, _2, ...): CreateStruct would derive
-        // field names from the attributes, and differently-NAMED but
-        // same-typed key columns (l.k1 = r.kA) — or a widening Cast on
-        // one side only — would then fail the struct type check on
-        // field names alone. The whole struct nulls out when ANY
-        // component is NULL (mirroring JoinOps.compositeKey): a bare
-        // CreateStruct is non-null even with a NULL field, and the
+        // widened one by one and aliased POSITIONALLY (_1, _2, ...):
+        // CreateStruct would derive field names from the attributes, and
+        // differently-NAMED but same-typed key columns (l.k1 = r.kA) — or
+        // a widening Cast on one side only — would then fail the struct
+        // type check on field names alone. The whole struct nulls out
+        // when ANY component is NULL (mirroring JoinOps.compositeKey): a
+        // bare CreateStruct is non-null even with a NULL field, and the
         // exec's struct ordering would then match NULL = NULL key
         // components where SQL equality (and DuckDB) would not
         def mkKey(parts: Seq[Expression]): Expression =
-          if (parts.size == 1) widen(parts.head)
+          if (parts.size == 1) parts.head
           else {
-            import org.apache.spark.sql.catalyst.expressions.{Alias, If, IsNull, Or}
             val struct = CreateStruct(parts.zipWithIndex.map { case (p, i) =>
-              Alias(widen(p), s"_${i + 1}")()
+              Alias(AsOfJoin.widen(p), s"_${i + 1}")()
             })
             val anyNull = parts.map(IsNull(_): Expression).reduce(Or(_, _))
             If(anyNull, Literal.create(null, struct.dataType), struct)
           }
-        val (lkE, rkE) = (mkKey(eqs.map(_._1).toSeq),
-          mkKey(eqs.map(_._2).toSeq))
-        if (!org.apache.spark.sql.types.DataType.equalsIgnoreNullability(
-            lkE.dataType, rkE.dataType))
-          fail(s"key sides differ in type: ${lkE.dataType.sql} vs " +
-            s"${rkE.dataType.sql}")
-        if (!RowOrdering.isOrderable(lkE.dataType))
-          fail(s"key type ${lkE.dataType.sql} is not orderable")
-        val (ltW, rtW) = (widen(ltE), widen(rtE))
-        def isTime(e: Expression) =
-          e.dataType == LongType || e.dataType == TimestampType
-        if (!isTime(ltW) || !isTime(rtW) || ltW.dataType != rtW.dataType)
-          fail(s"time columns must both be bigint or both timestamp, got " +
-            s"${ltW.dataType.sql} / ${rtW.dataType.sql} — cast one side " +
-            "so the units are explicit")
-        // spark.graft.asof.auto=true routes the SAME syntax through
-        // JoinOps.asOfJoinAuto (hot keys time-sliced, cold keys native
-        // — e42/e43's machinery), closing the r17 gap where a user
-        // writing the ASOF JOIN text with one hot key got the unsplit
+        val aoj = AsOfJoin.build(l, r, mkKey(eqs.map(_._1).toSeq),
+          mkKey(eqs.map(_._2).toSeq), ltE, rtE, leftOuter, fwd, tol, strict,
+          fail)
+        // spark.graft.asof.auto=true routes the SAME syntax through the
+        // hot-key slicing router (e42/e43's machinery), so a user writing
+        // the ASOF JOIN text with one hot key does not get the unsplit
         // native plan and a serialized task. Conf-gated because the
         // routing detects hot keys AT ANALYSIS TIME (the same trade the
         // asof_join_auto TVF documents): EXPLAIN over the text executes
         // the detection scans. Composite (struct) keys keep the native
-        // node — asOfJoinAuto requires an atomic key for the isin
-        // routing literal.
+        // node — the router requires an atomic key for its isin literal.
         val autoOn = conf.getConfString("spark.graft.asof.auto",
           "false").toBoolean
-        if (autoOn && !lkE.dataType.isInstanceOf[StructType])
-          routeAuto(j, l, r, lkE, rkE, ltW, rtW, leftOuter, fwd, tol,
-            strict,
-            conf.getConfString("spark.graft.asof.auto.target", "0").toLong)
-        else
-          // same children, same output exprIds (outer widens right-side
-          // nullability exactly as Join(LeftOuter) did), so parents'
-          // resolved references survive the swap untouched
-          AsOfJoin(l, r, lkE, rkE, ltW, rtW, leftOuter, fwd, tol, strict)
+        val planned =
+          if (autoOn && !aoj.leftKey.dataType.isInstanceOf[StructType])
+            AsOfJoin.routeAuto(aoj,
+              conf.getConfString("spark.graft.asof.auto.target", "0").toLong)
+          else aoj
+        // back onto the Join's own exprIds (the node fresh-aliases the
+        // right side), so parents' resolved references survive the swap;
+        // outer widens right-side nullability exactly as Join(LeftOuter)
+        Project(j.output.zip(planned.output).map { case (orig, now) =>
+          if (orig.exprId == now.exprId) now
+          else Alias(now, orig.name)(exprId = orig.exprId,
+            qualifier = orig.qualifier,
+            explicitMetadata = Some(orig.metadata))
+        }, planned)
     }
-
-  /** the conf-gated skew route: hand the two sides to
-    * `JoinOps.asOfJoinAuto` and re-alias its output back onto the
-    * original Join's exprIds so parents' resolved references survive.
-    * Both sides are renamed POSITIONALLY first (`__l0..`, `__r0..`) —
-    * the Scala router addresses columns by name, and a resolved Join's
-    * sides may carry duplicate or colliding names the rename makes
-    * unambiguous. Routed output is `__l* ++ __lk ++ __lt ++ asof___r*`
-    * ([[graft.operators.JoinOps.asOfJoinNative]]'s contract), mapped
-    * back to `l.output ++ r.output` order. */
-  private def routeAuto(j: Join, l: LogicalPlan, r: LogicalPlan,
-      lk: Expression, rk: Expression, lt: Expression, rt: Expression,
-      outer: Boolean, fwd: Boolean, tol: Option[Long], strict: Boolean,
-      target: Long): LogicalPlan = {
-    import org.apache.spark.sql.catalyst.expressions.Alias
-    import org.apache.spark.sql.catalyst.plans.logical.Project
-    val spark = org.apache.spark.sql.SparkSession.active
-    val lp = Project(l.output.zipWithIndex.map { case (a, i) =>
-      Alias(a, s"__l$i")() } ++
-      Seq(Alias(lk, "__lk")(), Alias(lt, "__lt")()), l)
-    val rp = Project(r.output.zipWithIndex.map { case (a, i) =>
-      Alias(a, s"__r$i")() } ++
-      Seq(Alias(rk, "__rk")(), Alias(rt, "__rt")()), r)
-    val routed = graft.operators.JoinOps.asOfJoinAuto(
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, lp),
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rp),
-      leftKey = "__lk", rightKey = "__rk",
-      leftTime = "__lt", rightTime = "__rt",
-      rightVals = r.output.indices.map(i => s"__r$i"),
-      leftOuter = outer, forward = fwd, tolerance = tol, strict = strict,
-      targetRowsPerTask = target)
-    val analyzed = routed.queryExecution.analyzed
-    val byName = analyzed.output.map(a => a.name -> a).toMap
-    Project(j.output.zipWithIndex.map { case (orig, i) =>
-      val src = if (i < l.output.size) byName(s"__l$i")
-        else byName(s"asof___r${i - l.output.size}")
-      Alias(src, orig.name)(exprId = orig.exprId,
-        qualifier = orig.qualifier,
-        explicitMetadata = Some(orig.metadata))
-    }, analyzed)
-  }
 }

@@ -4,10 +4,9 @@ import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression, JoinedRow, RowOrdering, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression, JoinedRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution, IdentityBroadcastMode, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
-import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** Broadcast physical tier for [[AsOfJoin]] — chosen by
   * [[AsOfJoinStrategy]] on STATS, exactly the way Spark's own planner
@@ -23,9 +22,8 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * key → time-sorted array of right rows (the BroadcastNestedLoopJoin
   * trade: per-task build of a dim-sized structure instead of a shuffle
   * of the fact side) — and probes it with BINARY SEARCH per left row:
-  * O(log history) per probe vs the composed broadcast form's O(history)
-  * lambda scan (`JoinOps.asOfJoinBroadcast`), with no array
-  * materialization per key on the build side either.
+  * O(log history) per probe instead of a linear scan of the key's
+  * history, with no array materialization per key on the build side.
   *
   * Key lookup equality is normalized through one-field
   * [[UnsafeProjection]]s on BOTH sides: UnsafeRow equality is byte-wise,
@@ -44,21 +42,7 @@ case class BroadcastAsOfJoinExec(
     tolerance: Option[Long], strict: Boolean,
     left: SparkPlan, right: SparkPlan) extends BinaryExecNode {
 
-  private def isTime(e: Expression): Boolean =
-    e.dataType == LongType || e.dataType == TimestampType
-  require(org.apache.spark.sql.types.DataType.equalsIgnoreNullability(
-    leftKey.dataType, rightKey.dataType),
-    s"as-of keys must have the same type on both sides, got " +
-      s"${leftKey.dataType.sql} / ${rightKey.dataType.sql}")
-  require(RowOrdering.isOrderable(leftKey.dataType),
-    s"as-of key type must be orderable, got ${leftKey.dataType.sql}")
-  require(isTime(leftTime) && isTime(rightTime) &&
-    leftTime.dataType == rightTime.dataType,
-    s"as-of times must both be bigint or both timestamp, got " +
-      s"${leftTime.dataType.sql} / ${rightTime.dataType.sql}")
-  require(tolerance.forall(_ >= 0L),
-    s"as-of tolerance must be >= 0, got ${tolerance.get}")
-
+  // key/time types and the tolerance sign were checked by AsOfJoin.build
   override def output: Seq[Attribute] =
     left.output ++ (if (leftOuter) right.output.map(_.withNullability(true))
                     else right.output)

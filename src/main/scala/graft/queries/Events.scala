@@ -122,12 +122,12 @@ object Events {
         FROM events GROUP BY event_type""")),
 
     // ---- backward as-of join: each purchase matched to the user's most
-    //      recent prior click (union + keyed window — one shuffle, no
-    //      time-range explosion; see JoinOps.asOfJoinBackward) -----------
+    //      recent prior click (no time-range explosion; see
+    //      JoinOps.asOfJoin) ---------------------------------------------
     Q("e05_asof_join",
       (s, d) => {
         val ev = Tables.events(s, d)
-        graft.operators.JoinOps.asOfJoinBackward(
+        graft.operators.JoinOps.asOfJoin(
           ev.filter(col("event_type") === "purchase")
             .select(col("event_id"), col("user_id"), col("ts")),
           ev.filter(col("event_type") === "click")
@@ -867,17 +867,17 @@ object Events {
         FROM s GROUP BY user_id, session_seq""")),
 
     // ---- NATIVE as-of join (the whole-operator Catalyst tier) -----------
-    //      e05's exact query through graft.plans.AsOfJoinExec — logical
-    //      node + planner strategy + physical streaming-merge exec,
-    //      injected via SparkSessionExtensions — instead of the composed
-    //      union+window form. Same oracle as e05 (DuckDB ASOF JOIN), so
-    //      a green gate pins the custom operator end-to-end through the
-    //      driver's correctness machinery; JoinOpsSpec pins equality
-    //      with the composed form including null-key/time behavior.
+    //      e05's exact query through the native node — logical node +
+    //      planner strategy + physical exec, injected via
+    //      SparkSessionExtensions. Same oracle as e05 (DuckDB ASOF JOIN),
+    //      so a green gate pins the custom operator end-to-end through
+    //      the DuckDB correctness check; JoinOpsSpec pins equality
+    //      with the composed union+window reference in the test tree,
+    //      including null-key/time behavior.
     Q("e24_asof_native",
       (s, d) => {
         val ev = Tables.events(s, d)
-        graft.operators.JoinOps.asOfJoinNative(
+        graft.operators.JoinOps.asOfJoin(
           ev.filter(col("event_type") === "purchase")
             .select(col("event_id"), col("user_id"), col("ts")),
           ev.filter(col("event_type") === "click")
@@ -930,12 +930,12 @@ object Events {
     //      before the user's first click would silently VANISH under
     //      inner semantics and corrupt downstream purchase counts. Same
     //      native exec, null-padding branch (AsOfJoinPlan.scala);
-    //      JoinOpsSpec pins equality with the composed outer twin on a
-    //      null-mixed fixture; the oracle is DuckDB's ASOF LEFT JOIN.
+    //      JoinOpsSpec pins equality with the composed outer reference
+    //      on a null-mixed fixture; the oracle is DuckDB's ASOF LEFT JOIN.
     Q("e26_asof_left",
       (s, d) => {
         val ev = Tables.events(s, d)
-        graft.operators.JoinOps.asOfJoinNative(
+        graft.operators.JoinOps.asOfJoin(
           ev.filter(col("event_type") === "purchase")
             .select(col("event_id"), col("user_id"), col("ts")),
           ev.filter(col("event_type") === "click")
@@ -965,7 +965,7 @@ object Events {
     Q("e27_asof_forward",
       (s, d) => {
         val ev = Tables.events(s, d)
-        graft.operators.JoinOps.asOfJoinNative(
+        graft.operators.JoinOps.asOfJoin(
           ev.filter(col("event_type") === "purchase")
             .select(col("event_id"), col("user_id"), col("ts")),
           ev.filter(col("event_type") === "click")
@@ -1075,7 +1075,7 @@ object Events {
     Q("e30_asof_tolerance",
       (s, d) => {
         val ev = Tables.events(s, d)
-        graft.operators.JoinOps.asOfJoinNative(
+        graft.operators.JoinOps.asOfJoin(
           ev.filter(col("event_type") === "purchase")
             .select(col("event_id"), col("user_id"), col("ts")),
           ev.filter(col("event_type") === "click")
@@ -1107,7 +1107,7 @@ object Events {
     Q("e31_asof_tolerance_left",
       (s, d) => {
         val ev = Tables.events(s, d)
-        graft.operators.JoinOps.asOfJoinNative(
+        graft.operators.JoinOps.asOfJoin(
           ev.filter(col("event_type") === "purchase")
             .select(col("event_id"), col("user_id"), col("ts")),
           ev.filter(col("event_type") === "click")
@@ -1234,19 +1234,19 @@ object Events {
           ON p.user_id = c.user_id AND p.ts >= c.ts""")),
 
     // ---- BROADCAST as-of join (shuffle-free fact side) -------------------
-    //      e24's exact query through JoinOps.asOfJoinBroadcast: the
-    //      click history collapses to one sorted array per user (keyed
-    //      shuffle over the DIM side only), broadcasts, and purchases
-    //      flow scan -> BroadcastHashJoin -> project with ZERO fact-side
-    //      exchanges — the dimension-lookup as-of shape (rate tables,
-    //      config histories) where shuffling the 100 TB fact side to
-    //      meet a broadcastable table is the wrong plan. Same DuckDB
-    //      ASOF oracle as e24; AsOfBroadcastSpec pins plan shape and
-    //      native-equality across the full contract matrix.
+    //      e24's exact query, pinned to the broadcast tier: the click
+    //      history is under the autoBroadcast threshold, so the strategy
+    //      plans BroadcastAsOfJoinExec and purchases reach the join with
+    //      ZERO exchanges — the dimension-lookup as-of shape (rate
+    //      tables, config histories) where shuffling the 100 TB fact
+    //      side to meet a broadcastable table is the wrong plan. Same
+    //      DuckDB ASOF oracle as e24; PlanShapePinSpec pins the
+    //      exchange-free plan, BroadcastAsOfExecSpec broadcast ==
+    //      shuffled across the full contract matrix.
     Q("e37_asof_broadcast",
       (s, d) => {
         val ev = Tables.events(s, d)
-        graft.operators.JoinOps.asOfJoinBroadcast(
+        graft.operators.JoinOps.asOfJoin(
           ev.filter(col("event_type") === "purchase")
             .select(col("event_id"), col("user_id"), col("ts")),
           ev.filter(col("event_type") === "click")
@@ -1268,15 +1268,15 @@ object Events {
     //      the hardest corner of the contract in one gate: each purchase
     //      matched to the user's EARLIEST click at-or-after it, kept
     //      only within 10 min staleness, unmatched purchases retained
-    //      null-padded — all through the broadcast probe's single
-    //      filter+element_at expression (direction picks element 1,
-    //      tolerance rides inside the lambda, outer keeps the join's
-    //      null rows). Oracle: DuckDB ASOF LEFT with the reversed
-    //      inequality + e31's CASE-nulling for the staleness bound.
+    //      null-padded — all through the broadcast exec's binary-search
+    //      probe (direction picks the bound, tolerance is one
+    //      comparison, outer pads the miss). Oracle: DuckDB ASOF LEFT
+    //      with the reversed inequality + e31's CASE-nulling for the
+    //      staleness bound.
     Q("e38_asof_broadcast_fwd",
       (s, d) => {
         val ev = Tables.events(s, d)
-        graft.operators.JoinOps.asOfJoinBroadcast(
+        graft.operators.JoinOps.asOfJoin(
           ev.filter(col("event_type") === "purchase")
             .select(col("event_id"), col("user_id"), col("ts")),
           ev.filter(col("event_type") === "click")

@@ -1047,8 +1047,9 @@ object StreamingQueries {
     // ---- STATELESS streaming as-of: stream facts x STATIC dim history ----
     //      the enrichment shape most production streams actually run
     //      (facts stream in, the rate/config/quote history is a TABLE):
-    //      JoinOps.asOfJoinBroadcast composes into a stream-static
-    //      broadcast join + a per-row codegen'd probe — NO state store,
+    //      JoinOps.asOfJoin plans the broadcast exec with the stream as
+    //      its left side (the click history is under the autoBroadcast
+    //      threshold) — a stream-static join, NO state store,
     //      no watermark, no ordering requirement on the stream (each
     //      fact row sees the FULL static history, so batch-equality is
     //      structural, not a state-machine invariant like st17-st24's).
@@ -1069,7 +1070,7 @@ object StreamingQueries {
         val clicks = Tables.events(child, d)
           .filter(col("event_type") === "click")
           .select(col("user_id"), col("ts"), col("value"))
-        val out = graft.operators.JoinOps.asOfJoinBroadcast(
+        val out = graft.operators.JoinOps.asOfJoin(
           stream, clicks, leftKey = "user_id", rightKey = "user_id",
           leftTime = "ts", rightTime = "ts",
           rightVals = Seq("ts", "value"))

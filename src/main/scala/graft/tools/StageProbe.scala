@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
-/** Generic per-query stage attribution (GraphTailProbe's listener for ANY
+/** Generic per-query stage attribution (a stage listener for ANY
   * registry query): runs one warmup at sf0.001, then one timed rep at the
   * given SF with a stage-completion listener, and prints executor task
   * time summed per triggering callsite — "where do the seconds go" for

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.JoinOps
 
-/** asOfJoinBackward vs a trusted driver-side scan on seeded random
+/** AsOfReference.asOfJoinBackward (the composed reference) and
+  * JoinOps.asOfJoin vs a trusted driver-side scan on seeded random
   * data: for every left row, the match must be exactly the right row
   * with the greatest time <= the left time on the same key, and left
   * rows with no eligible right row are dropped. Quote times are
@@ -23,7 +24,7 @@ class AsOfJoinPropertySpec extends SparkSpec {
 
     val l = trades.toDF("trade_id", "k", "t")
     val r = quotes.toDF("quote_id", "qk", "qt")
-    val got = JoinOps.asOfJoinBackward(l, r,
+    val got = AsOfReference.asOfJoinBackward(l, r,
         leftKey = "k", rightKey = "qk",
         leftTime = "t", rightTime = "qt", rightVals = Seq("quote_id"))
       .select("trade_id", "asof_quote_id").collect()
@@ -76,7 +77,7 @@ class AsOfJoinPropertySpec extends SparkSpec {
            outer <- Seq(false, true); strict <- Seq(false, true);
            tol <- Seq(None, Some(40L))) {
         conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-        val got = JoinOps.asOfJoinNative(l, r, "k", "qk", "t", "qt",
+        val got = JoinOps.asOfJoin(l, r, "k", "qk", "t", "qt",
             rightVals = Seq("quote_id"), leftOuter = outer,
             forward = fwd, tolerance = tol, strict = strict)
           .select("trade_id", "asof_quote_id").collect()

@@ -12,7 +12,7 @@ import graft.operators.JoinOps
   *     SMJ with the same data and thresholds), then shows the as-of plan
   *     unchanged.
   *  2. asOfJoinTimeSliced — the documented mitigation — equals
-  *     asOfJoinNative row-for-row on a Zipf-skewed fixture, across
+  *     asOfJoin row-for-row on a Zipf-skewed fixture, across
   *     inner/outer, tolerance, null keys/times, and slice widths that
   *     leave some slices empty.
   */
@@ -70,7 +70,7 @@ class AsOfSkewSpec extends SparkSpec {
       assert(smjPlan.contains("skew=true"),
         s"control SMJ did not skew-split — thresholds wrong?\n$smjPlan")
       // the native as-of exec: same data, same thresholds -> no split
-      val aoj = JoinOps.asOfJoinNative(l, r, "k", "k", "t", "rt",
+      val aoj = JoinOps.asOfJoin(l, r, "k", "k", "t", "rt",
         rightVals = Seq("rt", "v"))
       aoj.collect()
       val aojPlan = aoj.queryExecution.executedPlan.toString
@@ -86,7 +86,7 @@ class AsOfSkewSpec extends SparkSpec {
 
   test("time-sliced == native on the skewed fixture (inner)") {
     val (l, r) = skewed(3000, seed = 11)
-    val native = JoinOps.asOfJoinNative(l, r, "k", "k", "t", "rt",
+    val native = JoinOps.asOfJoin(l, r, "k", "k", "t", "rt",
       rightVals = Seq("rt", "v"))
     val sliced = JoinOps.asOfJoinTimeSliced(l, r, "k", "k", "t", "rt",
       rightVals = Seq("rt", "v"), sliceWidth = 10000L)
@@ -113,7 +113,7 @@ class AsOfSkewSpec extends SparkSpec {
       .toDF("k", "rt", "v")
     for (outer <- Seq(false, true); tol <- Seq(None, Some(5000L));
          fwd <- Seq(false, true)) {
-      val native = JoinOps.asOfJoinNative(l, r, "k", "k", "t", "rt",
+      val native = JoinOps.asOfJoin(l, r, "k", "k", "t", "rt",
         rightVals = Seq("rt", "v"), leftOuter = outer, forward = fwd,
         tolerance = tol)
       val sliced = JoinOps.asOfJoinTimeSliced(l, r, "k", "k", "t", "rt",
@@ -126,7 +126,7 @@ class AsOfSkewSpec extends SparkSpec {
 
   test("time-sliced forward == native forward on the skewed fixture") {
     val (l, r) = skewed(2000, seed = 19)
-    val native = JoinOps.asOfJoinNative(l, r, "k", "k", "t", "rt",
+    val native = JoinOps.asOfJoin(l, r, "k", "k", "t", "rt",
       rightVals = Seq("rt", "v"), forward = true)
     val sliced = JoinOps.asOfJoinTimeSliced(l, r, "k", "k", "t", "rt",
       rightVals = Seq("rt", "v"), sliceWidth = 7000L, forward = true)
@@ -142,7 +142,7 @@ class AsOfSkewSpec extends SparkSpec {
     val r = Seq(("a", "2024-01-01 09:00:00", 1.0),
       ("a", "2024-01-02 09:00:00", 2.0), ("b", "2024-01-01 23:00:00", 3.0))
       .toDF("k", "rts", "v").withColumn("rts", to_timestamp(col("rts")))
-    val native = JoinOps.asOfJoinNative(l, r, "k", "k", "ts", "rts",
+    val native = JoinOps.asOfJoin(l, r, "k", "k", "ts", "rts",
       rightVals = Seq("rts", "v"))
     val sliced = JoinOps.asOfJoinTimeSliced(l, r, "k", "k", "ts", "rts",
       rightVals = Seq("rts", "v"), sliceWidth = 86400000000L) // 1 day
@@ -158,7 +158,7 @@ class AsOfSkewSpec extends SparkSpec {
   test("auto routing picks the sliced plan for hot keys and equals native") {
     val (l, r) = skewed(3000, seed = 23)
     for (outer <- Seq(false, true); fwd <- Seq(false, true)) {
-      val native = JoinOps.asOfJoinNative(l, r, "k", "k", "t", "rt",
+      val native = JoinOps.asOfJoin(l, r, "k", "k", "t", "rt",
         rightVals = Seq("rt", "v"), leftOuter = outer, forward = fwd)
       val auto = JoinOps.asOfJoinAuto(l, r, "k", "k", "t", "rt",
         rightVals = Seq("rt", "v"), leftOuter = outer, forward = fwd)
@@ -184,7 +184,7 @@ class AsOfSkewSpec extends SparkSpec {
     val auto = JoinOps.asOfJoinAuto(l, r, "k", "k", "t", "rt",
       rightVals = Seq("rt", "v"))
     assert(asOfNodes(auto).size == 1)
-    assert(canon(auto) == canon(JoinOps.asOfJoinNative(l, r, "k", "k",
+    assert(canon(auto) == canon(JoinOps.asOfJoin(l, r, "k", "k",
       "t", "rt", rightVals = Seq("rt", "v"))))
   }
 
@@ -198,7 +198,7 @@ class AsOfSkewSpec extends SparkSpec {
     val auto = JoinOps.asOfJoinAuto(l, r, "k", "k", "t", "rt",
       rightVals = Seq("v"), strict = true, targetRowsPerTask = 50L)
     assert(asOfNodes(auto).size == 2)
-    assert(canon(auto) == canon(JoinOps.asOfJoinNative(l, r, "k", "k",
+    assert(canon(auto) == canon(JoinOps.asOfJoin(l, r, "k", "k",
       "t", "rt", rightVals = Seq("v"), strict = true)))
   }
 
@@ -251,7 +251,7 @@ class AsOfSkewSpec extends SparkSpec {
     val r = (1 to 30).map(i => (1L, i * 17L + 1, i * 1.0))
       .toDF("k", "rt", "v")
     for (outer <- Seq(false, true)) {
-      val native = JoinOps.asOfJoinNative(l, r, "k", "k", "t", "rt",
+      val native = JoinOps.asOfJoin(l, r, "k", "k", "t", "rt",
         rightVals = Seq("v"), leftOuter = outer)
       val auto = JoinOps.asOfJoinAuto(l, r, "k", "k", "t", "rt",
         rightVals = Seq("v"), leftOuter = outer, targetRowsPerTask = 20L)
@@ -312,7 +312,7 @@ class AsOfSkewSpec extends SparkSpec {
       assert(plan.get._1.size <= maxHot,
         s"exact=$exact: hot set ${plan.get._1.size} > cap $maxHot")
     }
-    val native = JoinOps.asOfJoinNative(l, r, "k", "k", "t", "rt",
+    val native = JoinOps.asOfJoin(l, r, "k", "k", "t", "rt",
       rightVals = Seq("rt", "v"))
     val auto = JoinOps.asOfJoinAuto(l, r, "k", "k", "t", "rt",
       rightVals = Seq("rt", "v"), targetRowsPerTask = 1L)
@@ -324,7 +324,7 @@ class AsOfSkewSpec extends SparkSpec {
     val (l, r) = skewed(1500, seed = 43)
     for (outer <- Seq(false, true); fwd <- Seq(false, true);
          strict <- Seq(false, true); tol <- Seq(None, Some(5000L))) {
-      val native = JoinOps.asOfJoinNative(l, r, "k", "k", "t", "rt",
+      val native = JoinOps.asOfJoin(l, r, "k", "k", "t", "rt",
         rightVals = Seq("rt", "v"), leftOuter = outer, forward = fwd,
         tolerance = tol, strict = strict)
       val auto = JoinOps.asOfJoinAuto(l, r, "k", "k", "t", "rt",
@@ -458,7 +458,7 @@ class AsOfSkewSpec extends SparkSpec {
 
   test("degenerate widths: one giant slice and one-row slices") {
     val (l, r) = skewed(500, seed = 3)
-    val native = canon(JoinOps.asOfJoinNative(l, r, "k", "k", "t", "rt",
+    val native = canon(JoinOps.asOfJoin(l, r, "k", "k", "t", "rt",
       rightVals = Seq("v")))
     for (w <- Seq(1L, 1000000000L)) {
       val sliced = JoinOps.asOfJoinTimeSliced(l, r, "k", "k", "t", "rt",

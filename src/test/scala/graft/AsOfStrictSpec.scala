@@ -33,7 +33,7 @@ class AsOfStrictSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def run(l: DataFrame, fwd: Boolean, strict: Boolean,
                   outer: Boolean = false): Seq[(String, Long, String)] =
-    graft.operators.JoinOps.asOfJoinNative(l, right,
+    graft.operators.JoinOps.asOfJoin(l, right,
       "k", "k", "t", "rt", Seq("v"),
       leftOuter = outer, forward = fwd, strict = strict)
       .select(col("k"), col("t"), col("asof_v"))
@@ -77,14 +77,14 @@ class AsOfStrictSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("both physical tiers plan and agree under strict") {
     val planned = withThreshold("10485760") {
-      val df = graft.operators.JoinOps.asOfJoinNative(left, right,
+      val df = graft.operators.JoinOps.asOfJoin(left, right,
         "k", "k", "t", "rt", Seq("v"), strict = true)
       assert(collectFirst(df.queryExecution.executedPlan) {
         case b: BroadcastAsOfJoinExec => b.strict }.contains(true))
       df.collect().toSeq
     }
     val shuffled = withThreshold("-1") {
-      val df = graft.operators.JoinOps.asOfJoinNative(left, right,
+      val df = graft.operators.JoinOps.asOfJoin(left, right,
         "k", "k", "t", "rt", Seq("v"), strict = true)
       assert(collectFirst(df.queryExecution.executedPlan) {
         case e: AsOfJoinExec => e.strict }.contains(true))
@@ -123,11 +123,11 @@ class AsOfStrictSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("strict composes with tolerance: staleness measured from the strict match") {
     // at t=20 strict matches v15 (gap 5); tolerance 4 kills it, 5 keeps it
-    val keep = graft.operators.JoinOps.asOfJoinNative(left, right,
+    val keep = graft.operators.JoinOps.asOfJoin(left, right,
       "k", "k", "t", "rt", Seq("v"), strict = true, tolerance = Some(5L))
       .filter(col("t") === 20L).select("asof_v").distinct().collect()
     assert(keep.map(_.getString(0)).toSeq == Seq("v15"))
-    val drop = graft.operators.JoinOps.asOfJoinNative(left, right,
+    val drop = graft.operators.JoinOps.asOfJoin(left, right,
       "k", "k", "t", "rt", Seq("v"), strict = true, tolerance = Some(4L))
       .filter(col("t") === 20L).collect()
     assert(drop.isEmpty)

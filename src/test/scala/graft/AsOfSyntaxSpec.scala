@@ -100,7 +100,7 @@ class AsOfSyntaxSpec extends SparkSpec {
     // the plan must contain the native node, not a plain join
     assert(sqlRes.queryExecution.optimizedPlan.collect {
       case _: AsOfJoin => true }.nonEmpty)
-    val api = graft.operators.JoinOps.asOfJoinNative(
+    val api = graft.operators.JoinOps.asOfJoin(
       spark.table("asx_l"), spark.table("asx_r"),
       leftKey = "k", rightKey = "k", leftTime = "t", rightTime = "rt",
       rightVals = Seq("rt", "v"))

@@ -46,7 +46,7 @@ class BroadcastAsOfExecSpec extends SparkSpec {
 
   test("strategy picks broadcast under threshold, shuffled at -1") {
     val (l, r) = fixture
-    def run() = JoinOps.asOfJoinNative(l, r, "k", "k", "t", "rt",
+    def run() = JoinOps.asOfJoin(l, r, "k", "k", "t", "rt",
       rightVals = Seq("rt", "v"))
     val bPlan = finalPlan(run())
     assert(bPlan.contains("BroadcastAsOfJoin"), bPlan)
@@ -66,12 +66,64 @@ class BroadcastAsOfExecSpec extends SparkSpec {
     val (l, r) = fixture
     for (fwd <- Seq(false, true); outer <- Seq(false, true);
          tol <- Seq(None, Some(15000L))) {
-      def run() = JoinOps.asOfJoinNative(l, r, "k", "k", "t", "rt",
+      def run() = JoinOps.asOfJoin(l, r, "k", "k", "t", "rt",
         rightVals = Seq("rt", "v"), leftOuter = outer, forward = fwd,
         tolerance = tol)
       val b = canon(run())
       val s = withThreshold("-1")(canon(run()))
       assert(b == s, s"fwd=$fwd outer=$outer tol=$tol")
+    }
+  }
+
+  test("broadcast == shuffled on SQL NULLs and keys absent from the " +
+      "dim side") {
+    val s = spark
+    import s.implicits._
+    val l = Seq(
+      (1L, java.lang.Long.valueOf(0L), java.lang.Long.valueOf(100L)),
+      (2L, null.asInstanceOf[java.lang.Long], java.lang.Long.valueOf(50L)),
+      (3L, java.lang.Long.valueOf(0L), null.asInstanceOf[java.lang.Long]),
+      (4L, java.lang.Long.valueOf(9L), java.lang.Long.valueOf(70L)))
+      .toDF("id", "k", "t")
+    val r = Seq(
+      (java.lang.Long.valueOf(0L), java.lang.Long.valueOf(90L), 1.0),
+      (null.asInstanceOf[java.lang.Long], java.lang.Long.valueOf(40L), 2.0),
+      (java.lang.Long.valueOf(0L), null.asInstanceOf[java.lang.Long], 3.0))
+      .toDF("k", "rt", "v")
+    for (fwd <- Seq(false, true); outer <- Seq(false, true)) {
+      def run() = JoinOps.asOfJoin(l, r, "k", "k", "t", "rt",
+        rightVals = Seq("v"), leftOuter = outer, forward = fwd)
+      assert(finalPlan(run()).contains("BroadcastAsOfJoin"))
+      val b = canon(run())
+      assert(b == withThreshold("-1")(canon(run())),
+        s"fwd=$fwd outer=$outer")
+      // only id 1 (key 0, t 100 >= rt 90) matches backward; nothing
+      // matches forward; outer keeps all four rows
+      val matched = if (fwd) Seq.empty[String] else Seq("[1,0,100,1.0]")
+      assert(b.filterNot(_.endsWith(",null]")) == matched, b)
+      assert(b.size == (if (outer) 4 else matched.size), b)
+    }
+  }
+
+  test("broadcast == shuffled on timestamp times with tolerance in " +
+      "micros") {
+    val s = spark
+    import s.implicits._
+    val l = Seq((1L, "a", "2024-01-01 10:00:00"),
+      (2L, "a", "2024-01-02 10:00:00"))
+      .toDF("id", "k", "ts").withColumn("ts", to_timestamp(col("ts")))
+    val r = Seq(("a", "2024-01-01 09:30:00", 1.0),
+      ("a", "2024-01-02 07:00:00", 2.0))
+      .toDF("k", "rts", "v").withColumn("rts", to_timestamp(col("rts")))
+    for (tol <- Seq(None, Some(3600000000L))) { // 1 h in micros
+      def run() = JoinOps.asOfJoin(l, r, "k", "k", "ts", "rts",
+        rightVals = Seq("v"), leftOuter = true, tolerance = tol)
+      assert(finalPlan(run()).contains("BroadcastAsOfJoin"))
+      val b = canon(run())
+      assert(b == withThreshold("-1")(canon(run())), s"tol=$tol")
+      // the 3 h-stale match of id 2 survives only without the bound
+      val v2 = b.find(_.startsWith("[2,")).get
+      assert(v2.endsWith(if (tol.isEmpty) ",2.0]" else ",null]"), v2)
     }
   }
 

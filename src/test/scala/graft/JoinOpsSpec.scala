@@ -21,7 +21,7 @@ class JoinOpsSpec extends SparkSpec {
       (2L, ts("2024-01-01 10:02:00")), // no prior quote -> dropped
       (3L, ts("2024-01-01 10:10:00"))) // no quotes at all -> dropped
       .toDF("k", "tts")
-    val r = JoinOps.asOfJoinBackward(trades, quotes,
+    val r = AsOfReference.asOfJoinBackward(trades, quotes,
         "k", "qk", "tts", "qts", Seq("qts", "price"))
       .orderBy("k", "tts").collect()
       .map(x => (x.getLong(0), x.getTimestamp(2).toString, x.getDouble(3)))
@@ -42,7 +42,7 @@ class JoinOpsSpec extends SparkSpec {
       (2L, ts("2024-01-01 10:02:00")),
       (3L, ts("2024-01-01 10:10:00")))
       .toDF("k", "tts")
-    val native = JoinOps.asOfJoinNative(trades, quotes,
+    val native = JoinOps.asOfJoin(trades, quotes,
       "k", "qk", "tts", "qts", Seq("qts", "price"))
     // the exec's nodeName strips the Exec suffix; the executed plan
     // contains only physical nodes, so this is the custom exec
@@ -72,11 +72,11 @@ class JoinOpsSpec extends SparkSpec {
         else Some(new Timestamp(1700000000000L + (i * 611 % 5000) * 1000L)),
         i.toDouble)
     }.toDF("rk", "rts", "v")
-    val a = JoinOps.asOfJoinNative(lefts, rights,
+    val a = JoinOps.asOfJoin(lefts, rights,
         "k", "rk", "ts", "rts", Seq("rts", "v")).collect()
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),
         r.getTimestamp(3), r.getDouble(4))).toSet
-    val b = JoinOps.asOfJoinBackward(lefts, rights,
+    val b = AsOfReference.asOfJoinBackward(lefts, rights,
         "k", "rk", "ts", "rts", Seq("rts", "v")).collect()
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),
         r.getTimestamp(3), r.getDouble(4))).toSet
@@ -104,9 +104,9 @@ class JoinOpsSpec extends SparkSpec {
         Option(r.getTimestamp(2)).map(_.toString).getOrElse("-"),
         if (r.isNullAt(3)) -1.0 else r.getDouble(3))
     }.toSeq.sorted
-    val composed = rows(JoinOps.asOfJoinBackward(trades, quotes,
+    val composed = rows(AsOfReference.asOfJoinBackward(trades, quotes,
       "k", "qk", "tts", "qts", Seq("qts", "price"), leftOuter = true))
-    val native = rows(JoinOps.asOfJoinNative(trades, quotes,
+    val native = rows(JoinOps.asOfJoin(trades, quotes,
       "k", "qk", "tts", "qts", Seq("qts", "price"), leftOuter = true))
     assert(composed.size == 5, s"every left row must survive: $composed")
     assert(native == composed,
@@ -138,9 +138,9 @@ class JoinOpsSpec extends SparkSpec {
         // NaN != NaN would make identical sets compare unequal
         if (r.isNullAt(4)) -1.0 else r.getDouble(4))
     }.toSet
-    val a = rows(JoinOps.asOfJoinNative(lefts, rights,
+    val a = rows(JoinOps.asOfJoin(lefts, rights,
       "k", "rk", "ts", "rts", Seq("rts", "v"), leftOuter = true))
-    val b = rows(JoinOps.asOfJoinBackward(lefts, rights,
+    val b = rows(AsOfReference.asOfJoinBackward(lefts, rights,
       "k", "rk", "ts", "rts", Seq("rts", "v"), leftOuter = true))
     assert(a.size == 400, s"outer must retain all 400 left rows, got ${a.size}")
     assert(a == b, s"native != composed: only-native ${a -- b}, " +
@@ -168,9 +168,9 @@ class JoinOpsSpec extends SparkSpec {
       (1L, "2024-01-01 10:01:00.0", "2024-01-01 10:04:00.0", 99.5),
       (1L, "2024-01-01 10:04:00.0", "2024-01-01 10:04:00.0", 99.5),
       (2L, "2024-01-01 10:02:00.0", "2024-01-01 10:03:00.0", 50.0))
-    val composed = rows(JoinOps.asOfJoinForward(trades, quotes,
+    val composed = rows(AsOfReference.asOfJoinForward(trades, quotes,
       "k", "qk", "tts", "qts", Seq("qts", "price")))
-    val native = rows(JoinOps.asOfJoinNative(trades, quotes,
+    val native = rows(JoinOps.asOfJoin(trades, quotes,
       "k", "qk", "tts", "qts", Seq("qts", "price"), forward = true))
     assert(composed == want, s"composed: $composed")
     assert(native == want, s"native: $native")
@@ -197,10 +197,10 @@ class JoinOpsSpec extends SparkSpec {
         if (r.isNullAt(4)) -1.0 else r.getDouble(4))
     }.toSet
     for (outer <- Seq(false, true)) {
-      val a = rows(JoinOps.asOfJoinNative(lefts, rights,
+      val a = rows(JoinOps.asOfJoin(lefts, rights,
         "k", "rk", "ts", "rts", Seq("rts", "v"),
         leftOuter = outer, forward = true))
-      val b = rows(JoinOps.asOfJoinForward(lefts, rights,
+      val b = rows(AsOfReference.asOfJoinForward(lefts, rights,
         "k", "rk", "ts", "rts", Seq("rts", "v"), leftOuter = outer))
       assert(a == b, s"outer=$outer: only-native ${a -- b}, " +
         s"only-composed ${b -- a}")
@@ -228,7 +228,7 @@ class JoinOpsSpec extends SparkSpec {
       "SQL TVF must plan the custom exec")
     assert(sqlDf.columns.toSeq == Seq("k", "tts", "asof_qts", "asof_price"),
       s"output contract: ${sqlDf.columns.toSeq}")
-    val api = JoinOps.asOfJoinNative(trades, quotes,
+    val api = JoinOps.asOfJoin(trades, quotes,
       "k", "qk", "tts", "qts", Seq("qts", "price"))
     assert(sqlDf.collect().toSet == api.collect().toSet)
     // the LEFT variant through SQL: all 4 trades survive
@@ -238,7 +238,7 @@ class JoinOpsSpec extends SparkSpec {
     // the FORWARD variant through SQL equals the forward API
     val sqlFwd = spark.sql("""SELECT * FROM asof_join_forward('jos_trades',
       'jos_quotes', 'k', 'qk', 'tts', 'qts', 'qts', 'price')""")
-    val apiFwd = JoinOps.asOfJoinNative(trades, quotes,
+    val apiFwd = JoinOps.asOfJoin(trades, quotes,
       "k", "qk", "tts", "qts", Seq("qts", "price"), forward = true)
     assert(sqlFwd.collect().toSet == apiFwd.collect().toSet)
     // a misnamed column fails analysis with a pointed message
@@ -274,17 +274,17 @@ class JoinOpsSpec extends SparkSpec {
         if (r.isNullAt(4)) -1.0 else r.getDouble(4))
     }.toSet
     for (outer <- Seq(false, true); fwd <- Seq(false, true)) {
-      val native = JoinOps.asOfJoinNative(lefts, rights,
+      val native = JoinOps.asOfJoin(lefts, rights,
         "k", "rk", "ts", "rts", Seq("rts", "v"),
         leftOuter = outer, forward = fwd)
       assert(native.queryExecution.executedPlan.toString
         .contains("AsOfJoin"), "string keys must still plan the native exec")
       val a = rows(native)
       val b = rows(if (fwd)
-        JoinOps.asOfJoinForward(lefts, rights,
+        AsOfReference.asOfJoinForward(lefts, rights,
           "k", "rk", "ts", "rts", Seq("rts", "v"), leftOuter = outer)
       else
-        JoinOps.asOfJoinBackward(lefts, rights,
+        AsOfReference.asOfJoinBackward(lefts, rights,
           "k", "rk", "ts", "rts", Seq("rts", "v"), leftOuter = outer))
       assert(a == b, s"outer=$outer fwd=$fwd: only-native ${(a -- b).take(3)}, " +
         s"only-composed ${(b -- a).take(3)}")
@@ -297,7 +297,7 @@ class JoinOpsSpec extends SparkSpec {
       'k', 'rk', 'ts', 'rts', 'rts', 'v')""")
     assert(rows(sqlDf.select(col("k"), col("ts"), col("lid"),
       col("asof_rts"), col("asof_v"))) ==
-      rows(JoinOps.asOfJoinNative(lefts, rights,
+      rows(JoinOps.asOfJoin(lefts, rights,
         "k", "rk", "ts", "rts", Seq("rts", "v"))))
   }
 
@@ -323,9 +323,9 @@ class JoinOpsSpec extends SparkSpec {
           Option(r.getTimestamp(4)).map(_.getTime).getOrElse(-1L),
           if (r.isNullAt(5)) -1.0 else r.getDouble(5))
       }.toSet
-    val a = rows(JoinOps.asOfJoinNative(lefts, rights,
+    val a = rows(JoinOps.asOfJoin(lefts, rights,
       "sk", "rsk", "ts", "rts", Seq("rts", "v"), leftOuter = true))
-    val b = rows(JoinOps.asOfJoinBackward(lefts, rights,
+    val b = rows(AsOfReference.asOfJoinBackward(lefts, rights,
       "sk", "rsk", "ts", "rts", Seq("rts", "v"), leftOuter = true))
     assert(a.size == 300 && a == b,
       s"only-native ${(a -- b).take(3)}, only-composed ${(b -- a).take(3)}")
@@ -345,12 +345,12 @@ class JoinOpsSpec extends SparkSpec {
       .toDF("k", "tts")
     val tol = Some(600000000L) // 10 minutes in micros
     // inner: the stale trade DROPS
-    val inner = JoinOps.asOfJoinNative(trades, quotes,
+    val inner = JoinOps.asOfJoin(trades, quotes,
       "k", "qk", "tts", "qts", Seq("price"), tolerance = tol)
     assert(inner.collect().map(_.getDouble(2)).sorted.toSeq ==
       Seq(100.0, 101.0), "stale match must drop under inner")
     // outer: the stale trade survives NULL-padded
-    val outer = JoinOps.asOfJoinNative(trades, quotes,
+    val outer = JoinOps.asOfJoin(trades, quotes,
       "k", "qk", "tts", "qts", Seq("price"), leftOuter = true,
       tolerance = tol)
     val padRow = outer.filter(col("k") === 2L).collect()
@@ -378,15 +378,15 @@ class JoinOpsSpec extends SparkSpec {
     // 800s bound: bites on the 0..5000s time span without zeroing matches
     val denseTol = Some(800000000L)
     for (outer2 <- Seq(false, true); fwd <- Seq(false, true)) {
-      val a = rows(JoinOps.asOfJoinNative(lefts, rights,
+      val a = rows(JoinOps.asOfJoin(lefts, rights,
         "k", "rk", "ts", "rts", Seq("rts", "v"),
         leftOuter = outer2, forward = fwd, tolerance = denseTol))
       val b = rows(if (fwd)
-        JoinOps.asOfJoinForward(lefts, rights,
+        AsOfReference.asOfJoinForward(lefts, rights,
           "k", "rk", "ts", "rts", Seq("rts", "v"),
           leftOuter = outer2, tolerance = denseTol)
       else
-        JoinOps.asOfJoinBackward(lefts, rights,
+        AsOfReference.asOfJoinBackward(lefts, rights,
           "k", "rk", "ts", "rts", Seq("rts", "v"),
           leftOuter = outer2, tolerance = denseTol))
       assert(a == b, s"outer=$outer2 fwd=$fwd: only-native ${(a -- b).take(3)}" +
@@ -415,7 +415,7 @@ class JoinOpsSpec extends SparkSpec {
       'SELECT qk, qts, price FROM jos_tq WHERE price > 0',
       'k', 'qk', 'tts', 'qts', 600000000, 'price')""")
     assert(sqlDf.queryExecution.executedPlan.toString.contains("AsOfJoin"))
-    val api = JoinOps.asOfJoinNative(trades, quotes,
+    val api = JoinOps.asOfJoin(trades, quotes,
       "k", "qk", "tts", "qts", Seq("price"),
       tolerance = Some(600000000L))
     assert(sqlDf.collect().toSet == api.collect().toSet,

@@ -42,9 +42,9 @@ class PlanShapePinSpec extends SparkSpec {
     "d25_symspell_join" -> 2,    // variant equi-join + pair distinct
     "w17_winsorize_cuts" -> 2,   // per-type window + broadcast recount
     // round-15 operators
-    "e37_asof_broadcast" -> 1,   // ONLY the dim-agg shuffle; fact side
+    "e37_asof_broadcast" -> 0,   // broadcast as-of exec: the fact side
                                  // reaches the join exchange-free
-    "e38_asof_broadcast_fwd" -> 1, // same, fully-loaded variant
+    "e38_asof_broadcast_fwd" -> 0, // same, fully-loaded variant
     "e34_asof_syntax" -> 2,      // parser route = the native exec's two
                                  // exchanges (broadcast tier at tiny SF
                                  // may drop them; 2 is the ceiling)
