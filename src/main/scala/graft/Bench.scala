@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, sum, xxhash64}
 import java.nio.file.{Files, Paths}
 
@@ -50,30 +50,18 @@ object Bench {
     // four "regressions" were a 07:51 baseline diffed against 08:42
     // fixtures) while the plan axes stay comparable.
     val fixture = fixtureFingerprint(sfDir)
-    val spark = GraftSession.getOrCreate("graft-bench")
-
     // SPARK_GRAFT_ONLY=q43_preagg_join,q41_salted_join — dev-loop filter
     // for timing a subset; unset (the driver's mode) runs everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // a misspelled name would silently filter everything out and a
-    // zero-query run could read as a pass — fail fast instead
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val queries = graft.queries.Registry.selected()
+    val spark = GraftSession.getOrCreate("graft-bench")
 
     // deterministic axes (see PlanMetrics): stage-level shuffle bytes
     // (covers streaming micro-batches + child sessions) and per-execution
     // exchange/plan-node counts — the tracker's noise-free signal
     val tally = PlanMetrics.register(spark)
 
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                dir: String): Unit =
-      try fn(spark, dir).write.format("noop").mode("overwrite").save()
+    def runOnce(df: => DataFrame): Unit =
+      try df.write.format("noop").mode("overwrite").save()
       // operators persist intermediate frames (dedup postings/buckets);
       // dropping them between queries keeps each measurement independent
       // — otherwise 79 queries' worth of leftover cache (including the
@@ -81,7 +69,7 @@ object Bench {
       finally spark.catalog.clearCache()
 
     // fixed pure-CPU probe: 64M rows through a 16-deep xxhash64 chain on
-    // all 32 threads — no I/O, no shuffle, nothing data-dependent, so
+    // every session thread — no I/O, no shuffle, nothing data-dependent, so
     // its only variable is how much of the host the bench actually has.
     // The chain matters: single-hash probes at 8M/32M/96M rows all
     // measured ~0.12 s dominated by fixed job overhead whose jitter
@@ -92,7 +80,7 @@ object Bench {
     def sentinelOnce(): Double = {
       val t0 = System.nanoTime()
       // summed as double: full-range longs overflow an ANSI bigint sum
-      spark.range(0L, 64000000L, 1L, 32)
+      spark.range(0L, 64000000L, 1L, GraftSession.cpus.toInt)
         .select(sum(chain(col("id"), 16).cast("double")).as("h"))
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
@@ -101,8 +89,8 @@ object Bench {
     // warmup on the tiny SF: exercises every plan shape once (incl. the
     // sentinel's, so pass-1 firings aren't billed JIT cost)
     val warmDir = "/root/testdata/sf0.001"
-    queries.foreach { case (_, fn) =>
-      try runOnce(fn, warmDir) catch { case _: Throwable => () }
+    queries.foreach { q =>
+      try runOnce(q.setupAndRun(spark, warmDir)) catch { case _: Throwable => () }
     }
     sentinelOnce()
 
@@ -111,7 +99,6 @@ object Bench {
     // run ONCE, untimed, in pass 1 before the query's first rep — the
     // reported number is the steady-state query cost; the setup's own
     // cost is recorded so the full-pipeline figure stays observable
-    val setups = graft.queries.Registry.setups
     val setupSecs = scala.collection.mutable.LinkedHashMap[String, Double]()
     val shuffleBytes = scala.collection.mutable.LinkedHashMap[String, Long]()
     val exchangeCnt = scala.collection.mutable.LinkedHashMap[String, Long]()
@@ -123,7 +110,7 @@ object Bench {
     // per query: (sec, ok, pass, window) per pass, in pass order
     val reps = scala.collection.mutable.LinkedHashMap[String,
       scala.collection.mutable.ArrayBuffer[(Double, Boolean, Int, Int)]]()
-    queries.foreach { case (n, _) => reps(n) =
+    queries.foreach { q => reps(q.name) =
       scala.collection.mutable.ArrayBuffer[(Double, Boolean, Int, Int)]() }
 
     for (pass <- 0 until Passes) {
@@ -137,12 +124,13 @@ object Bench {
       // code (reproduced at sf0.1 with t05 pinned at qi=20: 30/2 leaky,
       // 19/1 with this drain).
       if (pass == 0) tally.drainAndRead((0L, 0L, 0L))
-      queries.zipWithIndex.foreach { case ((name, fn), qi) =>
+      queries.zipWithIndex.foreach { case (q, qi) =>
+        val name = q.name
         if (qi > 0 && qi % SentinelEvery == 0) {
           passSentinels(pass) += sentinelOnce()
           if (pass == 0) tally.drainAndRead((0L, 0L, 0L))
         }
-        if (pass == 0) setups.get(name).foreach { su =>
+        if (pass == 0) q.setup.foreach { su =>
           val s0 = System.nanoTime()
           try su(spark, sfDir) catch { case e: Throwable =>
             errors(name) = ("setup: " + Option(e.getMessage)
@@ -157,16 +145,13 @@ object Bench {
           // inside the delta and inflate this query's reported volume
           tally.drainAndRead((0L, 0L, 0L))
         }
-        // time the run function alone — `fn` (the driver-contract
-        // closure) composes setup+run for self-containment, which is
-        // what warmup used; here setup already ran in pass 1
-        val runFn = graft.queries.Registry.all.find(_.name == name)
-          .map(_.run).getOrElse(fn)
+        // time the run function alone — warmup used the composed
+        // setup+run; here setup already ran in pass 1
         val window = passSentinels(pass).size - 1
         val before = if (pass == 0) tally.snapshot() else (0L, 0L, 0L)
         val t0 = System.nanoTime()
         val ok =
-          try { runOnce(runFn, sfDir); true }
+          try { runOnce(q.run(spark, sfDir)); true }
           catch { case e: Throwable =>
             errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
               .replaceAll("[\"\\\\\n\r\t]", " ").take(200)
@@ -203,8 +188,7 @@ object Bench {
     // min over SUCCESSFUL runs only — a fast failure must not be
     // reported as the query's cost; if every run failed, report the
     // fastest elapsed anyway (the error field marks it invalid)
-    val results = queries.map { case (name, _) =>
-      val rs = reps(name)
+    val results = reps.toSeq.map { case (name, rs) =>
       val good = rs.filter(_._2)
       val pick = (if (good.nonEmpty) good else rs).minBy(_._1)
       name -> pick._1
@@ -212,8 +196,7 @@ object Bench {
     // a query is pressure-suspect only if the rep that SUPPLIED its
     // reported min ran in a hot window — mins from clean windows stand
     // on their own regardless of what happened to the other passes
-    val suspect = queries.flatMap { case (name, _) =>
-      val rs = reps(name)
+    val suspect = reps.toSeq.flatMap { case (name, rs) =>
       val good = rs.filter(_._2)
       val pick = (if (good.nonEmpty) good else rs).minBy(_._1)
       if (windowHot(pick._3, pick._4)) Some(name) else None

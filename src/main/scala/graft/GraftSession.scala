@@ -10,7 +10,10 @@ import org.apache.spark.sql.SparkSession
   * locally (a cluster deployment would raise this to ~2-3x total cores).
   */
 object GraftSession {
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** local threads (and shuffle partitions): the host's cores unless
+    * `SPARK_GRAFT_CPUS` overrides */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
 
   def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession.builder()

@@ -2,11 +2,17 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import scala.collection.concurrent.TrieMap
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
+  SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The deterministic half of the bench signal. Wall-clock on a shared
@@ -32,6 +38,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    byte volume barely moves. Streaming micro-batch plans do NOT
   *    reach this listener — Bench omits those entries rather than
   *    emitting a misleading 0 (the bytes axis covers st* instead).
+  *
+  * The same stage listener attributes each stage to its '''callsite'''
+  * (see [[Callsite]]), which is how `graft.tools.Probe` answers "which
+  * operator line spends the task time and moves the bytes".
   *
   * Capture point matters: an action like `df.write` plans and executes
   * its own QueryExecution, leaving the frame's own `queryExecution`
@@ -68,17 +78,62 @@ object PlanMetrics {
 
   private[graft] def nodeCountOf(plan: SparkPlan): Int = allNodes(plan).size
 
+  /** The stages one callsite triggered: their count, summed executor run
+    * time, summed shuffle bytes written, and `series`, each stage's
+    * shuffle bytes in stage-id order — the per-round view of an
+    * iterative loop whose every round issues its jobs from one line.
+    * Shuffle WRITE is the attribution-friendly side: each byte is
+    * written once, by the map stage whose callsite produced it. */
+  final case class Callsite(stages: Int, runMs: Long, shuffleBytes: Long,
+                            series: Seq[Long])
+
+  /** the first `graft.` frame of a callsite's long form: the operator
+    * line, or the harness line that issued the action */
+  private def graftFrame(stack: String): Option[String] =
+    stack.split('\n').map(_.trim).find(_.contains("graft."))
+      .map(_.stripPrefix("at "))
+
   /** Accumulates the three deterministic counters across every job /
-    * batch query execution on the session's SparkContext. */
+    * batch query execution on the session's SparkContext, plus one
+    * (stage id, callsite, executor run ms, shuffle bytes) record per
+    * completed stage. */
   final class Tally private[PlanMetrics] () {
     private[PlanMetrics] val bytes = new AtomicLong(0L)
     private[PlanMetrics] val exchanges = new AtomicLong(0L)
     private[PlanMetrics] val nodes = new AtomicLong(0L)
+    private val stageLog = ArrayBuffer.empty[(Int, String, Long, Long)]
+    // AQE submits shuffle-map and broadcast stages from a pool thread
+    // whose stack holds no graft frame, so a stage falls back to the
+    // callsite of the SQL execution that submitted it
+    private val execSite = TrieMap.empty[Long, String]
+    private val stageExec = TrieMap.empty[Int, Long]
 
     private[PlanMetrics] val stageListener: SparkListener = new SparkListener {
+      override def onOtherEvent(ev: SparkListenerEvent): Unit = ev match {
+        case e: SparkListenerSQLExecutionStart =>
+          graftFrame(e.details).foreach(execSite(e.executionId) = _)
+        case e: SparkListenerSQLExecutionEnd => execSite.remove(e.executionId)
+        case _ => ()
+      }
+
+      override def onStageSubmitted(ev: SparkListenerStageSubmitted): Unit =
+        Option(ev.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(id => stageExec(ev.stageInfo.stageId) = id.toLong)
+
       override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
-        val m = ev.stageInfo.taskMetrics
-        if (m != null) bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        val info = ev.stageInfo
+        val m = info.taskMetrics
+        val written = if (m != null) m.shuffleWriteMetrics.bytesWritten else 0L
+        val runMs = if (m != null) m.executorRunTime else 0L
+        bytes.addAndGet(written)
+        val exec = stageExec.remove(info.stageId)
+        val site = graftFrame(info.details)
+          .orElse(exec.flatMap(execSite.get))
+          .getOrElse(info.name.takeWhile(_ != '\n'))
+        stageLog.synchronized {
+          stageLog += ((info.stageId, site, runMs, written))
+        }
       }
     }
 
@@ -113,6 +168,21 @@ object PlanMetrics {
       }
       val s = snapshot()
       (s._1 - before._1, s._2 - before._2, s._3 - before._3)
+    }
+
+    /** stages completed so far — the mark to pass to [[callsites]] */
+    def stagesSeen: Int = stageLog.synchronized(stageLog.size)
+
+    /** per-callsite totals over the stages completed after mark `since`,
+      * most executor time first. Read after `drainAndRead`, like the
+      * counters. */
+    def callsites(since: Int = 0): Seq[(String, Callsite)] = {
+      val log = stageLog.synchronized(stageLog.drop(since).toVector)
+      log.groupBy(_._2).toSeq.map { case (site, stages) =>
+        val byId = stages.sortBy(_._1)
+        site -> Callsite(byId.size, byId.map(_._3).sum, byId.map(_._4).sum,
+          byId.map(_._4))
+      }.sortBy(-_._2.runMs)
     }
   }
 

@@ -787,7 +787,7 @@ object GraphOps {
     // by nid; HLL union is a register-wise max, so folding the self
     // sketch into the aggregate is merge-order-free and yields the
     // identical register state) — disappears. Measured at sf0.1
-    // (HyperBallShapeProbe, lgK=9, |V|=16k): per-2-round shuffle
+    // (lgK=9, |V|=16k; OPTIMIZATION_r19.md): per-2-round shuffle
     // 50.6 → 28.8 MB, the removed left-join exchanges.
     //
     // Deliberately NOT repartition(dst)+persist'ed: a cache pins the

@@ -24,7 +24,13 @@ final case class Q(
     * so the reported number is the repeated-execution cost (the
     * round-7 verdict: st09/io04 were billing their source writes to
     * every timed rep). Must be idempotent (mode=overwrite). */
-  setup: Option[(SparkSession, String) => Unit] = None)
+  setup: Option[(SparkSession, String) => Unit] = None) {
+
+  /** setup, then run: the self-contained form [[Registry.queries]] exposes */
+  def setupAndRun(s: SparkSession, d: String): DataFrame = {
+    setup.foreach(_(s, d)); run(s, d)
+  }
+}
 
 object Registry {
   def all: Seq[Q] =
@@ -34,13 +40,29 @@ object Registry {
       Clustering.qs ++ Warehouse.qs ++ Graph.qs
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(q => q.name -> ((s: SparkSession, d: String) => {
-      q.setup.foreach(_(s, d)); q.run(s, d)
-    })).toMap
+    all.map(q => q.name -> (q.setupAndRun _)).toMap
 
-  /** setup-only view for harnesses that time `run` separately (Bench) */
-  def setups: Map[String, (SparkSession, String) => Unit] =
-    all.flatMap(q => q.setup.map(q.name -> _)).toMap
+  /** the registered query `name`; fails naming it when there is none */
+  def byName(name: String): Q =
+    all.find(_.name == name).getOrElse(
+      throw new IllegalArgumentException(s"unknown query: $name"))
+
+  /** The queries a harness runs, in name order: every registered one, or
+    * the `SPARK_GRAFT_ONLY=name,name` dev-loop subset. A misspelled name
+    * fails here, before anything runs — otherwise it would filter its
+    * query out and a zero-query run could read as a pass. */
+  def selected(): Seq[Q] = {
+    val qs = all.sortBy(_.name)
+    sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet) match {
+      case None => qs
+      case Some(names) =>
+        val unknown = names -- qs.map(_.name)
+        require(unknown.isEmpty, "SPARK_GRAFT_ONLY names not in the " +
+          "registry: " + unknown.toSeq.sorted.mkString(", "))
+        qs.filter(q => names(q.name))
+    }
+  }
 
   def oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(q.name -> _)).toMap

@@ -19,10 +19,7 @@ object ExplainDump {
     val spark = graft.GraftSession.getOrCreate("explain-dump")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
-      val q = graft.queries.Registry.all.find(_.name == name)
-        .getOrElse(sys.error(s"unknown query: $name"))
-      q.setup.foreach(_(spark, dir))
-      val df = q.run(spark, dir)
+      val df = graft.queries.Registry.byName(name).setupAndRun(spark, dir)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), txt)

@@ -62,4 +62,26 @@ class PlanMetricsSpec extends SparkSpec {
     assert(bytes > 0,
       "stage listener missed the checkpoint job's shuffle bytes")
   }
+
+  // the callsite rule: a stage belongs to the first graft frame of the
+  // stack that submitted it — here the spec line issuing each action
+  test("actions from two lines land under two callsites summing to the total") {
+    val df = (1 to 5000).map(i => (i % 13, i.toLong)).toDF("k", "v")
+      .groupBy("k").agg(sum("v"))
+    val tally = PlanMetrics.register(spark)
+    try {
+      val b0 = tally.snapshot()
+      val mark = tally.stagesSeen
+      df.write.format("noop").mode("overwrite").save()
+      df.write.format("noop").mode("overwrite").save()
+      val (bytes, _, _) = tally.drainAndRead(b0)
+      val sites = tally.callsites(mark)
+      assert(sites.size == 2, s"expected two callsites, got ${sites.map(_._1)}")
+      assert(sites.forall(_._1.contains("PlanMetricsSpec.scala:")), sites.map(_._1))
+      assert(bytes > 0)
+      assert(sites.map(_._2.shuffleBytes).sum == bytes)
+      assert(sites.forall { case (_, c) =>
+        c.series.size == c.stages && c.series.sum == c.shuffleBytes })
+    } finally PlanMetrics.unregister(spark, tally)
+  }
 }
