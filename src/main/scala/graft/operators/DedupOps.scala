@@ -530,10 +530,10 @@ object DedupOps {
     *
     * `contraction = false` keeps the min-label propagation fixpoint:
     * per iteration one shuffle join (edges x labels) + one keyed
-    * min-agg; iterations = component diameter. Cheaper per round than
-    * a star step (no degree join), so it can win on corpora whose dup
-    * clusters are known-shallow (exact-copy farms); it is the
-    * ground-truth twin the spec pins the contraction path against. */
+    * min-agg; iterations = component diameter, so it only suits
+    * corpora whose dup clusters are known-shallow (exact-copy farms);
+    * it is the ground-truth twin the spec pins the contraction path
+    * against. */
   def nearDupClusters(pairs: DataFrame,
                       contraction: Boolean = true): DataFrame =
     nearDupClustersWithRounds(pairs, contraction)._1
@@ -582,10 +582,10 @@ object DedupOps {
       // re-run the closure (d10 stacks a join+agg on top) were printing
       // 450+-exchange plans whose Catalyst re-analysis grows with every
       // fixpoint round. Checkpointing pins each round to a single RDD
-      // scan (the connectedComponents rotation); eager=false because the
-      // labelSum convergence action below materializes it anyway — one
-      // pass per round, not two. Superseded rounds are reclaimed by the
-      // ContextCleaner.
+      // scan; eager=false because the labelSum convergence action below
+      // materializes it anyway — one pass per round, not two (under AQE
+      // the cut still runs the map stages below it when it is built).
+      // Superseded rounds are reclaimed by the ContextCleaner.
       val next = labels.unionByName(prop)
         .groupBy("id").agg(min("label").as("label"))
         .localCheckpoint(false)

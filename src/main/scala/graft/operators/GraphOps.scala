@@ -316,116 +316,108 @@ object GraphOps {
     * diameter-many rounds (a 1M-node chain = 1M rounds), star
     * contraction converges in O(log n) regardless of diameter.
     *
-    * Each round is two groupBy-join passes over the current edge set:
+    * Each round is a large-star then a small-star step over the current
+    * edge set, each one `min(b) over (partition by a)` window:
     *  - large-star: every node u computes m = min(u, Γ(u)) and rewires
     *    its STRICTLY LARGER neighbors to m;
     *  - small-star: every node rewires its smaller-or-equal neighbors
     *    (and itself) to the minimum of that set.
-    * The edge set monotonically contracts toward a union of stars
-    * centered at component minima; convergence is detected by an exact
-    * (count, decimal hash-sum) signature — one tiny action per round.
+    * The edge set contracts toward a star forest: edges u -> v with
+    * u > v, one v per u, and no v that is also a u, so every v is its
+    * component's minimum. A star forest is a fixed point of a round, so
+    * the loop stops at the first round whose output is one (one keyed
+    * aggregation per round) and reads the labels straight off it.
     *
-    * Each round's result is EAGERLY localCheckpoint'ed, not persisted:
+    * Each round's result is lazily localCheckpoint'ed, not persisted:
     * a persisted frame keeps its full logical lineage, and since each
-    * star step references its input several times (adjacency union +
-    * degree join), plan size would grow ~10x per round — Catalyst
+    * round references its input twice (both directions of the
+    * adjacency), plan size would double per round — Catalyst
     * re-analysis goes exponential long before execution is the
     * bottleneck (the classic iterative-DataFrame trap; GraphFrames
-    * checkpoints for the same reason). localCheckpoint truncates the
-    * plan at a materialized RDD each round, keeping analysis O(1) per
-    * round; superseded round blocks are reclaimed by the ContextCleaner.
-    * A multi-hour production run on preemptible executors would use
-    * reliable `checkpoint()` (HDFS/object store) instead — same
-    * truncation, survives executor loss.
+    * checkpoints for the same reason). The cut truncates the plan at an
+    * RDD scan, keeping analysis O(1) per round; superseded round blocks
+    * are reclaimed by the ContextCleaner. [[ReliableCheckpointConf]]
+    * routes the cut through reliable `checkpoint()` for runs that must
+    * survive executor loss.
     *
     * Input: undirected edges (u, v); self-loops and duplicates are
     * canonicalized away. Output: (id, component) for every endpoint,
-    * component = the minimum node id reachable (deterministic).
+    * component = the minimum node id reachable (deterministic). Throws
+    * IllegalStateException when `maxRounds` rounds do not reach a star
+    * forest. No frame is left in the session cache.
     */
   def connectedComponents(und: DataFrame, maxRounds: Int = 30): DataFrame =
     ccWithRounds(und, maxRounds)._1
 
   private[graft] def ccWithRounds(und: DataFrame,
       maxRounds: Int): (DataFrame, Int) = {
-    // largeStar emits a MULTISET on purpose (round-17): its output is
-    // at most one row per (a, b) adjacency pair with b > a — never
-    // more than |e| rows — and smallStar is duplicate-insensitive
-    // end-to-end (groupBy-min, an equi-join that emits one row per
-    // probe row, and a final distinct), so the intermediate
-    // (u, v)-distinct bought nothing but a full extra exchange +
-    // dedup per round. Dropping it cuts the per-round exchange count
-    // 4 -> 3 (adj-on-a and down-on-a are each ReuseExchange'd across
-    // their two consumers; the only remaining shuffle is smallStar's
-    // closing distinct). Note u > v holds for every emitted row
-    // (b > a >= m), so no row can be a self-loop either.
-    def largeStar(e: DataFrame): DataFrame = {
-      val adj = e.select(col("u").as("a"), col("v").as("b"))
+    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
+    import org.apache.spark.sql.expressions.Window
+    // Both star steps take the per-node minimum as a window over ONE
+    // shuffle of the adjacency. A groupBy-min joined back to it would
+    // shuffle it twice (raw and partially aggregated), and under AQE
+    // every map stage is a job of its own. Trade-off: a hub node's
+    // whole adjacency sits in one window task, where AQE's skew-join
+    // split could cut that sort-merge join into pieces.
+    val byA = Window.partitionBy(col("a"))
+    // emits a multiset (at most one row per adjacency pair) on purpose:
+    // smallStar is duplicate-insensitive up to its closing distinct.
+    // Every row has u > v (b > a >= m), so no row is a self-loop.
+    def largeStar(e: DataFrame): DataFrame =
+      e.select(col("u").as("a"), col("v").as("b"))
         .union(e.select(col("v").as("a"), col("u").as("b")))
-      val m = adj.groupBy("a").agg(min(col("b")).as("mb"))
-        .select(col("a"), least(col("a"), col("mb")).as("m"))
-      adj.join(m, "a").filter(col("b") > col("a"))
+        .withColumn("m", least(col("a"), min(col("b")).over(byA)))
+        .filter(col("b") > col("a"))
         .select(col("b").as("u"), col("m").as("v"))
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      val down = e.select(greatest(col("u"), col("v")).as("a"),
-        least(col("u"), col("v")).as("b"))
-      val m = down.groupBy("a").agg(min(col("b")).as("m"))
-      down.join(m, "a")
-        .select(col("b").as("u"), col("m").as("v"))
-        .union(m.select(col("a").as("u"), col("m").as("v")))
+    // input rows have u > v, so (a, b) = (u, v) already lists each
+    // node's smaller-or-equal neighbors; both ends rewire to their min
+    def smallStar(e: DataFrame): DataFrame =
+      e.select(col("u").as("a"), col("v").as("b"))
+        .withColumn("m", min(col("b")).over(byA))
+        .select(explode(array(col("a"), col("b"))).as("u"), col("m").as("v"))
         .filter(col("u") =!= col("v")).distinct()
-    }
-    // exact edge-set signature: equal sets give equal signatures, and the
-    // decimal sum of per-edge hashes makes a collision across DIFFERENT
-    // sets vanishingly unlikely (and a miss only costs one extra round)
-    def signature(e: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = e.agg(count(lit(1)),
-        sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).collect().head
-      (r.getLong(0), if (r.isNullAt(1)) java.math.BigDecimal.ZERO
-                     else r.getDecimal(1))
-    }
-    // LAZY localCheckpoints: lineage truncation (the LogicalRDD swap
-    // that keeps Catalyst analysis O(1) per round — load-bearing here,
-    // since each star step references its input several times and plan
-    // size would otherwise grow ~10x/round) happens at Dataset
-    // construction either way; with eager=false the materialization
-    // rides the signature action that runs every round anyway, instead
-    // of a separate eager pass — one materialization per round, not two.
+    // a smallStar output (every edge u > v, distinct) is final iff no
+    // node has two u-rows or both a u-row and a v-row. Only valid on
+    // that orientation: the canonical input (u < v) of a star around
+    // its MAXIMUM passes it, and would be labeled by that maximum.
+    def isStarForest(e: DataFrame): Boolean =
+      e.select(col("u").as("n"), lit(1).as("is_u"))
+        .union(e.select(col("v").as("n"), lit(0).as("is_u")))
+        .groupBy("n")
+        .agg(sum(col("is_u")).as("us"), count(lit(1)).as("rows"))
+        .filter(col("us") > 1 || (col("us") === 1 && col("rows") > 1))
+        .isEmpty
+    // LAZY cuts: the lineage truncation happens when the Dataset is
+    // built, but under AQE so does the execution of every shuffle-map
+    // stage below the cut; only the final stage is left to the next
+    // action (the star-forest test).
     //
-    // PER-ROUND materialization is itself load-bearing, not just the
-    // truncation: the round-11 probe ran 2 and 3 star-rounds per
-    // signature/checkpoint (the g01 CkptEvery idea) and wall time went
-    // 2.6 s -> 4.8 s -> ~50 s at sf0.1, because the unmaterialized
-    // first round's subtree is referenced by the second round's
-    // adjacency union AND degree join and re-executes per reference —
-    // the recompute blowup compounds exponentially with stride. Do not
-    // batch rounds here; the fixed-rank loops (g01) can batch because
-    // each iteration references its input once.
+    // PER-ROUND cuts are load-bearing, not just the truncation: the
+    // round-11 probe cut every 2 and 3 rounds (the g01 CkptEvery idea)
+    // and wall time went 2.6 s -> 4.8 s -> ~50 s at sf0.1, because an
+    // uncut round's subtree is referenced by both adjacency directions
+    // of the next and re-executes per reference — the recompute blowup
+    // compounds exponentially with stride. Do not batch rounds here;
+    // the fixed-rank loops (g01) can because each iteration references
+    // its input once.
     var e = und.filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("u"),
         greatest(col("u"), col("v")).as("v"))
       .distinct().lineageCut(eager = false)
-    val nodes = e.select(col("u").as("id"))
-      .union(e.select(col("v").as("id"))).distinct()
-      // cache lifecycle: CALLER-owned — clearCache()/unpersist after the action (DedupOps class doc)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var sig = signature(e)
     var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val next = smallStar(largeStar(e)).lineageCut(eager = false)
-      val nextSig = signature(next)
-      e = next
-      converged = nextSig == sig
-      sig = nextSig
+    var forest = false
+    while (!forest) {
+      if (rounds == maxRounds) throw new IllegalStateException(
+        s"connected components: no star forest after maxRounds = $maxRounds")
+      e = smallStar(largeStar(e)).lineageCut(eager = false)
       rounds += 1
+      forest = isStarForest(e)
     }
-    // converged edge set is a union of stars (u -> component root);
-    // nodes absent from it are their own singleton components
-    val labels = nodes
-      .join(e.select(col("u").as("id"), col("v").as("comp")), Seq("id"),
-        "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("component"))
+    // each leaf u has exactly one root v, and roots are never leaves, so
+    // only the root rows need a distinct. Every input endpoint survives
+    // contraction as a leaf or a root.
+    val labels = e.select(col("u").as("id"), col("v").as("component"))
+      .union(e.select(col("v").as("id"), col("v").as("component")).distinct())
     (labels, rounds)
   }
 

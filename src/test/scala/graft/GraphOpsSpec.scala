@@ -73,6 +73,53 @@ class GraphOpsSpec extends SparkSpec {
     assert(rounds <= 12, s"took $rounds rounds for diameter 63")
   }
 
+  test("connectedComponents throws when maxRounds ends short of a star forest") {
+    // one round cannot contract a 64-node path; returning its edge set
+    // anyway would give some node two labels
+    val und = (0L until 63L).map(i => (i, i + 1)).toDF("u", "v")
+    val e = intercept[IllegalStateException](
+      GraphOps.ccWithRounds(und, maxRounds = 1))
+    assert(e.getMessage.contains("maxRounds = 1"), e.getMessage)
+  }
+
+  test("connectedComponents: stars whose hub is not the minimum") {
+    // hub 5 with leaves 1-4 and 6-9, and hub 9 with leaves 1-8. The
+    // star-forest test only holds on small-star output (u > v): on the
+    // canonical u < v input the hub-9 star already passes it, and
+    // stopping there would label every node 9. Every label must be 1.
+    for (hub <- Seq(5L, 9L)) {
+      val und = (1L to 9L).filter(_ != hub).map(i => (hub, i)).toDF("u", "v")
+      val got = GraphOps.connectedComponents(und).collect()
+        .map(r => r.getLong(0) -> r.getLong(1))
+      assert(got.length == 9 && got.map(_._1).toSet == (1L to 9L).toSet,
+        s"hub $hub: ${got.toSeq}")
+      assert(got.forall(_._2 == 1L), s"hub $hub: ${got.toSeq}")
+    }
+  }
+
+  test("connectedComponents: a star around its minimum takes one round") {
+    // round 1 turns it into the same star pointing at the hub, which is
+    // already a star forest — no confirming round
+    val und = (2L to 9L).map(i => (i, 1L)).toDF("u", "v")
+    spark.catalog.clearCache()
+    val (labels, rounds) = GraphOps.ccWithRounds(und, maxRounds = 30)
+    assert(rounds == 1, s"took $rounds rounds")
+    assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      (1L to 9L).map(_ -> 1L).toMap)
+    assert(spark.sharedState.cacheManager.isEmpty, "a frame was left cached")
+  }
+
+  test("g04_connected_components plan-size pin at sf0.001") {
+    // exchanges summed over every query execution the query triggers
+    // (Probe's rep-1 PlanMetrics bracket): 32 with groupBy-min + join
+    // star steps, a signature action per round and a persisted node
+    // set; 14 with window-min star steps, the star-forest stop and
+    // labels read off the forest
+    val (_, exchanges, _) = graft.tools.Probe.measure(spark,
+      "g04_connected_components", reps = 1, dir = sfTiny).axes
+    assert(exchanges > 0 && exchanges <= 14, s"exchanges = $exchanges")
+  }
+
   test("connectedComponents separates components and keeps min labels") {
     // K3 {1,2,3}, an edge {10,11}, and a chain 20-21-22 (plus a dup and
     // a reversed edge to exercise canonicalization)
@@ -101,8 +148,11 @@ class GraphOpsSpec extends SparkSpec {
       val edges = Seq.fill(m)(
         (rng.nextInt(n).toLong, rng.nextInt(n).toLong))
       val und = edges.toDF("u", "v")
-      val got = GraphOps.connectedComponents(und)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val rows = GraphOps.connectedComponents(und)
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
+      val got = rows.toMap
+      // toMap would hide a node carrying two labels
+      assert(rows.length == got.size, s"(n=$n m=$m) duplicate ids")
 
       // union-find with path compression; roots relabeled to component min
       val parent = Array.tabulate(n)(identity)
