@@ -407,11 +407,8 @@ object DedupOps {
     * (measured here: background pair hamming down to ~12, indistinguish-
     * able from true near-dups), while the shingle space is large enough
     * that unrelated docs sit at hamming ~32. Also carries the distinct-
-    * feature count (length bucketing key for banding). */
-  def simHashSignatures(docs: DataFrame, n: Int = 3): DataFrame =
-    simHashSignaturesFromPosts(shinglePostings(docs, n))
-
-  /** signature builder over an existing postings frame */
+    * feature count (length bucketing key for banding). Built over an
+    * existing postings frame (`shinglePostings`). */
   def simHashSignaturesFromPosts(posts: DataFrame): DataFrame = {
     // distinct features via the shared postings op: explode + shuffle
     // distinct beats per-row array_distinct by ~10x (the latter is an

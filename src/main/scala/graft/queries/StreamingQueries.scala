@@ -68,7 +68,9 @@ object StreamingQueries {
     * queries on the shared session never observe it, and two interleaved
     * replays can't clobber each other's conf (builder-level configs like
     * nanosAsLong live in the shared SparkConf, so the child inherits
-    * them). */
+    * them). The child shares the parent's classloader (GraftSession
+    * turns artifact isolation off), so a replay reuses the classes
+    * earlier replays compiled. */
   private def replay(s: SparkSession, name: String, mode: String,
                      confs: Map[String, String] = Map.empty)
                     (build: SparkSession => DataFrame): DataFrame = {

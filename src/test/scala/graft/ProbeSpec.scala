@@ -19,7 +19,10 @@ class ProbeSpec extends SparkSpec {
     val axes =
       try {
         q.setup.foreach(_(spark, sfTiny))
-        val before = tally.snapshot()
+        // quiesce first, as measure does for its rep 1: the end event of
+        // measure's last rep can still be queued, and a listener
+        // registered before it is delivered would count that execution
+        val before = tally.drainAndRead((0L, 0L, 0L))
         q.run(spark, sfTiny).write.format("noop").mode("overwrite").save()
         tally.drainAndRead(before)
       } finally {

@@ -4,17 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for test suites — one session per JVM (Spark
-  * getOrCreate reuses it across suites in the forked test JVM). */
+  * getOrCreate reuses it across suites in the forked test JVM). The
+  * engine's own configuration (GraftSession.builder) with a fixed thread
+  * and shuffle-partition count, so specs run under the settings the
+  * mains run under. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = GraftSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // same extension wiring as GraftSession, so specs see the engine's
-    // registered functions and optimizer rules
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   val sfTiny = "/root/testdata/sf0.001"
