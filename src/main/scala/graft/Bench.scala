@@ -88,7 +88,7 @@ object Bench {
 
     // warmup on the tiny SF: exercises every plan shape once (incl. the
     // sentinel's, so pass-1 firings aren't billed JIT cost)
-    val warmDir = "/root/testdata/sf0.001"
+    val warmDir = graft.queries.Registry.warmupDir(sfDir)
     queries.foreach { q =>
       try runOnce(q.setupAndRun(spark, warmDir)) catch { case _: Throwable => () }
     }
@@ -115,21 +115,10 @@ object Bench {
 
     for (pass <- 0 until Passes) {
       passSentinels(pass) += sentinelOnce()
-      // quiesce after EVERY pass-0 sentinel firing: the sentinel's own
-      // QueryExecution event rides the async listener bus and can land
-      // AFTER the next query's `before` snapshot, crediting the
-      // sentinel's ~11 plan nodes + 1 exchange to that query. Round 12
-      // saw exactly this: 12 new queries moved t05 onto a qi%20
-      // boundary and its node count "regressed" 19 -> 30 on unchanged
-      // code (reproduced at sf0.1 with t05 pinned at qi=20: 30/2 leaky,
-      // 19/1 with this drain).
-      if (pass == 0) tally.drainAndRead((0L, 0L, 0L))
       queries.zipWithIndex.foreach { case (q, qi) =>
         val name = q.name
-        if (qi > 0 && qi % SentinelEvery == 0) {
+        if (qi > 0 && qi % SentinelEvery == 0)
           passSentinels(pass) += sentinelOnce()
-          if (pass == 0) tally.drainAndRead((0L, 0L, 0L))
-        }
         if (pass == 0) q.setup.foreach { su =>
           val s0 = System.nanoTime()
           try su(spark, sfDir) catch { case e: Throwable =>
@@ -140,13 +129,12 @@ object Bench {
           setupSecs(name) = (System.nanoTime() - s0) / 1e9
           System.err.println(f"[bench] $name setup (untimed): " +
             f"${setupSecs(name)}%.3f s")
-          // quiesce the async listeners before the measured rep opens —
-          // otherwise the setup's own shuffle/stage events can land
-          // inside the delta and inflate this query's reported volume
-          tally.drainAndRead((0L, 0L, 0L))
         }
         // time the run function alone — warmup used the composed
-        // setup+run; here setup already ran in pass 1
+        // setup+run; here setup already ran in pass 1. The snapshot
+        // drains the listener bus, so neither the setup's events nor a
+        // sentinel's (round 12 credited a sentinel's 11 plan nodes and 1
+        // exchange to t05) land inside this query's bracket
         val window = passSentinels(pass).size - 1
         val before = if (pass == 0) tally.snapshot() else (0L, 0L, 0L)
         val t0 = System.nanoTime()

@@ -7,7 +7,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerStageCompleted, SparkListenerStageSubmitted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -46,9 +46,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * Capture point matters: an action like `df.write` plans and executes
   * its own QueryExecution, leaving the frame's own `queryExecution`
   * un-run (its accumulators read 0; the first cut of this file made
-  * exactly that mistake). Listener delivery is asynchronous on both
-  * buses — bracket a measured region with `snapshot()` ... then
-  * `drainAndRead(before)` OUTSIDE any timed region.
+  * exactly that mistake). Listener delivery is asynchronous — bracket a
+  * measured region with `snapshot()` ... then `drainAndRead(before)`
+  * OUTSIDE any timed region. `register`, `snapshot` and `drainAndRead`
+  * all wait for the listener bus to deliver every event already posted,
+  * so a bracket counts exactly the executions that ran inside it.
   */
 object PlanMetrics {
 
@@ -97,7 +99,7 @@ object PlanMetrics {
     * batch query execution on the session's SparkContext, plus one
     * (stage id, callsite, executor run ms, shuffle bytes) record per
     * completed stage. */
-  final class Tally private[PlanMetrics] () {
+  final class Tally private[PlanMetrics] (spark: SparkSession) {
     private[PlanMetrics] val bytes = new AtomicLong(0L)
     private[PlanMetrics] val exchanges = new AtomicLong(0L)
     private[PlanMetrics] val nodes = new AtomicLong(0L)
@@ -148,29 +150,22 @@ object PlanMetrics {
                                exception: Exception): Unit = ()
       }
 
-    /** (bytes, exchanges, plan nodes) seen so far */
-    def snapshot(): (Long, Long, Long) =
+    /** (bytes, exchanges, plan nodes) once every event posted so far has
+      * been delivered. Runs OUTSIDE any timed region; throws if the bus
+      * does not drain within 10 s. */
+    def snapshot(): (Long, Long, Long) = {
+      GraftPlanBridge.drainListeners(spark)
       (bytes.get(), exchanges.get(), nodes.get())
+    }
 
-    /** wait (bounded) for BOTH async listener buses to go quiet, then
-      * return the deltas accumulated since `before`. Runs OUTSIDE any
-      * timed region. */
-    def drainAndRead(before: (Long, Long, Long),
-                     maxWaitMs: Long = 2000): (Long, Long, Long) = {
-      val deadline = System.nanoTime() + maxWaitMs * 1000000L
-      var last = snapshot()
-      var stableSince = System.nanoTime()
-      while (System.nanoTime() < deadline &&
-             System.nanoTime() - stableSince < 150L * 1000000L) {
-        Thread.sleep(10)
-        val now = snapshot()
-        if (now != last) { last = now; stableSince = System.nanoTime() }
-      }
+    /** the deltas accumulated since `before`, read as [[snapshot]] reads */
+    def drainAndRead(before: (Long, Long, Long)): (Long, Long, Long) = {
       val s = snapshot()
       (s._1 - before._1, s._2 - before._2, s._3 - before._3)
     }
 
-    /** stages completed so far — the mark to pass to [[callsites]] */
+    /** stages completed so far — the mark to pass to [[callsites]]; take
+      * it right after [[snapshot]], which drains the bus */
     def stagesSeen: Int = stageLog.synchronized(stageLog.size)
 
     /** per-callsite totals over the stages completed after mark `since`,
@@ -186,8 +181,11 @@ object PlanMetrics {
     }
   }
 
+  /** Adds a fresh tally's listeners once every event already posted has
+    * been delivered, so the tally never counts an earlier execution. */
   def register(spark: SparkSession): Tally = {
-    val t = new Tally
+    GraftPlanBridge.drainListeners(spark)
+    val t = new Tally(spark)
     spark.sparkContext.addSparkListener(t.stageListener)
     spark.listenerManager.register(t.execListener)
     t

@@ -516,89 +516,25 @@ object DedupOps {
     * per cluster, not per pair: A~B, B~C must collapse to ONE cluster
     * even when A~C was never emitted).
     *
-    * Default path (`contraction = true`): the large-star/small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond", SoCC'14) via [[GraphOps.connectedComponents]] —
-    * O(log n) rounds on ANY graph shape, which is what survives
-    * adversarial near-dup inputs (template families forming long
-    * chains, where propagation's round count is the component
-    * DIAMETER). Both paths produce the identical deterministic label
-    * (minimum reachable doc_id), spec-asserted on chains and forests.
-    *
-    * `contraction = false` keeps the min-label propagation fixpoint:
-    * per iteration one shuffle join (edges x labels) + one keyed
-    * min-agg; iterations = component diameter, so it only suits
-    * corpora whose dup clusters are known-shallow (exact-copy farms);
-    * it is the ground-truth twin the spec pins the contraction path
-    * against. */
-  def nearDupClusters(pairs: DataFrame,
-                      contraction: Boolean = true): DataFrame =
-    nearDupClustersWithRounds(pairs, contraction)._1
+    * The large-star/small-star contraction (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC'14) via
+    * [[GraphOps.connectedComponents]]: O(log n) rounds on ANY graph
+    * shape, which is what survives adversarial near-dup inputs
+    * (template families forming long chains, where min-label
+    * propagation's round count is the component DIAMETER). The spec
+    * pins its labels and round count against a propagation reference
+    * in the test tree. */
+  def nearDupClusters(pairs: DataFrame): DataFrame =
+    nearDupClustersWithRounds(pairs)._1
 
   /** (labels, rounds) — rounds exposed so the adversarial-chain spec can
     * assert contraction's O(log n) against propagation's O(diameter). */
   private[graft] def nearDupClustersWithRounds(
-      pairs: DataFrame, contraction: Boolean): (DataFrame, Int) = {
-    if (contraction) {
-      val und = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-      val (labels, rounds) = GraphOps.ccWithRounds(und, maxRounds = 30)
-      (labels.select(col("id").as("doc_id"),
-        col("component").as("cluster_id")), rounds)
-    } else nearDupClustersPropagation(pairs)
-  }
-
-  private def nearDupClustersPropagation(
       pairs: DataFrame): (DataFrame, Int) = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      // cache lifecycle: scoped to this call — unpersisted below
-      .persist(MEMORY_AND_DISK)
-    // seed with the 1-hop minimum (least of self and all neighbors) —
-    // one aggregation that replaces the identity init plus the first
-    // propagation round
-    var labels = edges.groupBy(col("src").as("id"))
-      .agg(least(min(col("dst")), first(col("src"))).as("label"))
-      // cache lifecycle: scoped to this call — unpersisted below
-      .persist(MEMORY_AND_DISK)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      // coalesce: sum() over an empty frame is null — an empty pair list
-      // (clean corpus) must converge immediately, not NPE. decimal(38,0)
-      // accumulation: a bigint sum wraps silently in non-ANSI mode, and
-      // the monotonicity argument below only holds without overflow
-      df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO))).head.getDecimal(0)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var rounds = 0
-    while (!converged) {
-      val prop = edges.join(labels, edges("dst") === labels("id"))
-        .select(edges("src").as("id"), col("label"))
-      // LAZY localCheckpoint, not persist: persist bounds memory but the
-      // logical plan still chains round over round, and consumers that
-      // re-run the closure (d10 stacks a join+agg on top) were printing
-      // 450+-exchange plans whose Catalyst re-analysis grows with every
-      // fixpoint round. Checkpointing pins each round to a single RDD
-      // scan; eager=false because the labelSum convergence action below
-      // materializes it anyway — one pass per round, not two (under AQE
-      // the cut still runs the map stages below it when it is built).
-      // Superseded rounds are reclaimed by the ContextCleaner.
-      val next = labels.unionByName(prop)
-        .groupBy("id").agg(min("label").as("label"))
-        .localCheckpoint(false)
-      // labels only ever decrease, so the label sum is strictly monotone:
-      // equal sums == fixpoint — a one-column agg over the cached frame
-      // instead of a join-and-diff per round
-      val s = labelSum(next)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      labels.unpersist()
-      labels = next
-      rounds += 1
-    }
-    edges.unpersist()
-    (labels.select(col("id").as("doc_id"), col("label").as("cluster_id")),
-      rounds)
+    val und = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
+    val (labels, rounds) = GraphOps.ccWithRounds(und, maxRounds = 30)
+    (labels.select(col("id").as("doc_id"),
+      col("component").as("cluster_id")), rounds)
   }
 
   /** SimHash near-dups, exact-verified by n-gram Jaccard (same contract

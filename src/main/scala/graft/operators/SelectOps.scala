@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * is spent" is semantically a prefix of the corpus ordered by
   * (quality DESC, doc_id ASC) — exactly the plan shape (range-
   * partitioning exchange + running-sum window over everything) that
-  * PlanAudit bans, because at 100 TB every row would flow through the
+  * the audit bans, because at 100 TB every row would flow through the
   * sort. [[tokenBudgetSelect]] is the scale-right form: recursive
   * histogram splitting confines the exact running-sum window to ONE
   * boundary bucket of bounded size, while every bucket strictly better
@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   * shuffle of <= a few hundred rows) plus a <= ~256-row driver collect
   * — model-sized, never data-sized. The final window partitions by the
   * boundary bucket key (a hash exchange, not SinglePartition), so one
-  * task processes <= maxBoundaryRows rows and PlanAudit stays clean.
+  * task processes <= maxBoundaryRows rows and the audit stays clean.
   *
   * Cache contract: the recursion filters the SAME `scored` frame once
   * per level — callers doing deep recursion should persist `scored`

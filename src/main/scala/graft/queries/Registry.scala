@@ -64,6 +64,12 @@ object Registry {
     }
   }
 
+  /** where a harness warms up before measuring at `sfDir`: its `sf0.001`
+    * sibling in the fixture ladder, so JIT and session startup are not
+    * billed to the first measured query */
+  def warmupDir(sfDir: String): String =
+    java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001").toString
+
   def oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

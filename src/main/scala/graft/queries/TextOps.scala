@@ -1812,7 +1812,7 @@ object TextOps {
     //      the curation finale: "take the best documents until the token
     //      budget is spent" — semantically a prefix of the corpus ordered
     //      by (quality DESC, doc_id), i.e. exactly the plan shape
-    //      (rangepartitioning exchange + running-sum window) PlanAudit
+    //      (rangepartitioning exchange + running-sum window) the audit
     //      bans, because at 100 TB every row would flow through the sort.
     //      The scale-right two-phase form used here: (1) one keyed
     //      aggregation histograms token mass per quality bucket (the

@@ -1,10 +1,9 @@
 package graft.tools
 
-import java.nio.file.Paths
-
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 
 import graft.{GraftSession, PlanMetrics}
 import graft.queries.Registry
@@ -26,7 +25,8 @@ import graft.queries.Registry
   * Bench axes, a per-callsite table (stages, executor task seconds,
   * shuffle MB written, share of the task time), and for every callsite
   * reached by more than one stage its per-stage shuffle series — the
-  * round-by-round view of an iterative loop.
+  * round-by-round view of an iterative loop. Last, untimed, the
+  * formatted plan of rep 1's frame (`explain("formatted")`).
   *
   * Usage: `runMain graft.tools.Probe <query> <reps> <sfDir>`. Exits 1
   * naming the query if it fails.
@@ -34,9 +34,10 @@ import graft.queries.Registry
 object Probe {
 
   /** each rep's wall seconds; rep 1's (shuffle bytes, exchanges, plan
-    * nodes) and per-callsite stages */
+    * nodes), per-callsite stages and formatted plan */
   final case class Result(walls: Seq[Double], axes: (Long, Long, Long),
-                          callsites: Seq[(String, PlanMetrics.Callsite)])
+                          callsites: Seq[(String, PlanMetrics.Callsite)],
+                          plan: String)
 
   /** Measures `name` on `spark` without stopping it. Throws on an
     * unknown name or a failing run. */
@@ -48,18 +49,22 @@ object Probe {
       finally spark.catalog.clearCache()
     val tally = PlanMetrics.register(spark)
     try {
-      sink(q.setupAndRun(spark,
-        Paths.get(dir).resolveSibling("sf0.001").toString))
+      sink(q.setupAndRun(spark, Registry.warmupDir(dir)))
       var axes = (0L, 0L, 0L)
       var sites = Seq.empty[(String, PlanMetrics.Callsite)]
+      var first = Option.empty[DataFrame]
       val walls = (1 to reps).map { rep =>
         q.setup.foreach(_(spark, dir))
-        // quiesce setup's events so they stay out of rep 1's bracket
-        if (rep == 1) tally.drainAndRead((0L, 0L, 0L))
         val before = tally.snapshot()
         val mark = tally.stagesSeen
         val t0 = System.nanoTime()
-        sink(q.run(spark, dir))
+        sink {
+          val df = q.run(spark, dir)
+          // resolve rep 1's cache lookups while the frames its run
+          // persisted still exist; the plan is rendered after the reps
+          if (rep == 1) { first = Some(df); df.queryExecution.withCachedData }
+          df
+        }
         val wall = (System.nanoTime() - t0) / 1e9
         if (rep == 1) {
           axes = tally.drainAndRead(before)
@@ -67,7 +72,8 @@ object Probe {
         }
         wall
       }
-      Result(walls, axes, sites)
+      val plan = first.fold("")(_.queryExecution.explainString(FormattedMode))
+      Result(walls, axes, sites, plan)
     } finally PlanMetrics.unregister(spark, tally)
   }
 
@@ -105,5 +111,7 @@ object Probe {
       println(s"[probe] per-stage shuffle MB, $site: " +
         c.series.map(b => f"${b / 1e6}%.3f").mkString(" "))
     }
+    println(s"[probe] $name rep 1 plan:")
+    println(r.plan)
   }
 }

@@ -2,15 +2,26 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Bridge into the sql-private plan→DataFrame constructor: a library
-  * that contributes its own logical operators (graft.plans.AsOfJoin)
-  * needs to hand a constructed LogicalPlan back to the session, and
-  * `Dataset.ofRows` — the one entry point for that — is `private[sql]`.
-  * Shimming it from inside the org.apache.spark.sql package is the
+/** Bridge into two spark-private members a library needs:
+  *
+  *  - `Dataset.ofRows`, the one entry point that hands a constructed
+  *    LogicalPlan back to the session: a library that contributes its
+  *    own logical operators (graft.plans.AsOfJoin) needs it;
+  *  - `SparkContext.listenerBus`, whose `waitUntilEmpty` is the exact
+  *    drain for the measurement listeners (graft.PlanMetrics).
+  *
+  * Shimming them from inside the org.apache.spark.sql package is the
   * established pattern for Spark-extension libraries; this object is
   * the ONLY code in the repo living outside the graft namespace, and
-  * it must stay a one-liner. */
+  * each member must stay a one-liner. */
 object GraftPlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** blocks until every event posted so far has reached every listener
+    * (stage and SQL-execution events, and the QueryExecutionListeners,
+    * which ride the same shared queue); throws a TimeoutException after
+    * 10 s */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

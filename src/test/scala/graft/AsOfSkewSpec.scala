@@ -65,14 +65,17 @@ class AsOfSkewSpec extends SparkSpec {
     withSkewConfs {
       // positive control: same data, plain equi-join -> skew split fires
       val smj = l.join(r, "k")
-      smj.collect() // materialize THIS queryExecution so AQE finalizes
+      // run THIS queryExecution's map stages so AQE finalizes its plan;
+      // the iterator is never read, so none of the ~10M joined rows
+      // reaches the driver
+      smj.toLocalIterator()
       val smjPlan = smj.queryExecution.executedPlan.toString
       assert(smjPlan.contains("skew=true"),
         s"control SMJ did not skew-split — thresholds wrong?\n$smjPlan")
       // the native as-of exec: same data, same thresholds -> no split
       val aoj = JoinOps.asOfJoin(l, r, "k", "k", "t", "rt",
         rightVals = Seq("rt", "v"))
-      aoj.collect()
+      aoj.toLocalIterator()
       val aojPlan = aoj.queryExecution.executedPlan.toString
       assert(aojPlan.contains("AsOfJoin"), aojPlan)
       assert(!aojPlan.contains("skew=true"),

@@ -104,8 +104,8 @@ class DedupOpsSpec extends SparkSpec {
       (30L, 31L)).toDF("doc_a", "doc_b")
     def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id")).toMap
-    val viaContraction = asMap(DedupOps.nearDupClusters(pairs, contraction = true))
-    val viaPropagation = asMap(DedupOps.nearDupClusters(pairs, contraction = false))
+    val viaContraction = asMap(DedupOps.nearDupClusters(pairs))
+    val viaPropagation = asMap(NearDupReference.clustersWithRounds(pairs)._1)
     assert(viaContraction == viaPropagation)
     assert(viaContraction == Map(
       10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L,
@@ -121,9 +121,9 @@ class DedupOpsSpec extends SparkSpec {
     // was designed for (each round roughly halves path lengths)
     val pairs = (0L until 63L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val (contracted, contractionRounds) =
-      DedupOps.nearDupClustersWithRounds(pairs, contraction = true)
+      DedupOps.nearDupClustersWithRounds(pairs)
     val (propagated, propagationRounds) =
-      DedupOps.nearDupClustersWithRounds(pairs, contraction = false)
+      NearDupReference.clustersWithRounds(pairs)
     val cm = contracted.collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id")).toMap
     val pm = propagated.collect()

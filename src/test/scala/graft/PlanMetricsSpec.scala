@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 /** Pins the deterministic bench axes: stage-level shuffle bytes (fires
@@ -45,6 +46,26 @@ class PlanMetricsSpec extends SparkSpec {
     val three = measure { once(); once(); once() }
     assert(three._1 == 3 * one._1, s"bytes: expected ${3 * one._1}, got ${three._1}")
     assert(three._2 == 3 * one._2, s"exchanges: expected ${3 * one._2}, got ${three._2}")
+  }
+
+  // a tally registered while an earlier action's events are still queued
+  // must not count that action: register drains the bus first
+  test("a tally registered right after an action counts nothing of it") {
+    val df = (1 to 5000).map(i => (i % 13, i.toLong)).toDF("k", "v")
+      .groupBy("k").agg(sum("v"))
+    // holds the shared listener queue at each completed stage, so the
+    // action's later events are still queued when the tally registers
+    val slow = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        Thread.sleep(200)
+    }
+    spark.sparkContext.addSparkListener(slow)
+    try {
+      df.write.format("noop").mode("overwrite").save()
+      val tally = PlanMetrics.register(spark)
+      try assert(tally.drainAndRead((0L, 0L, 0L)) == ((0L, 0L, 0L)))
+      finally PlanMetrics.unregister(spark, tally)
+    } finally spark.sparkContext.removeSparkListener(slow)
   }
 
   // the round-8 gap: localCheckpoint materializes through a job that

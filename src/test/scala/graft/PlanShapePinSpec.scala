@@ -3,11 +3,11 @@ package graft
 import graft.queries.Registry
 
 /** Pins the shuffle budget of headline queries — the structural scale
-  * property PlanAudit reports, promoted to a regression test. Bounds are
+  * property the audit reports, promoted to a regression test. Bounds are
   * UPPER bounds (a plan may legitimately improve); a failure means an
   * edit added an Exchange to a plan that was shuffle-lean, exactly the
   * regression that costs the most at 100 TB. Counts come from the
-  * executed plan string, same matcher as PlanAudit. */
+  * executed plan string, same matcher as the audit. */
 class PlanShapePinSpec extends SparkSpec {
 
   // query -> max allowed exchanges (hash/range/single-partition)

@@ -4,8 +4,9 @@ import graft.queries.Registry
 import graft.tools.Probe
 
 /** Probe's measuring function runs on the shared session (it must not
-  * stop it), returns one wall per rep, and reports rep 1's axes as an
-  * independent PlanMetrics bracket of the same query reads them. */
+  * stop it), returns one wall per rep, reports rep 1's axes as an
+  * independent PlanMetrics bracket of the same query reads them, and
+  * returns rep 1's formatted plan. */
 class ProbeSpec extends SparkSpec {
   private val name = "q04_join_factfact"
 
@@ -19,10 +20,7 @@ class ProbeSpec extends SparkSpec {
     val axes =
       try {
         q.setup.foreach(_(spark, sfTiny))
-        // quiesce first, as measure does for its rep 1: the end event of
-        // measure's last rep can still be queued, and a listener
-        // registered before it is delivered would count that execution
-        val before = tally.drainAndRead((0L, 0L, 0L))
+        val before = tally.snapshot()
         q.run(spark, sfTiny).write.format("noop").mode("overwrite").save()
         tally.drainAndRead(before)
       } finally {
@@ -32,6 +30,12 @@ class ProbeSpec extends SparkSpec {
     assert(r.axes == axes)
     assert(r.axes._1 > 0 && r.axes._2 > 0, r.axes)
     assert(r.callsites.map(_._2.shuffleBytes).sum == r.axes._1)
+  }
+
+  test("measure returns rep 1's formatted plan") {
+    val r = Probe.measure(spark, name, reps = 1, dir = sfTiny)
+    assert(r.plan.contains("== Physical Plan =="), r.plan)
+    assert(r.plan.contains("Exchange"), r.plan)
   }
 
   test("an unknown query name fails naming it") {
