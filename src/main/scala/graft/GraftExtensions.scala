@@ -19,12 +19,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (cost-based: broadcast exec under the autoBroadcast threshold,
     // shuffled streaming-merge exec above it)
     ext.injectPlannerStrategy(s => new graft.plans.AsOfJoinStrategy(s))
-    // SQL frontend for the same operator: asof_join / asof_join_left
-    // table functions + the rule completing their placeholder node
-    graft.plans.AsOfJoinTvf.functions.foreach(ext.injectTableFunction)
-    ext.injectResolutionRule(_ => graft.plans.ResolveAsOfJoin)
-    // parser-level ASOF JOIN syntax (DuckDB dialect): text rewrite to a
-    // marked plain join + the rule completing it into the AsOfJoin node
+    // SQL frontend for the same operator, the ASOF JOIN syntax (DuckDB
+    // dialect): text rewrite to a marked plain join + the rule
+    // completing it into the AsOfJoin node
     ext.injectParser((_, delegate) => new graft.plans.GraftSqlParser(delegate))
     ext.injectFunction(graft.plans.AsOfSyntax.markerFunction)
     ext.injectResolutionRule(_ => graft.plans.ResolveAsOfSyntax)

@@ -15,11 +15,13 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
   SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** The deterministic half of the bench signal. Wall-clock on a shared
+/** The steady half of the bench signal. Wall-clock on a shared
   * local[32] host swings ±20% run-to-run (three same-day full runs
   * measured 137/172/145 s; round 8's driver run carried a contiguous
   * contention window that fabricated 56 "regressions"), but what a plan
-  * *does* is a pure function of plan + data. Bench records, per query:
+  * *does* is almost a pure function of plan + data (a sketch
+  * aggregate's shuffled partial state varies a few KB with merge order;
+  * see Bench's shuffle-volume gate). Bench records, per query:
   *
   *  - '''shuffle bytes''' — captured at STAGE level via a SparkListener
   *    on the shared SparkContext, NOT a QueryExecutionListener: stage
@@ -95,7 +97,7 @@ object PlanMetrics {
     stack.split('\n').map(_.trim).find(_.contains("graft."))
       .map(_.stripPrefix("at "))
 
-  /** Accumulates the three deterministic counters across every job /
+  /** Accumulates the three plan counters across every job /
     * batch query execution on the session's SparkContext, plus one
     * (stage id, callsite, executor run ms, shuffle bytes) record per
     * completed stage. */

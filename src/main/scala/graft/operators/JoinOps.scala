@@ -46,9 +46,9 @@ object JoinOps {
     * reaches the join with zero exchanges — a stream-static join when
     * the left is a stream) and otherwise co-partitions both sides for a
     * streaming merge. e24 gates it against the DuckDB ASOF JOIN oracle,
-    * e29 the string-keyed form, e30 the tolerance form; the equality
-    * specs compare it with the composed union+window reference in the
-    * test tree. */
+    * e30 the tolerance form; the equality specs compare it with the
+    * composed union+window reference in the test tree. The `ASOF JOIN`
+    * SQL syntax builds the same node (e25, e29, e32, e34). */
   def asOfJoin(left: DataFrame, right: DataFrame,
                leftKey: String, rightKey: String,
                leftTime: String, rightTime: String,
@@ -133,10 +133,6 @@ object JoinOps {
       require(!left.columns.contains(n) && !right.columns.contains(n),
         s"asOfJoinTimeSliced reserves the column name `$n`; rename the " +
           "caller's column first"))
-    import org.apache.spark.sql.types.TimestampType
-    def micros(df: DataFrame, c: String): Column =
-      if (df.schema(c).dataType == TimestampType) unix_micros(col(c))
-      else col(c).cast("long")
     // exact floor division on longs: pmod keeps negatives correct and
     // `div` is INTEGRAL division — `/` would route through double and
     // round above 2^53; the subtraction makes the quotient exact
@@ -215,7 +211,7 @@ object JoinOps {
     * caller reads the w19 slice plan and calls [[asOfJoinTimeSliced]]
     * manually. This operator does that read-and-route automatically:
     *
-    *  1. [[asOfSkewPlan]] detects hot keys — by default a Misra-Gries
+    *  1. [[asOfSkewPlan]] detects hot keys — a Misra-Gries
     *     pass (ds04's `mg_topk_agg`): O(capacity) state per partition,
     *     NO keyed shuffle, so skew detection never pays a
     *     key-cardinality exchange over a 100 TB input — and derives
@@ -223,8 +219,9 @@ object JoinOps {
     *     over just the candidate keys (a pruned second pass); the MIN
     *     width across hot keys becomes the global sliceWidth (w19's
     *     arithmetic). When an explicit `targetRowsPerTask` is finer
-    *     than the sketch can certify, it falls back to the exact
-    *     histogram (one full keyed shuffle — the w19 gate shape);
+    *     than the sketch can certify, the second pass drops its
+    *     candidate filter (one full keyed histogram — the w19 gate
+    *     shape);
     *  2. keys above `targetRowsPerTask` (default: left total /
     *     defaultParallelism — w14's hot bar) are HOT, capped at the
     *     top max(4*parallelism, 64) by count (the remainder routes
@@ -242,7 +239,8 @@ object JoinOps {
     * collect and the isin literal need a scalar); composite keys:
     * pre-concat or call the sliced form directly. NULL left keys route
     * cold, preserving the exec's null semantics (never match; outer
-    * still pads). */
+    * still pads). SQL reaches this router through the `ASOF JOIN`
+    * syntax under `spark.graft.asof.auto`, at the default target. */
   def asOfJoinAuto(left: DataFrame, right: DataFrame,
                    leftKey: String, rightKey: String,
                    leftTime: String, rightTime: String,
@@ -277,9 +275,8 @@ object JoinOps {
 
   /** Hot-key detection + slice sizing for [[asOfJoinAuto]]: returns the
     * hot keys (capped, count-descending) and the global sliceWidth, or
-    * None when nothing crosses the target.
-    *
-    * Default (sketch) path — two passes, NO key-cardinality shuffle:
+    * None when nothing crosses the target. Two passes, NO
+    * key-cardinality shuffle:
     *
     *  1. one Misra-Gries `mg_topk_agg` pass over `xxhash64(key)` (any
     *     atomic key type sketches through its hash; a hash collision
@@ -297,35 +294,22 @@ object JoinOps {
     *     counts the w19 width arithmetic needs — estimates never size
     *     slices.
     *
-    * CAP CAVEAT (mirroring the exact path's "keys past the cap just
-    * route cold"): the candidate list is truncated at 4*maxHot by MG
-    * ESTIMATED count, and estimate order need not match true-count
-    * order — so when more candidates pass the est filter than the
-    * truncation keeps, a truly-hot key can fall to a near-hot false
-    * candidate and route cold, unsplit. Results stay correct either
-    * way (routing is result-invariant); the superset guarantee — and
-    * the sketch==exact hot-set equality AsOfSkewSpec pins — holds
-    * below the truncation, which needs > 4*max(4*par, 64) concurrent
-    * candidates to breach.
+    * CAP CAVEAT: the candidate list is truncated at 4*maxHot by MG
+    * ESTIMATED count, which need not follow true-count order, so past
+    * the truncation (> 4*max(4*par, 64) candidates) a truly-hot key can
+    * lose to a near-hot false candidate and route cold, unsplit.
+    * Results stay correct (routing is result-invariant); below it the
+    * superset guarantee holds, and AsOfSkewSpec pins the sketch's hot
+    * set against an exact histogram.
     *
-    * The exact twin (`exactHistogram = true`, or the automatic fallback
-    * when an explicit target < total/capacity, where the sketch cannot
-    * certify presence) is the round-16 shape: one full keyed histogram
-    * whose grand total composes for ReuseExchange (pinned in
-    * AsOfSkewSpec — the total's aggregate deliberately references
-    * __mn/__mx so column pruning cannot break the exchange equality),
-    * now with the same top-K cap applied as TakeOrdered inside the
-    * query rather than an unbounded driver collect. Default targets
-    * never fall back: capacity is floored at parallelism, so
-    * total/parallelism >= total/capacity always certifies. */
+    * Fallback: an explicit target below total/capacity is finer than
+    * the sketch can certify, so pass 2 drops the candidate filter and
+    * aggregates every row — one full keyed histogram, the w19 gate
+    * shape. Default targets never fall back: capacity is floored at
+    * parallelism, so total/parallelism >= total/capacity always
+    * certifies. */
   private[graft] def asOfSkewPlan(left: DataFrame, leftKey: String,
-      leftTime: String, targetRowsPerTask: Long,
-      exactHistogram: Boolean = false,
-      sketchCapacity: Int = 4096): Option[(Seq[Any], Long)] = {
-    import org.apache.spark.sql.types.TimestampType
-    def micros(c: String): Column =
-      if (left.schema(c).dataType == TimestampType) unix_micros(col(c))
-      else col(c).cast("long")
+      leftTime: String, targetRowsPerTask: Long): Option[(Seq[Any], Long)] = {
     val par = left.sparkSession.sparkContext.defaultParallelism
     val maxHot = math.max(4 * par, 64)
     // NULL key/time rows are excluded on purpose: they never match in
@@ -333,55 +317,8 @@ object JoinOps {
     // are ALL null would otherwise surface null mn/mx into the driver
     // arithmetic below
     val filtered = left.filter(
-      col(leftKey).isNotNull && micros(leftTime).isNotNull)
-    // w19's sizing: per hot key span / ceil(n/target); global = MIN so
-    // the hottest key's tasks hit ~target rows
-    def width(rows: Array[org.apache.spark.sql.Row], target: Long): Long =
-      rows.map { r =>
-        val n = r.getLong(1); val span = r.getLong(3) - r.getLong(2) + 1
-        val nSlices = math.max(1L, math.ceil(n.toDouble / target).toLong)
-        math.max(1L, math.ceil(span.toDouble / nSlices).toLong)
-      }.min
-
-    def exactPlan(): Option[(Seq[Any], Long)] = {
-      // the grand total joins back as a broadcast one-row frame, and
-      // the total's aggregate deliberately references __mn/__mx too
-      // (as __gmn/__gmx, selected into the collect and ignored) so
-      // column pruning cannot narrow its subtree — pruned, the two
-      // exchanges stop being equal and ReuseExchange never fires,
-      // which silently plans TWO full input scans (measured, round
-      // 16; the reuse shape is pinned in AsOfSkewSpec)
-      val hist = filtered
-        .groupBy(col(leftKey).as("__k"))
-        .agg(count(lit(1)).as("__n"),
-          min(micros(leftTime)).as("__mn"),
-          max(micros(leftTime)).as("__mx"))
-      val totalDf = hist.agg(
-        coalesce(sum(col("__n")), lit(0L)).as("__total"),
-        min(col("__mn")).as("__gmn"), max(col("__mx")).as("__gmx"))
-      val targetCol =
-        if (targetRowsPerTask > 0) lit(targetRowsPerTask)
-        else greatest(expr(s"__total div $par"), lit(1L))
-      // top-K by count INSIDE the query (TakeOrdered, not a global
-      // sort): with a caller-supplied small target the unbounded
-      // collect was key-cardinality-sized (advice r16); the cap keeps
-      // it metadata-scale, and keys past the cap just route cold
-      // secondary sort on the key: count ties at the cap boundary must
-      // pick the same hot set on every run/engine (review r17)
-      val hot = hist.crossJoin(broadcast(totalDf))
-        .filter(col("__n") > targetCol)
-        .select(col("__k"), col("__n"), col("__mn"), col("__mx"),
-          targetCol.as("__target"), col("__gmn"), col("__gmx"))
-        .orderBy(col("__n").desc, col("__k").asc).limit(maxHot).collect()
-      if (hot.isEmpty) None
-      else {
-        val target = math.max(1L, hot.head.getLong(4))
-        Some((hot.map(_.get(0)).toSeq, width(hot, target)))
-      }
-    }
-
-    if (exactHistogram) return exactPlan()
-    val cap = math.max(sketchCapacity, par)
+      col(leftKey).isNotNull && micros(left, leftTime).isNotNull)
+    val cap = math.max(4096, par)
     val sk = filtered.select(xxhash64(col(leftKey)).as("__h"))
       .agg(expr(s"mg_topk_agg(__h, $cap)").as("__mg"),
         count(lit(1)).as("__total")).head()
@@ -391,22 +328,45 @@ object JoinOps {
       if (targetRowsPerTask > 0) targetRowsPerTask
       else math.max(total / par, 1L)
     val err = total / cap // MG bound: true(x) - est(x) <= total/cap
-    if (target < err) return exactPlan() // only reachable with explicit target
-    val cand = sk.getMap[Long, Long](0).toSeq
-      .filter(_._2 > target - err)
-      .sortBy { case (h, c) => (-c, h) }.take(4 * maxHot).map(_._1)
-    if (cand.isEmpty) return None
-    val spans = filtered
-      .filter(xxhash64(col(leftKey)).isInCollection(cand))
+    val rows =
+      if (target < err) filtered // only reachable with explicit target
+      else {
+        val cand = sk.getMap[Long, Long](0).toSeq
+          .filter(_._2 > target - err)
+          .sortBy { case (h, c) => (-c, h) }.take(4 * maxHot).map(_._1)
+        if (cand.isEmpty) return None
+        filtered.filter(xxhash64(col(leftKey)).isInCollection(cand))
+      }
+    // top-K by count INSIDE the query (TakeOrdered, not a global sort),
+    // so the collect stays metadata-scale even when a small target lets
+    // thousands of keys through; keys past the cap just route cold. The
+    // secondary sort on the key makes count ties at the cap boundary
+    // pick the same hot set on every run
+    val hot = rows
       .groupBy(col(leftKey).as("__k"))
       .agg(count(lit(1)).as("__n"),
-        min(micros(leftTime)).as("__mn"),
-        max(micros(leftTime)).as("__mx"))
+        min(micros(left, leftTime)).as("__mn"),
+        max(micros(left, leftTime)).as("__mx"))
       .filter(col("__n") > lit(target))
       .orderBy(col("__n").desc, col("__k").asc).limit(maxHot).collect()
-    if (spans.isEmpty) None
-    else Some((spans.map(_.get(0)).toSeq, width(spans, target)))
+    if (hot.isEmpty) None
+    else {
+      // w19's sizing: per hot key span / ceil(n/target); global = MIN so
+      // the hottest key's tasks hit ~target rows
+      val width = hot.map { r =>
+        val n = r.getLong(1); val span = r.getLong(3) - r.getLong(2) + 1
+        val nSlices = math.max(1L, math.ceil(n.toDouble / target).toLong)
+        math.max(1L, math.ceil(span.toDouble / nSlices).toLong)
+      }.min
+      Some((hot.map(_.get(0)).toSeq, width))
+    }
   }
+
+  /** a time column as a long in its own units (micros for timestamps) */
+  private def micros(df: DataFrame, c: String): Column =
+    if (df.schema(c).dataType == org.apache.spark.sql.types.TimestampType)
+      unix_micros(col(c))
+    else col(c).cast("long")
 
   /** Binned range join: pairs (l, r) with
     * rightTime in [leftTime - windowSec, leftTime]. Instead of an

@@ -86,9 +86,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   *    dominate (measured: interpreted output projection = 0.24% of
   *    e24's wall, SURVEY.md).
   *
-  * Build the node with [[AsOfJoin.build]], the one constructor every
-  * front end shares (`JoinOps.asOfJoin`, the `asof_join` table function,
-  * the `ASOF JOIN` syntax).
+  * Build the node with [[AsOfJoin.build]], the one constructor both
+  * front ends share (`JoinOps.asOfJoin` and the `ASOF JOIN` syntax).
   */
 case class AsOfJoin(
     left: LogicalPlan, right: LogicalPlan,
@@ -172,9 +171,9 @@ object AsOfJoin {
       leftOuter, forward, tolerance, strict)
   }
 
-  /** The analysis-time skew route shared by the `asof_join_auto` table
-    * functions and the `ASOF JOIN` syntax under `spark.graft.asof.auto`:
-    * hands a built node's inputs to `JoinOps.asOfJoinAuto` (hot keys
+  /** The analysis-time skew route of the `ASOF JOIN` syntax under
+    * `spark.graft.asof.auto`: hands a built node's inputs to
+    * `JoinOps.asOfJoinAuto` at its default target (hot keys
     * time-sliced, cold keys on the plain node). Hot-key detection needs
     * runtime statistics, so this RUNS the detection jobs on the driver
     * during analysis — plan-only operations (EXPLAIN, re-analysing a
@@ -187,7 +186,7 @@ object AsOfJoin {
     * columns by name, and a side may carry duplicate names. The result's
     * output is positionally aligned with `aoj.output` — same names,
     * fresh exprIds. The router requires an atomic key. */
-  def routeAuto(aoj: AsOfJoin, targetRowsPerTask: Long): LogicalPlan = {
+  def routeAuto(aoj: AsOfJoin): LogicalPlan = {
     val spark = SparkSession.active
     def side(p: LogicalPlan, tag: String, key: Expression,
              time: Expression) =
@@ -201,8 +200,8 @@ object AsOfJoin {
       rightTime = "__rt",
       rightVals = aoj.right.output.indices.map(i => s"__r$i"),
       leftOuter = aoj.leftOuter, forward = aoj.forward,
-      tolerance = aoj.tolerance, strict = aoj.strict,
-      targetRowsPerTask = targetRowsPerTask).queryExecution.analyzed
+      tolerance = aoj.tolerance, strict = aoj.strict)
+      .queryExecution.analyzed
     val byName = routed.output.map(a => a.name -> a).toMap
     val nLeft = aoj.left.output.size
     Project(aoj.output.zipWithIndex.map { case (a, i) =>

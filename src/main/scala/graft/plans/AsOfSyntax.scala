@@ -3,17 +3,16 @@ package graft.plans
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
-import org.apache.spark.sql.catalyst.expressions.{Alias, CreateStruct, EqualTo, Expression, ExpressionInfo, GreaterThan, GreaterThanOrEqual, If, IsNull, LeafExpression, LessThan, LessThanOrEqual, Literal, Or, PredicateHelper, Unevaluable}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Cast, CreateStruct, EqualTo, Expression, ExpressionInfo, GreaterThan, GreaterThanOrEqual, If, IsNull, LeafExpression, LessThan, LessThanOrEqual, Literal, Or, PredicateHelper, Unevaluable}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, IntegerType, LongType, ShortType, StructType}
 
-/** Parser-level `ASOF JOIN` syntax — the last rung of the SQL frontend
-  * ladder for the native [[AsOfJoin]] operator. e25/e32 gave `spark.sql`
-  * users a table-valued function; this gives them DuckDB's native join
-  * syntax, so the SAME query text runs verbatim on both engines:
+/** Parser-level `ASOF JOIN` syntax — the SQL frontend for the native
+  * [[AsOfJoin]] operator. It gives `spark.sql` users DuckDB's native
+  * join syntax, so the SAME query text runs verbatim on both engines:
   *
   * {{{
   *   SELECT ... FROM purchases p
@@ -25,14 +24,15 @@ import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, IntegerType,
   *                                      --   (graft extension, not DuckDB)
   * }}}
   *
-  * Skew: with `SET spark.graft.asof.auto=true` (and optionally
-  * `spark.graft.asof.auto.target=N` rows per task) the SAME text routes
-  * through [[AsOfJoin.routeAuto]] — hot keys detected by the
-  * Misra-Gries sketch pass and time-sliced, cold keys on the native
-  * plan, identical results by construction. The detection runs at
-  * ANALYSIS time (the asof_join_auto TVF's documented trade), so
-  * EXPLAIN over the text executes the detection scans while the conf is
-  * on; composite (multi-equality) keys keep the plain native node.
+  * Skew: with `SET spark.graft.asof.auto=true` the SAME text routes
+  * through [[AsOfJoin.routeAuto]] at the default target (left rows /
+  * parallelism) — hot keys detected by the Misra-Gries sketch pass and
+  * time-sliced, cold keys on the native plan, identical results by
+  * construction. The detection runs at ANALYSIS time, so EXPLAIN over
+  * the text executes the detection scans while the conf is on;
+  * composite (multi-equality) keys keep the plain native node. A
+  * caller that needs an explicit target calls
+  * `JoinOps.asOfJoinAuto(targetRowsPerTask = ...)`.
   *
   * Mechanism (three small pieces, each doing what it is best at):
   *
@@ -55,7 +55,7 @@ import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, IntegerType,
   *     exec orders any orderable type), reads the single time inequality
   *     for direction (`l >= r` backward, `l <= r` forward), and
   *     replaces the Join with the node [[AsOfJoin.build]] makes for the
-  *     Scala API and the TVF too. Output attributes (and outer-side
+  *     Scala API too. Output attributes (and outer-side
   *     nullability) are aliased back to the Join's exactly, so parent
   *     operators' resolved references survive the swap.
   *
@@ -397,6 +397,14 @@ object ResolveAsOfSyntax extends Rule[LogicalPlan] with PredicateHelper {
             "side-separable equalities and ONE time inequality; cannot " +
             s"place `${other.sql}`")
         }
+        // implicit coercion casts come off (a user-written CAST stays), so
+        // a string key against a bigint one fails in AsOfJoin.build,
+        // naming both columns, instead of casting in a running task
+        def uncoerced(e: Expression): Expression = e match {
+          case c: Cast if c.getTagValue(Cast.USER_SPECIFIED_CAST).isEmpty =>
+            uncoerced(c.child)
+          case other => other
+        }
         val (ltE, rtE, fwd, strict) = time.getOrElse(fail(
           "no time inequality (l.t >= r.t, l.t <= r.t, or the strict " +
             "forms) in the ON clause"))
@@ -423,23 +431,23 @@ object ResolveAsOfSyntax extends Rule[LogicalPlan] with PredicateHelper {
             val anyNull = parts.map(IsNull(_): Expression).reduce(Or(_, _))
             If(anyNull, Literal.create(null, struct.dataType), struct)
           }
-        val aoj = AsOfJoin.build(l, r, mkKey(eqs.map(_._1).toSeq),
-          mkKey(eqs.map(_._2).toSeq), ltE, rtE, leftOuter, fwd, tol, strict,
-          fail)
+        val aoj = AsOfJoin.build(l, r,
+          mkKey(eqs.map(e => uncoerced(e._1)).toSeq),
+          mkKey(eqs.map(e => uncoerced(e._2)).toSeq),
+          uncoerced(ltE), uncoerced(rtE), leftOuter, fwd, tol, strict, fail)
         // spark.graft.asof.auto=true routes the SAME syntax through the
-        // hot-key slicing router (e42/e43's machinery), so a user writing
+        // hot-key slicing router (e42's machinery), so a user writing
         // the ASOF JOIN text with one hot key does not get the unsplit
         // native plan and a serialized task. Conf-gated because the
-        // routing detects hot keys AT ANALYSIS TIME (the same trade the
-        // asof_join_auto TVF documents): EXPLAIN over the text executes
-        // the detection scans. Composite (struct) keys keep the native
-        // node — the router requires an atomic key for its isin literal.
+        // routing detects hot keys AT ANALYSIS TIME: EXPLAIN over the
+        // text executes the detection scans. Composite (struct) keys
+        // keep the native node — the router requires an atomic key for
+        // its isin literal.
         val autoOn = conf.getConfString("spark.graft.asof.auto",
           "false").toBoolean
         val planned =
           if (autoOn && !aoj.leftKey.dataType.isInstanceOf[StructType])
-            AsOfJoin.routeAuto(aoj,
-              conf.getConfString("spark.graft.asof.auto.target", "0").toLong)
+            AsOfJoin.routeAuto(aoj)
           else aoj
         // back onto the Join's own exprIds (the node fresh-aliases the
         // right side), so parents' resolved references survive the swap;

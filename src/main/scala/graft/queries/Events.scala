@@ -896,13 +896,13 @@ object Events {
           ON p.user_id = c.user_id AND p.ts >= c.ts""")),
 
     // ---- as-of join through the SQL FRONTEND ---------------------------
-    //      e24's exact query, but the caller is a pure spark.sql user:
-    //      the asof_join TABLE FUNCTION (injectTableFunction +
-    //      ResolveAsOfJoin, graft/plans/AsOfJoinSql.scala) resolves two
-    //      temp views into the same AsOfJoinExec plan the Scala API
-    //      builds — the SQL entry point the round-12 verdict flagged as
-    //      the one custom operator without one. Same DuckDB ASOF oracle,
-    //      so a green gate pins parser→TVF→strategy→exec end-to-end.
+    //      e24's exact query, but the caller is a pure spark.sql user
+    //      joining two named temp views with the ASOF JOIN syntax
+    //      (GraftSqlParser + ResolveAsOfSyntax, graft/plans/
+    //      AsOfSyntax.scala): the views resolve into the same
+    //      AsOfJoinExec plan the Scala API builds. Same DuckDB ASOF
+    //      oracle, so a green gate pins parser→rule→strategy→exec
+    //      end-to-end over catalog relations.
     Q("e25_asof_sql_tvf",
       (s, d) => {
         val ev = Tables.events(s, d)
@@ -912,8 +912,11 @@ object Events {
         ev.filter(col("event_type") === "click")
           .select(col("user_id"), col("ts"), col("value"))
           .createOrReplaceTempView("e25_clicks")
-        s.sql("""SELECT * FROM asof_join('e25_purchases', 'e25_clicks',
-                   'user_id', 'user_id', 'ts', 'ts', 'ts', 'value')""")
+        s.sql("""SELECT p.event_id, p.user_id, p.ts,
+                   c.ts AS asof_ts, c.value AS asof_value
+                 FROM e25_purchases p
+                 ASOF JOIN e25_clicks c
+                   ON p.user_id = c.user_id AND p.ts >= c.ts""")
       },
       Some("""
         SELECT p.event_id, p.user_id, p.ts,
@@ -961,7 +964,7 @@ object Events {
     //      (key ASC, time DESC) and the one merge comparison flipped;
     //      oracle is DuckDB ASOF with the inequality reversed
     //      (p.ts <= c.ts). JoinOpsSpec pins native == composed on the
-    //      null-mixed fixture and the SQL TVF route (asof_join_forward).
+    //      null-mixed fixture.
     Q("e27_asof_forward",
       (s, d) => {
         val ev = Tables.events(s, d)
@@ -1027,7 +1030,7 @@ object Events {
             AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts
         GROUP BY p.event_id, p.user_id, p.ts, p.value""")),
 
-    // ---- STRING-keyed as-of join (native, via the SQL TVF) --------------
+    // ---- STRING-keyed as-of join (native, via the ASOF JOIN syntax) -----
     //      the trades/quotes reality check: symbols are STRINGS, and
     //      DuckDB's ASOF and pandas merge_asof both take them directly —
     //      until round 14 the native exec require()d bigint keys, forcing
@@ -1036,9 +1039,10 @@ object Events {
     //      ordering (AsOfJoinPlan.scala — key VALUES are copied out of
     //      the reused row buffers, the bug a string key would otherwise
     //      hit); this gate derives a symbol-like key ('u' || user_id) on
-    //      both sides and runs it through the TVF route — analyzer
-    //      resolution rule, type checks, strategy, exec — against the
-    //      same DuckDB ASOF oracle keyed on the same derived string.
+    //      both sides and runs it through the ASOF JOIN syntax —
+    //      analyzer resolution rule, type checks, strategy, exec —
+    //      against the same DuckDB ASOF oracle keyed on the same derived
+    //      string.
     //      AsOfJoinPropertySpec pins the Scala-API route and equality
     //      with the composed form on string keys incl. null keys.
     Q("e29_asof_string_key",
@@ -1052,8 +1056,10 @@ object Events {
           .select(concat(lit("u"), col("user_id")).as("sym"),
             col("ts"), col("value"))
           .createOrReplaceTempView("e29_clicks")
-        s.sql("""SELECT * FROM asof_join('e29_purchases', 'e29_clicks',
-                   'sym', 'sym', 'ts', 'ts', 'ts', 'value')""")
+        s.sql("""SELECT p.event_id, p.sym, p.ts,
+                   c.ts AS asof_ts, c.value AS asof_value
+                 FROM e29_purchases p
+                 ASOF JOIN e29_clicks c ON p.sym = c.sym AND p.ts >= c.ts""")
       },
       Some("""
         SELECT p.event_id, p.sym, p.ts,
@@ -1131,24 +1137,25 @@ object Events {
                         WHERE event_type = 'click') c
           ON p.user_id = c.user_id AND p.ts >= c.ts""")),
 
-    // ---- as-of TVF with INLINE SUBQUERIES + tolerance --------------------
-    //      closes the round-13 "SQL users must create temp views and
-    //      can't inline subqueries" friction: table arguments are
-    //      dispatched on shape (identifier chain -> relation lookup,
-    //      anything else -> CatalystSqlParser.parsePlan, resolved in the
-    //      same analyzer fixed point), and the tolerance rides as the
-    //      ONE integer literal type-dispatched from the string payload
-    //      list. This is e30's exact query — bound INSIDE the join, no
-    //      temp views, pure spark.sql end to end — against e30's oracle.
+    // ---- as-of SQL with INLINE SUBQUERIES + tolerance --------------------
+    //      e30's exact query — bound INSIDE the join, no per-side temp
+    //      views, pure spark.sql end to end — against e30's oracle, with
+    //      the ON condition written right-side-first (c.user_id =
+    //      p.user_id AND c.ts <= p.ts): the resolution rule classifies
+    //      each comparison by the side its columns come from, so operand
+    //      order must not change the key pairing or the (backward)
+    //      direction. TOLERANCE rides into the exec's native bound.
     Q("e32_asof_tvf_inline",
       (s, d) => {
         Tables.events(s, d).createOrReplaceTempView("e32_events")
-        s.sql("""SELECT * FROM asof_join(
-          'SELECT event_id, user_id, ts FROM e32_events
-             WHERE event_type = "purchase"',
-          'SELECT user_id, ts, value FROM e32_events
-             WHERE event_type = "click"',
-          'user_id', 'user_id', 'ts', 'ts', 600000000, 'ts', 'value')""")
+        s.sql("""SELECT p.event_id, p.user_id, p.ts,
+            c.ts AS asof_ts, c.value AS asof_value
+          FROM (SELECT event_id, user_id, ts FROM e32_events
+                WHERE event_type = 'purchase') p
+          ASOF JOIN (SELECT user_id, ts, value FROM e32_events
+                     WHERE event_type = 'click') c
+            ON c.user_id = p.user_id AND c.ts <= p.ts
+            TOLERANCE 600000000""")
       },
       Some("""
         SELECT p.event_id, p.user_id, p.ts,
@@ -1398,10 +1405,10 @@ object Events {
     // ---- AUTOMATIC skew routing for as-of ---------------------------------
     //      e36 proved the mitigation (manual time-slicing, w19-sized);
     //      this gate runs JoinOps.asOfJoinAuto, which derives the w19
-    //      plan itself (round-17: a Misra-Gries sketch pass by default —
-    //      no key-cardinality shuffle — with the exact histogram as the
-    //      automatic fallback when the explicit target is finer than
-    //      the sketch certifies, as this gate's target=8 is at sf0.1),
+    //      plan itself (round-17: a Misra-Gries sketch pass — no
+    //      key-cardinality shuffle — whose exact second pass drops its
+    //      candidate filter when the explicit target is finer than the
+    //      sketch certifies, as this gate's target=8 is at sf0.1),
     //      routes keys above targetRowsPerTask through the sliced form
     //      at the planned width, and leaves cold keys on the cost-based
     //      native path. The low target forces real routing on the sf
@@ -1432,7 +1439,8 @@ object Events {
           ON p.user_id = c.user_id AND p.ts >= c.ts""")),
 
     // ---- auto-skew as-of through PURE SQL (round-17) ----------------------
-    //      the asof_join_auto TVF: a spark.sql user inherits hot-key
+    //      the ASOF JOIN syntax under spark.graft.asof.auto, over two
+    //      named temp views: a spark.sql user inherits hot-key
     //      splitting with no Scala in sight. The fixture key collapses
     //      75% of users onto k=0 (a CASE both engines evaluate
     //      identically), so the DEFAULT target (total/parallelism)
@@ -1443,12 +1451,23 @@ object Events {
     //      manufactures cross-user time ties, and duplicate (key, rt)
     //      pairs would make the as-of tie-break unspecified in BOTH
     //      engines; MAX(value) restores a deterministic oracle.
-    //      AsOfSkewSpec asserts the sliced (struct-keyed) node appears
-    //      in this SQL text's plan for the hot key.
+    //      AsOfSyntaxSpec asserts the sliced (struct-keyed) node appears
+    //      in a routed ASOF JOIN plan for the hot key.
     Q("e43_asof_auto_sql",
       (s, d) => {
         Tables.events(s, d).createOrReplaceTempView("events")
-        s.sql(asofAutoTvfSql)
+        s.sql("""CREATE OR REPLACE TEMP VIEW e43_purchases AS
+          SELECT event_id,
+            (CASE WHEN user_id % 4 > 0 THEN 0 ELSE user_id END) AS k, ts
+          FROM events WHERE event_type = 'purchase'""")
+        s.sql("""CREATE OR REPLACE TEMP VIEW e43_clicks AS
+          SELECT (CASE WHEN user_id % 4 > 0 THEN 0 ELSE user_id END) AS k,
+            ts, MAX(value) AS value
+          FROM events WHERE event_type = 'click' GROUP BY 1, 2""")
+        withAsofAuto(s)(s.sql("""
+          SELECT p.event_id, p.k, p.ts, c.ts AS asof_ts, c.value AS asof_value
+          FROM e43_purchases p
+          ASOF INNER JOIN e43_clicks c ON p.k = c.k AND p.ts >= c.ts"""))
       },
       Some("""
         SELECT p.event_id, p.k, p.ts, c.ts AS asof_ts, c.value AS asof_value
@@ -1465,20 +1484,19 @@ object Events {
           ON p.k = c.k AND p.ts >= c.ts""")),
 
     // ---- FORWARD auto-skew as-of through PURE SQL (round-18) -----------
-    //      asof_join_auto_forward — the auto TVF matrix completed to all
-    //      eight direction/shape combos (r17 carried 3). Same collapsed-
-    //      key fixture as e43 (75% of users onto k=0, so the DEFAULT
-    //      target routes for real at any SF), direction flipped: each
-    //      purchase takes the user's EARLIEST click at-or-after it, and
-    //      the oracle is e27's reversed-inequality DuckDB ASOF
-    //      (p.ts <= c.ts) over the collapsed key. AsOfSkewSpec's matrix
-    //      test pins every new auto name against its non-auto sibling
-    //      with routing live.
+    //      e45's text with the inequality reversed (p.ts <= c.ts),
+    //      under spark.graft.asof.auto. Same collapsed-key fixture as
+    //      e43 (75% of users onto k=0, so the DEFAULT target routes for
+    //      real at any SF), direction flipped: each purchase takes the
+    //      user's EARLIEST click at-or-after it, and the oracle is e27's
+    //      reversed-inequality DuckDB ASOF over the collapsed key.
+    //      AsOfSkewSpec's matrix test pins every outer x forward x
+    //      strict shape of the routed syntax against the unrouted one.
     Q("e44_asof_auto_fwd_sql",
       (s, d) => {
         Tables.events(s, d).createOrReplaceTempView("events")
-        s.sql(asofAutoTvfSql.replace("asof_join_auto",
-          "asof_join_auto_forward"))
+        withAsofAuto(s)(s.sql(asofSyntaxCollapsedSql
+          .replace("p.ts >= c.ts", "p.ts <= c.ts")))
       },
       Some("""
         SELECT p.event_id, p.k, p.ts, c.ts AS asof_ts, c.value AS asof_value
@@ -1495,30 +1513,36 @@ object Events {
           ON p.k = c.k AND p.ts <= c.ts""")),
 
     // ---- parser ASOF JOIN syntax under auto-skew routing (round-18) ----
-    //      spark.graft.asof.auto=true: the e34 SYNTAX (not the TVF) with
-    //      e43's collapsed hot key now plans the sliced+native union —
-    //      closing the r17 gap where the same text serialized the hot
-    //      key onto one task. The conf is set only around the s.sql call
-    //      (analysis is eager, and routing happens at analysis), then
-    //      restored, so no other gate inherits the analysis-time
-    //      detection scans. Oracle: the IDENTICAL text on DuckDB (its
-    //      native ASOF JOIN) — routing must never change results.
+    //      spark.graft.asof.auto=true: the e34 SYNTAX over inline
+    //      subqueries with e43's collapsed hot key plans the
+    //      sliced+native union — closing the r17 gap where the same
+    //      text serialized the hot key onto one task. Oracle: the
+    //      IDENTICAL text on DuckDB (its native ASOF JOIN) — routing
+    //      must never change results.
     Q("e45_asof_syntax_auto",
       (s, d) => {
         Tables.events(s, d).createOrReplaceTempView("events")
-        val prev = s.conf.getOption("spark.graft.asof.auto")
-        s.conf.set("spark.graft.asof.auto", "true")
-        try s.sql(asofSyntaxCollapsedSql)
-        finally prev.fold(s.conf.unset("spark.graft.asof.auto"))(
-          s.conf.set("spark.graft.asof.auto", _))
+        withAsofAuto(s)(s.sql(asofSyntaxCollapsedSql))
       },
       Some(asofSyntaxCollapsedSql))
   )
 
+  /** runs `body` with `spark.graft.asof.auto` on, then restores the
+    * prior value: `s.sql` analyzes eagerly and routing happens at
+    * analysis, so the returned frame keeps its routed plan and no
+    * other gate inherits the analysis-time detection scans */
+  private def withAsofAuto(s: SparkSession)(body: => DataFrame): DataFrame = {
+    val prev = s.conf.getOption("spark.graft.asof.auto")
+    s.conf.set("spark.graft.asof.auto", "true")
+    try body
+    finally prev.fold(s.conf.unset("spark.graft.asof.auto"))(
+      s.conf.set("spark.graft.asof.auto", _))
+  }
+
   /** e45's text — valid verbatim on BOTH engines (Spark via the graft
     * parser extension, DuckDB natively), like e34's; the collapsed key
     * manufactures one hot key so conf-gated auto routing fires */
-  private[graft] lazy val asofSyntaxCollapsedSql = """
+  private lazy val asofSyntaxCollapsedSql = """
     SELECT p.event_id, p.k, p.ts, c.ts AS asof_ts, c.value AS asof_value
     FROM (SELECT event_id,
             (CASE WHEN user_id % 4 > 0 THEN 0 ELSE user_id END) AS k,
@@ -1530,18 +1554,6 @@ object Events {
                FROM events WHERE event_type = 'click'
                GROUP BY 1, 2) c
       ON p.k = c.k AND p.ts >= c.ts"""
-
-  /** one string, two plan shapes: the e43 gate runs it for results, the
-    * AsOfSkewSpec plan pin runs it for shape */
-  private[graft] lazy val asofAutoTvfSql = """
-    SELECT * FROM asof_join_auto(
-      'SELECT event_id,
-         (CASE WHEN user_id % 4 > 0 THEN 0 ELSE user_id END) AS k, ts
-       FROM events WHERE event_type = ''purchase''',
-      'SELECT (CASE WHEN user_id % 4 > 0 THEN 0 ELSE user_id END) AS k,
-         ts, MAX(value) AS value
-       FROM events WHERE event_type = ''click'' GROUP BY 1, 2',
-      'k', 'k', 'ts', 'ts', 'ts', 'value')"""
 
   private lazy val asofSyntaxFwdSql = """
     SELECT p.event_id, p.user_id, p.ts,

@@ -53,6 +53,14 @@ object StreamingQueries {
     normalizeTs(s.readStream.schema(rawSchema).parquet(s"$d/events.parque[t]"))
   }
 
+  /** the child session every stream is built and run in (why: see
+    * [[replay]]), sized to 8 shuffle and state-store partitions */
+  private def childSession(s: SparkSession): SparkSession = {
+    val child = s.newSession()
+    child.conf.set("spark.sql.shuffle.partitions", "8")
+    child
+  }
+
   /** run a streaming frame to completion on the bounded source and hand
     * back the sink contents. AvailableNow processes all currently-
     * available files then stops — the batch-replay trigger.
@@ -74,8 +82,7 @@ object StreamingQueries {
   private def replay(s: SparkSession, name: String, mode: String,
                      confs: Map[String, String] = Map.empty)
                     (build: SparkSession => DataFrame): DataFrame = {
-    val child = s.newSession()
-    child.conf.set("spark.sql.shuffle.partitions", "8")
+    val child = childSession(s)
     confs.foreach { case (k, v) => child.conf.set(k, v) }
     val q = build(child).writeStream.format("memory").queryName(name)
       .outputMode(mode).trigger(Trigger.AvailableNow()).start()
@@ -301,8 +308,7 @@ object StreamingQueries {
       (s, d) => {
         val base = scratchRoot.resolve(
           "st08-" + d.replaceAll("[^A-Za-z0-9.]", "_")).toString
-        val child = s.newSession()
-        child.conf.set("spark.sql.shuffle.partitions", "8")
+        val child = childSession(s)
         val q = EventStreams.dedupStream(eventsStream(child, d),
             Seq("user_id", "event_type"), "ts", unbounded)
           .select(col("user_id"), col("event_type"))
@@ -336,8 +342,7 @@ object StreamingQueries {
       (s, d) => {
         val base = scratchRoot.resolve(
           "st09-" + d.replaceAll("[^A-Za-z0-9.]", "_")).toString
-        val child = s.newSession()
-        child.conf.set("spark.sql.shuffle.partitions", "8")
+        val child = childSession(s)
         val stream = child.readStream
           .schema(Tables.events(s, d).schema)
           .option("maxFilesPerTrigger", "1")
@@ -441,8 +446,7 @@ object StreamingQueries {
               .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
               .forEach(x => java.nio.file.Files.delete(x))
         }
-        val child = s.newSession()
-        child.conf.set("spark.sql.shuffle.partitions", "8")
+        val child = childSession(s)
         def startRun() = EventStreams.dedupStream(
             child.readStream.schema(Tables.events(s, d).schema)
               .option("maxFilesPerTrigger", "1")
@@ -505,8 +509,7 @@ object StreamingQueries {
       (s, d) => {
         val base = scratchRoot.resolve(
           "st13-" + d.replaceAll("[^A-Za-z0-9.]", "_"))
-        val child = s.newSession()
-        child.conf.set("spark.sql.shuffle.partitions", "8")
+        val child = childSession(s)
         val stream = child.readStream.schema(Tables.events(s, d).schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(base.resolve("src").toString)
@@ -583,8 +586,7 @@ object StreamingQueries {
               .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
               .forEach(x => java.nio.file.Files.delete(x))
         }
-        val child = s.newSession()
-        child.conf.set("spark.sql.shuffle.partitions", "8")
+        val child = childSession(s)
         val q = child.readStream.schema(Tables.events(s, d).schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(base.resolve("src").toString)
@@ -659,8 +661,7 @@ object StreamingQueries {
       (s, d) => {
         val base = scratchRoot.resolve(
           "st15-" + d.replaceAll("[^A-Za-z0-9.]", "_"))
-        val child = s.newSession()
-        child.conf.set("spark.sql.shuffle.partitions", "8")
+        val child = childSession(s)
         val stream = child.readStream.schema(Tables.events(s, d).schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(base.resolve("src").toString)
@@ -1061,8 +1062,7 @@ object StreamingQueries {
       (s, d) => {
         val base = scratchRoot.resolve(
           "st25-" + d.replaceAll("[^A-Za-z0-9.]", "_")).toString
-        val child = s.newSession()
-        child.conf.set("spark.sql.shuffle.partitions", "8")
+        val child = childSession(s)
         val stream = child.readStream
           .schema(Tables.events(s, d).schema)
           .option("maxFilesPerTrigger", "1")
@@ -1146,8 +1146,7 @@ object StreamingQueries {
         org.apache.spark.util.LongAccumulator) => DataFrame): DataFrame = {
     val base = scratchRoot.resolve(
       tag + "-" + d.replaceAll("[^A-Za-z0-9.]", "_")).toString
-    val child = s.newSession()
-    child.conf.set("spark.sql.shuffle.partitions", "8")
+    val child = childSession(s)
     import child.implicits._
     val input = child.readStream
       .schema(Tables.events(s, d).schema)

@@ -205,38 +205,6 @@ class AsOfSkewSpec extends SparkSpec {
       "t", "rt", rightVals = Seq("v"), strict = true)))
   }
 
-  test("the auto histogram is scanned ONCE: the unpruned broadcast " +
-      "total reuses the histogram's exchange") {
-    // pins asOfJoinAuto's one-scan claim, exactly as the operator
-    // composes it: the total aggregate references __mn/__mx too, so
-    // column pruning cannot narrow its subtree — the two exchanges
-    // stay equal and ReuseExchange fires. Drop the __gmn/__gmx
-    // references and this test fails with two independent scans
-    // (measured round 16), which is the silent 2x-input-cost shape at
-    // 100 TB.
-    import org.apache.spark.sql.functions.{broadcast, coalesce, count,
-      expr, greatest, lit, max, min, sum}
-    val (l, _) = skewed(2000, seed = 31)
-    val hist = l.filter(col("k").isNotNull)
-      .groupBy(col("k").as("__k"))
-      .agg(count(lit(1)).as("__n"),
-        min(col("t")).as("__mn"), max(col("t")).as("__mx"))
-    val totalDf = hist.agg(
-      coalesce(sum(col("__n")), lit(0L)).as("__total"),
-      min(col("__mn")).as("__gmn"), max(col("__mx")).as("__gmx"))
-    // select EXACTLY what the operator selects: both sides must need
-    // (count, min, max) for the subtrees to stay prune-identical
-    val sel = hist.crossJoin(broadcast(totalDf))
-      .filter(col("__n") > greatest(expr("__total div 32"), lit(1L)))
-      .select(col("__k"), col("__n"), col("__mn"), col("__mx"),
-        greatest(expr("__total div 32"), lit(1L)).as("__target"),
-        col("__gmn"), col("__gmx"))
-    sel.collect()
-    val p = sel.queryExecution.executedPlan.toString
-    assert(p.toLowerCase.contains("reused"),
-      s"no exchange reuse — the planner scanned the input twice:\n$p")
-  }
-
   test("auto routing survives a hot key whose times are all NULL") {
     val s = spark
     import s.implicits._
@@ -266,31 +234,55 @@ class AsOfSkewSpec extends SparkSpec {
 
   // ---- round-17: sketch-fed detection, caps, SQL reachability ----------
 
+  /** the exact hot-key plan from a plain groupBy histogram over (k, t),
+    * sharing no code with asOfSkewPlan: keys with more than `target`
+    * rows, capped at the top max(4*par, 64) by (count desc, key asc),
+    * and w19's width — the MIN over hot keys of span / ceil(n/target) */
+  private def histogramPlan(l: DataFrame, target: Long): (Set[Any], Long) = {
+    val maxHot = math.max(4 * spark.sparkContext.defaultParallelism, 64)
+    val hot = l.filter(col("k").isNotNull && col("t").isNotNull)
+      .groupBy("k")
+      .agg(count(lit(1)).as("n"), min("t").as("mn"), max("t").as("mx"))
+      .filter(col("n") > target)
+      .orderBy(col("n").desc, col("k").asc).limit(maxHot).collect()
+    val width = hot.map { r =>
+      val slices = (r.getLong(1) + target - 1) / target
+      val span = r.getLong(3) - r.getLong(2) + 1
+      math.max(1L, (span + slices - 1) / slices)
+    }.min
+    (hot.map(_.get(0)).toSet, width)
+  }
+
   test("sketch and exact histogram find the SAME hot set and width") {
     val (l, _) = skewed(3000, seed = 37)
-    val exact = JoinOps.asOfSkewPlan(l, "k", "t",
-      targetRowsPerTask = 50L, exactHistogram = true)
     val sketch = JoinOps.asOfSkewPlan(l, "k", "t", targetRowsPerTask = 50L)
-    assert(exact.isDefined && sketch.isDefined, s"$exact / $sketch")
-    assert(exact.get._1.toSet == sketch.get._1.toSet,
-      s"hot sets diverge: exact=${exact.get._1} sketch=${sketch.get._1}")
-    assert(exact.get._2 == sketch.get._2,
-      s"widths diverge: exact=${exact.get._2} sketch=${sketch.get._2}")
+    assert(sketch.isDefined)
+    val (hot, width) = histogramPlan(l, 50L)
+    assert(sketch.get._1.toSet == hot,
+      s"hot sets diverge: exact=$hot sketch=${sketch.get._1}")
+    assert(sketch.get._2 == width,
+      s"widths diverge: exact=$width sketch=${sketch.get._2}")
   }
 
   test("explicit target finer than the sketch can certify falls back " +
       "to the exact histogram") {
-    val (l, _) = skewed(3000, seed = 41)
-    // capacity floors at parallelism (4 here): err = 3000/4 >> 8, so
-    // the sketch cannot prove every key above 8 rows is present —
-    // the plan must come from the exact twin
-    val fb = JoinOps.asOfSkewPlan(l, "k", "t",
-      targetRowsPerTask = 8L, sketchCapacity = 2)
-    val exact = JoinOps.asOfSkewPlan(l, "k", "t",
-      targetRowsPerTask = 8L, exactHistogram = true)
-    assert(fb.isDefined && exact.isDefined)
-    assert(fb.get._1.toSet == exact.get._1.toSet)
-    assert(fb.get._2 == exact.get._2)
+    val s = spark
+    import s.implicits._
+    // 10000 rows > 4096 x (target + 1): err = 10000/4096 = 2 > target 1,
+    // so the sketch cannot prove every key above 1 row is present. 5000
+    // keys of 2 rows each are ALL hot, more than the sketch holds: a
+    // plan built from sketch candidates would pick its 64 from whichever
+    // keys survived the sketch, while the exact histogram picks keys
+    // 0..63 (count ties break on the key)
+    val rnd = new scala.util.Random(41)
+    val l = (0 until 10000).map(i =>
+      (i.toLong, (i % 5000).toLong, rnd.nextInt(100000).toLong))
+      .toDF("id", "k", "t")
+    val fb = JoinOps.asOfSkewPlan(l, "k", "t", targetRowsPerTask = 1L)
+    assert(fb.isDefined)
+    val (hot, width) = histogramPlan(l, 1L)
+    assert(fb.get._1.toSet == hot)
+    assert(fb.get._2 == width)
   }
 
   test("hot set is capped at top-K by count; routing stays correct") {
@@ -308,13 +300,10 @@ class AsOfSkewSpec extends SparkSpec {
       ((i % 400).toLong, i * 17L + 1, i * 1.0)).toDF("k", "rt", "v")
     val maxHot = math.max(
       4 * spark.sparkContext.defaultParallelism, 64)
-    for (exact <- Seq(false, true)) {
-      val plan = JoinOps.asOfSkewPlan(l, "k", "t",
-        targetRowsPerTask = 1L, exactHistogram = exact)
-      assert(plan.isDefined, s"exact=$exact")
-      assert(plan.get._1.size <= maxHot,
-        s"exact=$exact: hot set ${plan.get._1.size} > cap $maxHot")
-    }
+    val plan = JoinOps.asOfSkewPlan(l, "k", "t", targetRowsPerTask = 1L)
+    assert(plan.isDefined)
+    assert(plan.get._1.size <= maxHot,
+      s"hot set ${plan.get._1.size} > cap $maxHot")
     val native = JoinOps.asOfJoin(l, r, "k", "k", "t", "rt",
       rightVals = Seq("rt", "v"))
     val auto = JoinOps.asOfJoinAuto(l, r, "k", "k", "t", "rt",
@@ -340,118 +329,29 @@ class AsOfSkewSpec extends SparkSpec {
     }
   }
 
-  test("asof_join_auto TVF: the hot key gets the sliced plan through " +
-      "pure SQL, results equal the plain TVF") {
-    val s = spark
-    import s.implicits._
-    val rnd = new scala.util.Random(47)
-    // same shape as the e43 gate's fixture: 40 users, 3/4 of them
-    // collapse onto k=0 inside the TVF's inline CASE
-    val ev = (1 to 2000).map { i =>
-      (i.toLong, 1L + rnd.nextInt(40),
-        new java.sql.Timestamp(1700000000000L + i * 1000L),
-        if (i % 3 == 0) "purchase" else "click", rnd.nextDouble())
-    }.toDF("event_id", "user_id", "ts", "event_type", "value")
-    ev.createOrReplaceTempView("events")
-    try {
-      val auto = spark.sql(graft.queries.Events.asofAutoTvfSql)
-      val nodes = asOfNodes(auto)
-      assert(nodes.size == 2, s"SQL auto routing did not split:\n$nodes")
-      assert(nodes.count(_.leftKey.dataType
-        .isInstanceOf[org.apache.spark.sql.types.StructType]) == 1,
-        s"no sliced (struct-keyed) node:\n$nodes")
-      val plain = spark.sql(graft.queries.Events.asofAutoTvfSql
-        .replace("asof_join_auto", "asof_join"))
-      assert(canon(auto) == canon(plain))
-    } finally spark.catalog.dropTempView("events")
-  }
-
-  test("asof_join_auto TVF optional integers: [tolerance[, target]], " +
-      "and Long.MaxValue tolerance means unbounded") {
-    val s = spark
-    import s.implicits._
-    val ev = (1 to 600).map { i =>
-      (i.toLong, (i % 5).toLong + 1L,
-        new java.sql.Timestamp(1700000000000L + i * 60000L),
-        if (i % 3 == 0) "purchase" else "click", i * 1.0)
-    }.toDF("event_id", "user_id", "ts", "event_type", "value")
-    ev.createOrReplaceTempView("events")
-    try {
-      def run(fn: String, extra: String) = canon(spark.sql(s"""
-        SELECT * FROM $fn(
-          'SELECT event_id, user_id, ts FROM events
-           WHERE event_type = ''purchase''',
-          'SELECT user_id, ts, value FROM events
-           WHERE event_type = ''click''',
-          'user_id', 'user_id', 'ts', 'ts'$extra, 'ts', 'value')"""))
-      // tolerance literal behaves exactly like the plain TVF's
-      assert(run("asof_join_auto", ", 600000000") ==
-        run("asof_join", ", 600000000"))
-      // second integer = targetRowsPerTask: a tiny target must not
-      // change results (routing invariance), only the plan
-      assert(run("asof_join_auto", ", 600000000, 8") ==
-        run("asof_join", ", 600000000"))
-      // Long.MaxValue tolerance normalizes to unbounded — lets a SQL
-      // caller set a target with no real tolerance bound
-      assert(run("asof_join_auto", ", 9223372036854775807, 8") ==
-        run("asof_join", ""))
-      // the NAMED form supersedes the sentinel: 'target=N' sets the
-      // target with no tolerance at all
-      assert(run("asof_join_auto", ", 'target=8'") == run("asof_join", ""))
-      // ... and composes after a real tolerance
-      assert(run("asof_join_auto", ", 600000000, 'target=8'") ==
-        run("asof_join", ", 600000000"))
-      // 'target=N' on a NON-auto family is a loud error, not a payload
-      // column lookup failure
-      val e = intercept[Exception] { run("asof_join", ", 'target=8'") }
-      def msgs(t: Throwable): String =
-        if (t == null) "" else t.getMessage + "\n" + msgs(t.getCause)
-      assert(msgs(e).contains("asof_join_auto family"), msgs(e))
-      // the MaxValue normalization applies to EVERY family (advice r17):
-      // the exec's None is defined as MaxValue internally, so the
-      // non-auto TVF with a MaxValue tolerance must equal the unbounded
-      // form plan-for-plan and row-for-row
-      assert(run("asof_join", ", 9223372036854775807") ==
-        run("asof_join", ""))
-      // case-insensitive column arguments, exactly like the non-auto
-      // siblings (the router resolves names with the session resolver
-      // before the Scala API's case-sensitive schema lookups)
-      val upper = canon(spark.sql("""
-        SELECT * FROM asof_join_auto(
-          'SELECT event_id, user_id, ts FROM events
-           WHERE event_type = ''purchase''',
-          'SELECT user_id, ts, value FROM events
-           WHERE event_type = ''click''',
-          'USER_ID', 'User_Id', 'TS', 'Ts', 'TS', 'VALUE')"""))
-      // payload aliases follow the TYPED spelling, like asof_join's
-      assert(upper.nonEmpty)
-      assert(run("asof_join", "") == upper)
-    } finally spark.catalog.dropTempView("events")
-  }
-
-  test("the full auto TVF matrix (8 names) equals each non-auto " +
-      "sibling with routing live") {
-    // round-18: _forward, _forward_left, _strict_left, _strict_forward,
-    // _strict_forward_left joined the r17 trio — every direction/shape
-    // combination the Scala router supports is now SQL-reachable. Each
-    // auto name must (a) actually route on the Zipf fixture (the
-    // struct-keyed sliced node appears) and (b) equal its non-auto
-    // sibling row-for-row.
+  test("ASOF JOIN under spark.graft.asof.auto: all 8 shapes route, " +
+      "equal conf-off") {
+    // every outer x forward x strict shape of the syntax must (a)
+    // actually route on the Zipf fixture at the default target (the
+    // struct-keyed sliced node appears) and (b) equal the same text
+    // planned with the conf off, row for row
     val (l, r) = skewed(1200, seed = 53)
     l.createOrReplaceTempView("skm_l")
     r.createOrReplaceTempView("skm_r")
     try {
-      for (sfx <- Seq("", "_left", "_forward", "_forward_left", "_strict",
-          "_strict_left", "_strict_forward", "_strict_forward_left")) {
-        def sql(fn: String, opt: String) = spark.sql(s"""
-          SELECT * FROM $fn('skm_l', 'skm_r',
-            'k', 'k', 't', 'rt'$opt, 'rt', 'v')""")
-        val auto = sql(s"asof_join_auto$sfx", ", 'target=50'")
+      for (outer <- Seq(false, true); fwd <- Seq(false, true);
+           strict <- Seq(false, true)) {
+        val shape = s"outer=$outer fwd=$fwd strict=$strict"
+        val op = (if (fwd) "<" else ">") + (if (strict) "" else "=")
+        val text = s"""SELECT l.*, r.rt AS asof_rt, r.v AS asof_v
+          FROM skm_l l ASOF ${if (outer) "LEFT " else ""}JOIN skm_r r
+          ON l.k = r.k AND l.t $op r.rt"""
+        val auto = withConf("spark.graft.asof.auto", "true")(spark.sql(text))
         val nodes = asOfNodes(auto)
-        assert(nodes.size == 2, s"$sfx: routing dead\n$nodes")
+        assert(nodes.size == 2, s"$shape: routing dead\n$nodes")
         assert(nodes.count(_.leftKey.dataType
-          .isInstanceOf[org.apache.spark.sql.types.StructType]) == 1, sfx)
-        assert(canon(auto) == canon(sql(s"asof_join$sfx", "")), sfx)
+          .isInstanceOf[org.apache.spark.sql.types.StructType]) == 1, shape)
+        assert(canon(auto) == canon(spark.sql(text)), shape)
       }
     } finally {
       spark.catalog.dropTempView("skm_l")

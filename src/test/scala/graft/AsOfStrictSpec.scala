@@ -110,17 +110,6 @@ class AsOfStrictSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(fwdSql == run(left, fwd = true, strict = true))
   }
 
-  test("strict TVF variants reach the exec with the flag set") {
-    left.createOrReplaceTempView("ass_l")
-    right.createOrReplaceTempView("ass_r")
-    val tvf = spark.sql(
-      "SELECT k, t, asof_v FROM asof_join_strict(" +
-        "'ass_l', 'ass_r', 'k', 'k', 't', 'rt', 'v')")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2)))
-      .toSeq.sorted
-    assert(tvf == run(left, fwd = false, strict = true))
-  }
-
   test("strict composes with tolerance: staleness measured from the strict match") {
     // at t=20 strict matches v15 (gap 5); tolerance 4 kills it, 5 keeps it
     val keep = graft.operators.JoinOps.asOfJoin(left, right,

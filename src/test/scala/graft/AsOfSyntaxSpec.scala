@@ -143,6 +143,10 @@ class AsOfSyntaxSpec extends SparkSpec {
     // drops; id=1 (a,100) matches 80 (gap 20)
     assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       Seq((1L, 80L), (2L, 200L)))
+    // a bound above Int.MaxValue is a BIGINT literal and still reaches
+    // the exec: nothing is that stale, so the three unbounded matches stay
+    assert(spark.sql("""SELECT l.id FROM asx_l l ASOF JOIN asx_r r
+      ON l.k = r.k AND l.t >= r.rt TOLERANCE 7200000000""").count() == 3)
   }
 
   test("multiple key equalities compose into a struct key") {
@@ -274,18 +278,6 @@ class AsOfSyntaxSpec extends SparkSpec {
 
   // ---- round-18: conf-gated auto-skew routing of the syntax ----------
 
-  private def withAutoConf[T](target: Option[Long])(body: => T): T = {
-    val c = spark.conf
-    val keys = Seq("spark.graft.asof.auto", "spark.graft.asof.auto.target")
-    val saved = keys.map(k => k -> c.getOption(k))
-    try {
-      c.set("spark.graft.asof.auto", "true")
-      target.foreach(t => c.set("spark.graft.asof.auto.target", t.toString))
-      body
-    } finally saved.foreach { case (k, v) =>
-      v.fold(c.unset(k))(c.set(k, _)) }
-  }
-
   private def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
@@ -314,7 +306,7 @@ class AsOfSyntaxSpec extends SparkSpec {
         ASOF JOIN skx_r r ON l.k = r.k AND l.t >= r.rt"""
       val plain = spark.sql(text)
       assert(nodes(plain).size == 1)
-      val routed = withAutoConf(Some(50L))(spark.sql(text))
+      val routed = withConf("spark.graft.asof.auto", "true")(spark.sql(text))
       val ns = nodes(routed)
       assert(ns.size == 2, s"conf routing did not split:\n$ns")
       assert(ns.count(_.leftKey.dataType
@@ -322,15 +314,16 @@ class AsOfSyntaxSpec extends SparkSpec {
       assert(canon(routed) == canon(plain))
       // conf restored -> the same text plans the single native node
       assert(nodes(spark.sql(text)).size == 1,
-        "spark.graft.asof.auto leaked past the withAutoConf block")
+        "spark.graft.asof.auto leaked past the withConf block")
       // outer + tolerance + strict thread through the routed form:
       // parent projections over the routed output must resolve, and
       // results must equal the unrouted plan
       val shaped = """SELECT l.id, r.v FROM skx_l l
         ASOF LEFT JOIN skx_r r ON l.k = r.k AND l.t > r.rt
         TOLERANCE 5000"""
-      assert(canon(withAutoConf(Some(50L))(spark.sql(shaped))) ==
-        canon(spark.sql(shaped)))
+      val shapedRouted =
+        withConf("spark.graft.asof.auto", "true")(spark.sql(shaped))
+      assert(canon(shapedRouted) == canon(spark.sql(shaped)))
     } finally {
       spark.catalog.dropTempView("skx_l")
       spark.catalog.dropTempView("skx_r")
@@ -350,7 +343,7 @@ class AsOfSyntaxSpec extends SparkSpec {
         ASOF JOIN skc_r r
         ON l.k1 = r.k1 AND l.k2 = r.k2 AND l.t >= r.rt
         ORDER BY l.id"""
-      val routed = withAutoConf(None)(spark.sql(text))
+      val routed = withConf("spark.graft.asof.auto", "true")(spark.sql(text))
       // struct key -> asOfJoinAuto's atomic-key contract says native
       assert(nodes(routed).size == 1)
       assert(routed.collect().map(r =>

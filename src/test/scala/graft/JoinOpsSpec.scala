@@ -208,49 +208,8 @@ class JoinOpsSpec extends SparkSpec {
     }
   }
 
-  test("asof_join SQL table function plans AsOfJoinExec, equals the API") {
-    val quotes = Seq(
-      (1L, ts("2024-01-01 10:00:00"), 100.0),
-      (1L, ts("2024-01-01 10:05:00"), 101.0),
-      (2L, ts("2024-01-01 10:03:00"), 50.0))
-      .toDF("qk", "qts", "price")
-    val trades = Seq(
-      (1L, ts("2024-01-01 10:04:00")),
-      (1L, ts("2024-01-01 10:05:00")),
-      (2L, ts("2024-01-01 10:02:00")),
-      (3L, ts("2024-01-01 10:10:00")))
-      .toDF("k", "tts")
-    quotes.createOrReplaceTempView("jos_quotes")
-    trades.createOrReplaceTempView("jos_trades")
-    val sqlDf = spark.sql("""SELECT * FROM asof_join('jos_trades',
-      'jos_quotes', 'k', 'qk', 'tts', 'qts', 'qts', 'price')""")
-    assert(sqlDf.queryExecution.executedPlan.toString.contains("AsOfJoin"),
-      "SQL TVF must plan the custom exec")
-    assert(sqlDf.columns.toSeq == Seq("k", "tts", "asof_qts", "asof_price"),
-      s"output contract: ${sqlDf.columns.toSeq}")
-    val api = JoinOps.asOfJoin(trades, quotes,
-      "k", "qk", "tts", "qts", Seq("qts", "price"))
-    assert(sqlDf.collect().toSet == api.collect().toSet)
-    // the LEFT variant through SQL: all 4 trades survive
-    val sqlLeft = spark.sql("""SELECT * FROM asof_join_left('jos_trades',
-      'jos_quotes', 'k', 'qk', 'tts', 'qts', 'qts', 'price')""")
-    assert(sqlLeft.count() == 4)
-    // the FORWARD variant through SQL equals the forward API
-    val sqlFwd = spark.sql("""SELECT * FROM asof_join_forward('jos_trades',
-      'jos_quotes', 'k', 'qk', 'tts', 'qts', 'qts', 'price')""")
-    val apiFwd = JoinOps.asOfJoin(trades, quotes,
-      "k", "qk", "tts", "qts", Seq("qts", "price"), forward = true)
-    assert(sqlFwd.collect().toSet == apiFwd.collect().toSet)
-    // a misnamed column fails analysis with a pointed message
-    val err = intercept[Exception] {
-      spark.sql("""SELECT * FROM asof_join('jos_trades', 'jos_quotes',
-        'nope', 'qk', 'tts', 'qts', 'price')""").collect()
-    }
-    assert(err.getMessage != null)
-  }
-
-  test("STRING-keyed as-of: native equals composed on the dense " +
-      "null-mixed mix, plans AsOfJoinExec, and works through the TVF") {
+  test("STRING-keyed as-of: native equals composed, plans the exec, " +
+      "runs via ASOF JOIN") {
     // same dense mix as the bigint tests with the key mapped to a
     // symbol-like string ('k3'); null keys stay null. String ordering
     // groups keys differently than long ordering did, but as-of
@@ -290,13 +249,13 @@ class JoinOpsSpec extends SparkSpec {
         s"only-composed ${(b -- a).take(3)}")
       if (outer) assert(a.size == 400)
     }
-    // through the SQL TVF: analysis type checks pass, result matches
+    // through the ASOF JOIN syntax: analysis type checks pass, result
+    // matches
     lefts.createOrReplaceTempView("jos_sl")
     rights.createOrReplaceTempView("jos_sr")
-    val sqlDf = spark.sql("""SELECT * FROM asof_join('jos_sl', 'jos_sr',
-      'k', 'rk', 'ts', 'rts', 'rts', 'v')""")
-    assert(rows(sqlDf.select(col("k"), col("ts"), col("lid"),
-      col("asof_rts"), col("asof_v"))) ==
+    val sqlDf = spark.sql("""SELECT l.k, l.ts, l.lid, r.rts, r.v
+      FROM jos_sl l ASOF JOIN jos_sr r ON l.k = r.rk AND l.ts >= r.rts""")
+    assert(rows(sqlDf) ==
       rows(JoinOps.asOfJoin(lefts, rights,
         "k", "rk", "ts", "rts", Seq("rts", "v"))))
   }
@@ -395,71 +354,41 @@ class JoinOpsSpec extends SparkSpec {
     }
   }
 
-  test("TVF inline subqueries and the integer tolerance argument") {
-    val quotes = Seq(
-      (1L, ts("2024-01-01 10:00:00"), 100.0),
-      (1L, ts("2024-01-01 10:05:00"), 101.0),
-      (2L, ts("2024-01-01 09:00:00"), 50.0))
-      .toDF("qk", "qts", "price")
-    val trades = Seq(
-      (1L, ts("2024-01-01 10:06:00")),
-      (1L, ts("2024-01-01 10:04:00")),
-      (2L, ts("2024-01-01 10:02:00")))
-      .toDF("k", "tts")
-    quotes.createOrReplaceTempView("jos_tq")
-    trades.createOrReplaceTempView("jos_tt")
-    // inline subqueries instead of pre-made views; tolerance as the one
-    // integer literal before the payload list (10 min in micros)
-    val sqlDf = spark.sql("""SELECT * FROM asof_join(
-      'SELECT k, tts FROM jos_tt',
-      'SELECT qk, qts, price FROM jos_tq WHERE price > 0',
-      'k', 'qk', 'tts', 'qts', 600000000, 'price')""")
-    assert(sqlDf.queryExecution.executedPlan.toString.contains("AsOfJoin"))
-    val api = JoinOps.asOfJoin(trades, quotes,
-      "k", "qk", "tts", "qts", Seq("price"),
-      tolerance = Some(600000000L))
-    assert(sqlDf.collect().toSet == api.collect().toSet,
-      "inline+tolerance TVF must equal the API with tolerance")
-    // the stale key-2 trade dropped; without tolerance it matches
-    assert(sqlDf.count() == 2 &&
-      spark.sql("""SELECT * FROM asof_join('jos_tt', 'jos_tq',
-        'k', 'qk', 'tts', 'qts', 'price')""").count() == 3)
-    // a tolerance ABOVE Int.MaxValue micros (here 2 h) parses as a
-    // BIGINT literal and must still dispatch as the tolerance argument
-    // (typeName-based matching rejected every bound past ~35.8 min)
-    val wide = spark.sql("""SELECT * FROM asof_join('jos_tt', 'jos_tq',
-      'k', 'qk', 'tts', 'qts', 7200000000, 'price')""")
-    assert(wide.count() == 3, "2h tolerance keeps all three trades")
-  }
-
-  test("TVF analysis-time type discipline: INT keys widen, bad types " +
-      "fail with pointed messages") {
+  test("ASOF JOIN analysis-time type discipline: INT keys widen, bad " +
+      "types fail by name") {
     Seq((1, ts("2024-01-01 10:04:00"), 7.0))
       .toDF("ik", "tts", "x").createOrReplaceTempView("jos_it")
     Seq((1L, ts("2024-01-01 10:00:00"), 100.0))
       .toDF("qk", "qts", "price").createOrReplaceTempView("jos_iq")
     // INT left key vs BIGINT right key: widened, joins fine
-    val widened = spark.sql("""SELECT * FROM asof_join('jos_it', 'jos_iq',
-      'ik', 'qk', 'tts', 'qts', 'price')""")
-    assert(widened.select("asof_price").collect().map(_.getDouble(0))
-      .toSeq == Seq(100.0))
-    // STRING key vs BIGINT key: pointed analysis error, not a task crash
-    Seq(("a", ts("2024-01-01 10:04:00")))
+    val widened = spark.sql("""SELECT r.price FROM jos_it l
+      ASOF JOIN jos_iq r ON l.ik = r.qk AND l.tts >= r.qts""")
+    assert(widened.collect().map(_.getDouble(0)).toSeq == Seq(100.0))
+    def msgs(t: Throwable): String =
+      if (t == null) "" else t.getMessage + "\n" + msgs(t.getCause)
+    // STRING key vs BIGINT key: fails at analysis naming both columns,
+    // not in a running task
+    Seq(("1", ts("2024-01-01 10:04:00")))
       .toDF("sk", "tts").createOrReplaceTempView("jos_sk")
     val keyErr = intercept[Exception] {
-      spark.sql("""SELECT * FROM asof_join('jos_sk', 'jos_iq',
-        'sk', 'qk', 'tts', 'qts', 'price')""").collect()
+      spark.sql("""SELECT * FROM jos_sk l
+        ASOF JOIN jos_iq r ON l.sk = r.qk AND l.tts >= r.qts""")
     }
-    assert(keyErr.getMessage.contains("same type"),
-      s"want pointed key-type message, got: ${keyErr.getMessage}")
-    // DOUBLE time column: pointed analysis error
-    Seq((1L, 2.5)).toDF("k", "dt").createOrReplaceTempView("jos_dt")
+    Seq("`sk`", "`qk`").foreach(c => assert(msgs(keyErr).contains(c),
+      s"want the key columns named, got: ${msgs(keyErr)}"))
+    // a CAST the user writes is kept: the same columns then join
+    val cast = spark.sql("""SELECT r.price FROM jos_sk l ASOF JOIN jos_iq r
+      ON CAST(l.sk AS BIGINT) = r.qk AND l.tts >= r.qts""")
+    assert(cast.collect().map(_.getDouble(0)).toSeq == Seq(100.0))
+    // BIGINT time vs TIMESTAMP time: the analyzer's own type check
+    // rejects the inequality, naming both time columns
+    Seq((1L, 5L)).toDF("k", "btime").createOrReplaceTempView("jos_bt")
     val timeErr = intercept[Exception] {
-      spark.sql("""SELECT * FROM asof_join('jos_dt', 'jos_iq',
-        'k', 'qk', 'dt', 'qts', 'price')""").collect()
+      spark.sql("""SELECT * FROM jos_bt l
+        ASOF JOIN jos_iq r ON l.k = r.qk AND l.btime >= r.qts""")
     }
-    assert(timeErr.getMessage.contains("bigint or timestamp"),
-      s"want pointed time-type message, got: ${timeErr.getMessage}")
+    Seq("btime", "qts").foreach(c => assert(msgs(timeErr).contains(c),
+      s"want the time columns named, got: ${msgs(timeErr)}"))
   }
 
   test("intervalOverlapJoin equals the inequality join, exactly once") {

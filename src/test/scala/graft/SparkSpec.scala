@@ -15,4 +15,12 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   val sfTiny = "/root/testdata/sf0.001"
+
+  /** runs `body` with one session conf set, restoring its prior value */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
