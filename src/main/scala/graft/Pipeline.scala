@@ -25,7 +25,8 @@ object Pipeline {
     def rowsDropped: Long = rowsIn - rowsWritten
   }
 
-  /** read taxi-shaped parquet at `in`, derive the 10 reference columns,
+  /** read taxi-shaped parquet at `in` (its footer schema cached by
+    * `Tables.parquet`), derive the 10 reference columns,
     * write zstd parquet at `out`; returns the written row count. */
   def run(spark: SparkSession, in: String, out: String,
           maxRecordsPerFile: Long = 0L): Long =
@@ -44,7 +45,7 @@ object Pipeline {
     // two concurrent runs on a shared session cross-attribute metrics
     val inObs = Observation()
     val outObs = Observation()
-    val source = spark.read.parquet(in).observe(inObs, count(lit(1)).as("n"))
+    val source = Tables.parquet(spark, in).observe(inObs, count(lit(1)).as("n"))
     val result = TripMetrics.withTripMetrics(source)
       .observe(outObs, count(lit(1)).as("n"))
     result.write.mode("overwrite")

@@ -35,7 +35,7 @@ object StreamingQueries {
   /** The file stream source needs an explicit schema, and the fixture's
     * ts physical type varies by generator version (int64 nanos under
     * nanosAsLong vs timestamp[us]/NTZ — see Tables.events). Take the
-    * schema from a one-footer batch read at plan time, then apply the
+    * footer schema from Tables' cache at plan time, then apply the
     * same ts normalization as the batch loader so every streaming
     * operator sees the session LTZ type. */
   private def normalizeTs(df: DataFrame): DataFrame =
@@ -46,7 +46,7 @@ object StreamingQueries {
     }
 
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    val rawSchema = s.read.parquet(s"$d/events.parquet").schema
+    val rawSchema = Tables.schemaOf(s, s"$d/events.parquet")
     // the fixture is a single parquet FILE; the file stream source
     // requires a directory or glob path (a bare file fails basePath
     // validation), so address the file through a one-file glob

@@ -21,11 +21,14 @@ import graft.queries.Registry
   *
   * Prints each rep's wall (a series converging toward a baseline says
   * a wall "regression" was warmup depth; a flat elevated series says it
-  * is real), then rep 1 as seen by a [[PlanMetrics]] tally: the three
-  * Bench axes, a per-callsite table (stages, executor task seconds,
-  * shuffle MB written, share of the task time), and for every callsite
-  * reached by more than one stage its per-stage shuffle series — the
-  * round-by-round view of an iterative loop. Last, untimed, the
+  * is real) next to its build seconds: the `Q.run` call that constructs
+  * the frame before the write runs it (footer reads, and any eager cut
+  * or collect inside an operator). Then rep 1 as seen by a
+  * [[PlanMetrics]] tally: the three Bench axes, a per-callsite table
+  * (stages, executor task seconds, shuffle MB written, share of the
+  * task time), and for every callsite reached by more than one stage
+  * its per-stage shuffle series — the round-by-round view of an
+  * iterative loop. Last, untimed, the
   * formatted plan of rep 1's frame (`explain("formatted")`).
   *
   * Usage: `runMain graft.tools.Probe <query> <reps> <sfDir>`. Exits 1
@@ -33,9 +36,11 @@ import graft.queries.Registry
   */
 object Probe {
 
-  /** each rep's wall seconds; rep 1's (shuffle bytes, exchanges, plan
-    * nodes), per-callsite stages and formatted plan */
-  final case class Result(walls: Seq[Double], axes: (Long, Long, Long),
+  /** each rep's wall and build (`Q.run`) seconds; rep 1's (shuffle
+    * bytes, exchanges, plan nodes), per-callsite stages and formatted
+    * plan */
+  final case class Result(walls: Seq[Double], builds: Seq[Double],
+                          axes: (Long, Long, Long),
                           callsites: Seq[(String, PlanMetrics.Callsite)],
                           plan: String)
 
@@ -53,13 +58,15 @@ object Probe {
       var axes = (0L, 0L, 0L)
       var sites = Seq.empty[(String, PlanMetrics.Callsite)]
       var first = Option.empty[DataFrame]
-      val walls = (1 to reps).map { rep =>
+      val timed = (1 to reps).map { rep =>
         q.setup.foreach(_(spark, dir))
         val before = tally.snapshot()
         val mark = tally.stagesSeen
         val t0 = System.nanoTime()
+        var built = t0
         sink {
           val df = q.run(spark, dir)
+          built = System.nanoTime()
           // resolve rep 1's cache lookups while the frames its run
           // persisted still exist; the plan is rendered after the reps
           if (rep == 1) { first = Some(df); df.queryExecution.withCachedData }
@@ -70,10 +77,10 @@ object Probe {
           axes = tally.drainAndRead(before)
           sites = tally.callsites(mark)
         }
-        wall
+        (wall, (built - t0) / 1e9)
       }
       val plan = first.fold("")(_.queryExecution.explainString(FormattedMode))
-      Result(walls, axes, sites, plan)
+      Result(timed.map(_._1), timed.map(_._2), axes, sites, plan)
     } finally PlanMetrics.unregister(spark, tally)
   }
 
@@ -91,8 +98,8 @@ object Probe {
   }
 
   private def report(name: String, r: Result): Unit = {
-    r.walls.zipWithIndex.foreach { case (sec, i) =>
-      println(f"[probe] $name rep ${i + 1}%2d: $sec%.3f s")
+    r.walls.zip(r.builds).zipWithIndex.foreach { case ((sec, build), i) =>
+      println(f"[probe] $name rep ${i + 1}%2d: $sec%.3f s (build $build%.3f s)")
     }
     val (bytes, exchanges, nodes) = r.axes
     val stages = r.callsites.map(_._2.stages).sum

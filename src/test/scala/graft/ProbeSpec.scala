@@ -4,7 +4,8 @@ import graft.queries.Registry
 import graft.tools.Probe
 
 /** Probe's measuring function runs on the shared session (it must not
-  * stop it), returns one wall per rep, reports rep 1's axes as an
+  * stop it), returns one wall and one build (`Q.run`) time per rep, the
+  * build inside its wall, reports rep 1's axes as an
   * independent PlanMetrics bracket of the same query reads them, and
   * returns rep 1's formatted plan. */
 class ProbeSpec extends SparkSpec {
@@ -13,6 +14,10 @@ class ProbeSpec extends SparkSpec {
   test("measure returns a wall per rep and rep 1's Bench axes") {
     val r = Probe.measure(spark, name, reps = 2, dir = sfTiny)
     assert(r.walls.size == 2 && r.walls.forall(_ > 0), r.walls)
+    assert(r.builds.size == 2, r.builds)
+    r.walls.zip(r.builds).foreach { case (wall, build) =>
+      assert(build > 0 && build <= wall, (wall, build))
+    }
     assert(!spark.sparkContext.isStopped)
 
     val q = Registry.byName(name)
