@@ -125,8 +125,12 @@ object Tables {
     * Downstream code (window(), unix_micros, the streaming watermarks)
     * is written against the LTZ type, so normalizing here keeps every
     * consumer oblivious to the generator's footer choice. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    val raw = table(s, d, "events")
+  def events(s: SparkSession, d: String): DataFrame =
+    normalizeTs(table(s, d, "events"))
+
+  /** the [[events]] ts normalization, for any frame read from the events
+    * footer: the batch table and the streaming replay share it */
+  def normalizeTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -134,7 +138,6 @@ object Tables {
         raw.withColumn("ts", expr("cast(ts as timestamp)"))
       case _ => raw
     }
-  }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 

@@ -90,25 +90,10 @@ object DedupOps {
 
   /** exact n-gram Jaccard >= minJaccard for a given candidate pair list
     * (doc_a < doc_b) — the verifier every approximate family funnels
-    * through, so precision is always exact. */
-  def verifyJaccard(cands: DataFrame, docs: DataFrame, n: Int,
-                    minJaccard: Double): DataFrame =
-    // the postings pipeline (scan + tokenize + shingle + distinct) feeds
-    // three plan branches (both pair sides + sizes); without an explicit
-    // persist Spark recomputes it per branch — self-joined branches get
-    // fresh expression ids, so exchange reuse never kicks in (same
-    // pattern as Spark ML's handlePersistence). Storage is the distinct
-    // postings only, spillable to disk.
-    verifyJaccardOnPosts(cands,
-      shinglePostings(docs, n).select("doc_id", "gram_id")
-        // cache lifecycle: CALLER-owned — clearCache()/unpersist after the action (DedupOps class doc)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      minJaccard)
-
-  /** verifyJaccard against an already-built (and ideally persisted)
-    * postings frame — lets the candidate generator and the verifier share
-    * ONE shingle pipeline instead of scanning+tokenizing the corpus
-    * twice per near-dup query. */
+    * through, so precision is always exact — against an already-built
+    * (and ideally persisted) postings frame, which lets the candidate
+    * generator and the verifier share ONE shingle pipeline instead of
+    * scanning+tokenizing the corpus twice per near-dup query. */
   def verifyJaccardOnPosts(cands: DataFrame, posts: DataFrame,
                            minJaccard: Double): DataFrame = {
     val sizes = posts.groupBy("doc_id").agg(count(lit(1)).as("sz"))

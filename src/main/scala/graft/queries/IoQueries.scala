@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.io.Tables
+import graft.io.{Scratch, Tables}
 
 /** Gate-visible sink coverage: each query WRITES through an engine sink
   * into a scratch dir, reads its own output back, and returns a result
@@ -11,19 +11,12 @@ import graft.io.Tables
   * parquet_slicer.py:53-58) are all verified end to end, not just
   * spec-asserted.
   *
-  * Scratch dirs are unique per JVM (createTempDirectory at class init):
-  * two concurrent gate/verify runs — or two users on one host — never
-  * write into each other's output mid-read. Within one JVM the same dir
-  * is reused across repeated executions (mode=overwrite), which is what
-  * the bench's min-of-3 timing wants.
+  * Outputs live under the per-JVM scratch root (graft.io.Scratch).
   */
 object IoQueries {
 
-  private lazy val scratchRoot: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_io_")
-
-  private def scratch(name: String): String =
-    scratchRoot.resolve(name).toString
+  private def scratch(name: String, d: String): String =
+    Scratch.dir(name, d).toString
 
   private def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(18,2)")
 
@@ -36,7 +29,7 @@ object IoQueries {
     //      oracle verifies the VALUES survive the sink round-trip)
     Q("io01_partitioned_roundtrip",
       (s, d) => {
-        val out = scratch("io01")
+        val out = scratch("io01", d)
         Tables.writePartitioned(Tables.documents(s, d), out, "lang")
         s.read.parquet(out)
           .filter(col("lang") === "en")
@@ -62,7 +55,7 @@ object IoQueries {
     //      otherwise resurrect it as DATE and change the output dtype).
     Q("io13_incremental_partitions",
       (s, d) => {
-        val out = scratch("io13")
+        val out = scratch("io13", d)
         Tables.events(s, d)
           .withColumn("day", to_date(col("ts")).cast("string"))
           .write.mode("overwrite").partitionBy("day").parquet(out)
@@ -88,7 +81,7 @@ object IoQueries {
     //      chunk count from the row count
     Q("io02_row_range_split",
       (s, d) => {
-        val out = scratch("io02")
+        val out = scratch("io02", d)
         Tables.documents(s, d).repartition(1)
           .write.mode("overwrite")
           .option("compression", "zstd")
@@ -113,8 +106,8 @@ object IoQueries {
     //      at scale the partition count comes from bytes/targetFileSize.
     Q("io03_compaction",
       (s, d) => {
-        val frag = scratch("io03_frag")
-        val compact = scratch("io03_compact")
+        val frag = scratch("io03_frag", d)
+        val compact = scratch("io03_compact", d)
         Tables.documents(s, d).repartition(1)
           .write.mode("overwrite").option("maxRecordsPerFile", 50L)
           .parquet(frag)
@@ -174,13 +167,13 @@ object IoQueries {
         Tables.orders(s, d).select("o_orderkey", "o_orderpriority")
           .write.mode("overwrite").format("parquet")
           .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-          .option("path", scratch("io04_orders"))
+          .option("path", scratch("io04_orders", d))
           .saveAsTable("graft_io04_orders")
         Tables.lineitem(s, d)
           .select("l_orderkey", "l_quantity", "l_extendedprice")
           .write.mode("overwrite").format("parquet")
           .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-          .option("path", scratch("io04_lineitem"))
+          .option("path", scratch("io04_lineitem", d))
           .saveAsTable("graft_io04_lineitem")
       })),
 
@@ -194,7 +187,7 @@ object IoQueries {
     //      matches the source table.
     Q("io05_range_layout",
       (s, d) => {
-        val out = scratch("io05")
+        val out = scratch("io05", d)
         Tables.orders(s, d)
           .repartitionByRange(8, col("o_orderdate"))
           .sortWithinPartitions("o_orderdate")
@@ -225,7 +218,7 @@ object IoQueries {
     //      the free-text column) is what's actually being verified.
     Q("io06_csv_roundtrip",
       (s, d) => {
-        val out = scratch("io06")
+        val out = scratch("io06", d)
         Tables.documents(s, d)
           .select("doc_id", "lang", "source", "n_chars", "text")
           .write.mode("overwrite")
@@ -256,7 +249,7 @@ object IoQueries {
     //      which the decimal-summed aggregate would expose if they didn't.
     Q("io07_json_roundtrip",
       (s, d) => {
-        val out = scratch("io07")
+        val out = scratch("io07", d)
         Tables.lineitem(s, d)
           .select("l_orderkey", "l_returnflag", "l_quantity",
             "l_extendedprice")
@@ -288,7 +281,7 @@ object IoQueries {
     //      from the source parquet — same discipline as io06.
     Q("io08_orc_roundtrip",
       (s, d) => {
-        val out = scratch("io08")
+        val out = scratch("io08", d)
         Tables.orders(s, d)
           .select("o_orderkey", "o_orderpriority", "o_totalprice",
             "o_orderdate")
@@ -320,7 +313,7 @@ object IoQueries {
     //      a 2-D box query's VALUES survive the layout round trip.
     Q("io09_zorder_layout",
       (s, d) => {
-        val out = scratch("io09")
+        val out = scratch("io09", d)
         val days = datediff(col("o_orderdate").cast("date"),
           lit("1992-01-01").cast("date"))
         Tables.orders(s, d)
@@ -357,7 +350,7 @@ object IoQueries {
     //      full-table drop would hash-mismatch immediately.
     Q("io10_dynamic_overwrite",
       (s, d) => {
-        val out = scratch("io10")
+        val out = scratch("io10", d)
         val orders = Tables.orders(s, d)
           .select("o_orderkey", "o_orderpriority", "o_totalprice")
         orders.write.mode("overwrite").option("compression", "zstd")
@@ -394,7 +387,7 @@ object IoQueries {
     //      see every row with exactly its own batch's column populated.
     Q("io11_merge_schema",
       (s, d) => {
-        val out = scratch("io11")
+        val out = scratch("io11", d)
         val orders = Tables.orders(s, d)
         orders.filter(col("o_orderkey") % 2 === 0)
           .select(col("o_orderkey"), col("o_totalprice"))
@@ -431,7 +424,7 @@ object IoQueries {
     Q("io12_corrupt_records",
       (s, d) => {
         import org.apache.spark.sql.types._
-        val out = scratch("io12")
+        val out = scratch("io12", d)
         Tables.documents(s, d)
           .select(concat_ws(",", col("doc_id"),
             when(col("doc_id") % 7 === 0, lit("x"))

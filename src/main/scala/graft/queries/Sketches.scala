@@ -18,10 +18,6 @@ import graft.io.Tables
   */
 object Sketches {
 
-  /** per-JVM scratch (same isolation rationale as IoQueries.scratchRoot) */
-  private lazy val scratchRoot: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_ds_")
-
   val qs: Seq[Q] = Seq(
 
     // ---- per-lang HLL sketches + a union-merged corpus rollup ----------
@@ -178,7 +174,7 @@ object Sketches {
     //      equality would be a false invariant.)
     Q("ds05_sketch_warehouse",
       (s, d) => {
-        val out = scratchRoot.resolve("ds05").toString
+        val out = graft.io.Scratch.dir("ds05", d).toString
         val orders = Tables.orders(s, d)
         val byMonth = orders
           .groupBy(date_trunc("month", col("o_orderdate")).as("mo"))

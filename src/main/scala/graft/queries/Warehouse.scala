@@ -1152,29 +1152,19 @@ object Warehouse {
         FROM h WHERE n_rows > (SELECT target FROM t)"""))
   )
 
-  /** per-JVM scratch (same isolation rationale as IoQueries.scratchRoot) */
-  private lazy val scratchRoot: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_wh_")
-
   private def w18StateDir(d: String): java.nio.file.Path =
-    scratchRoot.resolve("w18-" + d.replaceAll("[^A-Za-z0-9.]", "_"))
-      .resolve("state")
+    graft.io.Scratch.dir("w18", d)
 
   /** w18's version writer: st14's MERGE loop in batch form — four
     * event-time quartile slices of the purchase stream, each merged
-    * into the previous snapshot by key (union + keyed re-aggregation,
-    * DECIMAL(38,2)-exact so merge order never shows), vacuum keep=3
-    * after each write exactly as a production MV would run it. Staging,
-    * not steady-state cost: Bench runs it once untimed. Idempotent —
-    * the state dir is rebuilt from scratch every call. */
+    * into the previous snapshot by [[graft.streaming.VersionedState.merge]]
+    * (the step st14 runs per micro-batch, vacuum keep=3 included).
+    * Staging, not steady-state cost: Bench runs it once untimed.
+    * Idempotent — the state dir is rebuilt from scratch every call. */
   private def w18BuildVersions(s: org.apache.spark.sql.SparkSession,
                                d: String): Unit = {
-    import java.nio.file.{Files, Path}
     val stateDir = w18StateDir(d)
-    if (Files.exists(stateDir))
-      Files.walk(stateDir)
-        .sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(x => Files.delete(x))
+    graft.io.Scratch.delete(stateDir)
     val p = Tables.events(s, d).filter(col("event_type") === "purchase")
       .select(col("user_id"), col("value"), unix_micros(col("ts")).as("us"))
     val mm = p.agg(min(col("us")), max(col("us"))).head()
@@ -1182,28 +1172,18 @@ object Warehouse {
     for (i <- 0 until 4) {
       val lo = if (i == 0) Long.MinValue else mn + (mx - mn) * i / 4
       val hi = if (i == 3) Long.MaxValue else mn + (mx - mn) * (i + 1) / 4
-      val inc = p.filter(col("us") >= lo && col("us") < hi)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_purchases"),
-          sum(col("value").cast("decimal(18,2)"))
-            .cast("decimal(38,2)").as("spend"))
-      val prev = stateDir.resolve(s"v${i - 1}")
-      val merged =
-        if (Files.exists(prev))
-          s.read.parquet(prev.toString)
-            .unionByName(inc)
-            .groupBy(col("user_id"))
-            .agg(sum(col("n_purchases")).as("n_purchases"),
-              sum(col("spend")).cast("decimal(38,2)").as("spend"))
-        else inc
-      merged.write.mode("overwrite").option("compression", "zstd")
-        .parquet(stateDir.resolve(s"v$i").toString)
+      graft.streaming.VersionedState.merge(stateDir, i.toLong,
+        p.filter(col("us") >= lo && col("us") < hi)
+          .groupBy(col("user_id"))
+          .agg(count(lit(1)).as("n_purchases"),
+            sum(col("value").cast("decimal(18,2)"))
+              .cast("decimal(38,2)").as("spend")),
+        key = "user_id")
       // commit stamp = the event-time boundary this version covers up to
       // (exclusive; v3 covers everything -> mx+1): deterministic, so
       // w20's DuckDB oracle replays AS-OF-TIMESTAMP resolution exactly
       graft.streaming.VersionedState.stampCommit(stateDir, i.toLong,
         if (i == 3) mx + 1 else mn + (mx - mn) * (i + 1) / 4)
-      graft.streaming.VersionedState.vacuum(stateDir, i.toLong, keep = 3)
     }
   }
 }

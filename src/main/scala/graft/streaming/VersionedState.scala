@@ -111,6 +111,34 @@ object VersionedState {
     }
   }
 
+  /** One MERGE step of a keyed incremental rollup (st14's micro-batch
+    * loop, w18's version writer): version `version` is `inc` (one row
+    * per key) merged into version `version - 1` when that exists —
+    * union, then re-aggregate by `key`, summing every other column and
+    * casting it back to its type (DECIMAL(38,2) sums stay exact, so
+    * merge order never shows) — written as zstd parquet. Then
+    * retention: [[vacuum]] with keep = 3 drops versions >= 3 behind;
+    * without it the MV keeps one full table copy per step forever, and
+    * keep = 3 leaves a reader that resolved the latest version two
+    * further steps to finish its scan. Each merge's input stays
+    * immutable (v_{n-1} read, v_n written), and the table itself never
+    * passes through the driver. */
+  def merge(stateDir: Path, version: Long, inc: DataFrame,
+            key: String): Unit = {
+    import org.apache.spark.sql.functions.{col, sum}
+    val prev = stateDir.resolve(s"v${version - 1}")
+    val merged =
+      if (Files.exists(prev)) {
+        val sums = inc.schema.fields.filter(_.name != key)
+          .map(f => sum(col(f.name)).cast(f.dataType).as(f.name))
+        inc.sparkSession.read.parquet(prev.toString).unionByName(inc)
+          .groupBy(col(key)).agg(sums.head, sums.tail.toSeq: _*)
+      } else inc
+    merged.write.mode("overwrite").option("compression", "zstd")
+      .parquet(stateDir.resolve(s"v$version").toString)
+    vacuum(stateDir, version, keep = 3)
+  }
+
   /** Delete every version <= current - keep; returns the ids removed.
     * Keeps the `keep` most recent versions ending at `current`, so the
     * version a reader resolved up to keep-1 batches ago is still on
@@ -119,11 +147,7 @@ object VersionedState {
     require(keep >= 2,
       s"keep must be >= 2 (v_{n-1} is the next merge's input), got $keep")
     val doomed = versionsIn(stateDir).filter(_._1 <= current - keep)
-    doomed.foreach { case (_, p) =>
-      Files.walk(p)
-        .sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(x => Files.delete(x))
-    }
+    doomed.foreach { case (_, p) => graft.io.Scratch.delete(p) }
     doomed.map(_._1).sorted
   }
 }

@@ -2,13 +2,15 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Bridge into two spark-private members a library needs:
+/** Bridge into three spark-private members a library needs:
   *
   *  - `Dataset.ofRows`, the one entry point that hands a constructed
   *    LogicalPlan back to the session: a library that contributes its
   *    own logical operators (graft.plans.AsOfJoin) needs it;
   *  - `SparkContext.listenerBus`, whose `waitUntilEmpty` is the exact
-  *    drain for the measurement listeners (graft.PlanMetrics).
+  *    drain for the measurement listeners (graft.PlanMetrics);
+  *  - `Utils.createTempDir`, which registers the directory with Spark's
+  *    shutdown-delete hook (graft.io.Scratch's root).
   *
   * Shimming them from inside the org.apache.spark.sql package is the
   * established pattern for Spark-extension libraries; this object is
@@ -24,4 +26,9 @@ object GraftPlanBridge {
     * 10 s */
   def drainListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** a new directory `<prefix>-<uuid>` under `java.io.tmpdir` that
+    * Spark's shutdown hook deletes, with everything in it, at JVM exit */
+  def tempDirDeletedAtExit(prefix: String): java.nio.file.Path =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix).toPath
 }

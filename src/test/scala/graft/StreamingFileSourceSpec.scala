@@ -113,4 +113,56 @@ class StreamingFileSourceSpec extends SparkSpec {
     assert(got.subsetOf(batch),
       s"late replay leaked into a finalized window: ${got.diff(batch).take(3)}")
   }
+
+  // the staged writer's contract: files arrive in the order they were
+  // staged because their mtimes are pinned strictly increasing, and the
+  // staged order is time order (st13: on-time, future, late replay)
+  test("staged sources have strictly increasing mtimes in time order") {
+    import graft.queries.{Registry, StreamingQueries}
+    Seq("st09_multibatch_replay", "st13_late_data_audit", "st17_stream_asof")
+      .foreach(Registry.byName(_).setup.get(spark, sfTiny))
+    def byMtime(dir: java.nio.file.Path): Seq[java.io.File] = {
+      val fs = dir.toFile.listFiles().filter(_.getName.endsWith(".parquet"))
+        .sortBy(_.lastModified).toSeq
+      assert(fs.map(_.lastModified).distinct.size == fs.size,
+        s"two staged files share an mtime under $dir")
+      fs
+    }
+    def tsRange(f: java.io.File): (java.sql.Timestamp, java.sql.Timestamp) = {
+      val r = spark.read.parquet(f.getPath).agg(min("ts"), max("ts")).head
+      (r.getTimestamp(0), r.getTimestamp(1))
+    }
+    for (dir <- Seq(StreamingQueries.eventSlices(sfTiny),
+                    StreamingQueries.asOfSlices(sfTiny))) {
+      val fs = byMtime(dir)
+      assert(fs.size == 8, s"$dir holds ${fs.size} files, not 8")
+      val ranges = fs.map(tsRange).filter(_._1 != null)
+      assert(ranges.size >= 2)
+      ranges.sliding(2).foreach { case Seq(a, b) =>
+        assert(a._2.before(b._1), s"$dir: slice $a delivered before $b")
+      }
+    }
+    val Seq(onTime, future, late) =
+      byMtime(graft.io.Scratch.dir("st13", sfTiny)).map(tsRange)
+    // the gate's cuts, as instants (the session time zone is UTC)
+    def utc(day: String) =
+      java.sql.Timestamp.from(java.time.Instant.parse(day + "T00:00:00Z"))
+    val cut = utc("2024-01-13")
+    assert(onTime._2.before(cut) && !future._1.before(cut))
+    assert(late._2.before(utc("2024-01-04")))
+  }
+
+  // re-staging rewrites the same files, and the as-of gates share one
+  // staged copy: a second self-contained run must see the same input
+  test("setupAndRun twice returns identical rows for st09, st12 and st17") {
+    for (name <- Seq("st09_multibatch_replay", "st12_exactly_once_resume",
+                     "st17_stream_asof")) {
+      val q = graft.queries.Registry.byName(name)
+      def rows() = q.setupAndRun(spark, sfTiny).collect().map(_.toString)
+        .sorted.toSeq
+      val first = rows()
+      assert(first.nonEmpty, name)
+      assert(rows() == first, s"$name: second run differs")
+    }
+  }
 }
