@@ -1,7 +1,6 @@
 package graft.io
 
 import java.io.FileNotFoundException
-import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -27,7 +26,11 @@ import org.apache.spark.sql.types.StructType
   *    (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`,
   *    `spark.sql.caseSensitive`), so a session reading binary as string
   *    or nanos as long never gets another session's schema.
-  * A mismatch re-infers and replaces the entry. The read itself is then
+  * A mismatch re-infers and replaces the entry. The map keeps the
+  * [[FooterCap]] most recently read paths (least recently read evicted
+  * first), so a process that reads many one-off paths (per-run inputs
+  * under fresh temp dirs) holds a bounded map; an evicted path is
+  * re-inferred on its next read. The read itself is then
   * `spark.read.schema(s).parquet(path)`, which still lists the files, so
   * a path rewritten in the same session is never read stale.
   *
@@ -51,7 +54,20 @@ object Tables {
                                   confs: Map[String, String],
                                   schema: StructType)
 
-  private val footers = new ConcurrentHashMap[String, Footer]()
+  /** paths whose footer schema stays cached: every fixture table of two
+    * scale factors with room to spare */
+  private[graft] val FooterCap = 64
+
+  // access-ordered: get moves a path to the young end; all access under
+  // the map's own lock
+  private val footers = new java.util.LinkedHashMap[String, Footer](
+      16, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[String, Footer]): Boolean = size > FooterCap
+  }
+
+  /** paths cached now (at most [[FooterCap]]) */
+  private[graft] def cachedFooters: Int = footers.synchronized(footers.size)
 
   /** the parquet file or directory at `path`, read with its cached
     * schema (see the object doc) */
@@ -72,13 +88,13 @@ object Tables {
           k.startsWith("spark.sql.legacy.parquet.") ||
           k == "spark.sql.caseSensitive"
         }
-        val hit = footers.get(path)
+        val hit = footers.synchronized(footers.get(path))
         if (hit != null && hit.stamp == stamp && hit.confs == confs) hit.schema
         else {
           // listed before inferring: a file that changes in between
           // leaves an old stamp, so the next call re-infers
           val schema = spark.read.parquet(path).schema
-          footers.put(path, Footer(stamp, confs, schema))
+          footers.synchronized(footers.put(path, Footer(stamp, confs, schema)))
           schema
         }
     }

@@ -44,28 +44,25 @@ object GraphOps {
     * numbers are unchanged at any iteration count. */
   private val CkptEvery = 8
 
-  /** Opt-in conf for the durability trade every iterative operator here
-    * makes: lineage is cut with `localCheckpoint`, whose blocks live on
-    * executors WITHOUT lineage — fast and right for local mode and
-    * re-runnable batch, but on a real cluster an executor lost mid-query
-    * fails the job instead of recomputing. Set this to `true` (and call
-    * `sparkContext.setCheckpointDir` to a fault-tolerant location) and
-    * every lineage cut goes through the reliable `checkpoint` path
-    * instead — same values, same truncation, survives executor loss on
-    * multi-hour 100 TB runs / preemptible fleets. */
-  val ReliableCheckpointConf = "spark.graft.graph.reliableCheckpoint"
-
-  /** lineage cut honoring [[ReliableCheckpointConf]]; `eager` keeps each
-    * call site's existing materialization semantics (lazy cuts ride the
-    * next action, eager cuts materialize now). */
+  /** The lineage cut every iterative operator here makes. With a
+    * checkpoint directory set on the context
+    * (`sparkContext.setCheckpointDir`, a fault-tolerant location on a
+    * cluster) it is the reliable `checkpoint`: blocks written there
+    * survive executor loss on multi-hour 100 TB runs and preemptible
+    * fleets. Without one it is `localCheckpoint`, whose blocks live on
+    * executors WITHOUT lineage: fast and right for local mode and
+    * re-runnable batch, but an executor lost mid-query fails the job.
+    * GraphFrames makes the same choice from the same setting. Values
+    * and truncation are the same either way; `eager` keeps each call
+    * site's materialization semantics (lazy cuts ride the next action,
+    * eager cuts materialize now). */
   private def cut(df: DataFrame, eager: Boolean): DataFrame =
-    if (df.sparkSession.conf
-          .getOption(ReliableCheckpointConf).exists(_.toBoolean))
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(eager)
     else df.localCheckpoint(eager)
 
-  /** chaining sugar so iterative loops read like the localCheckpoint
-    * rotation they implement while honoring [[ReliableCheckpointConf]] */
+  /** chaining sugar so iterative loops read like the checkpoint
+    * rotation they implement */
   private implicit class LineageCut(df: DataFrame) {
     def lineageCut(eager: Boolean): DataFrame = cut(df, eager)
   }
@@ -336,9 +333,9 @@ object GraphOps {
     * bottleneck (the classic iterative-DataFrame trap; GraphFrames
     * checkpoints for the same reason). The cut truncates the plan at an
     * RDD scan, keeping analysis O(1) per round; superseded round blocks
-    * are reclaimed by the ContextCleaner. [[ReliableCheckpointConf]]
-    * routes the cut through reliable `checkpoint()` for runs that must
-    * survive executor loss.
+    * are reclaimed by the ContextCleaner. With a checkpoint directory
+    * set, the cut is the reliable `checkpoint()` instead, which
+    * survives executor loss (see `cut`).
     *
     * Input: undirected edges (u, v); self-loops and duplicates are
     * canonicalized away. Output: (id, component) for every endpoint,

@@ -11,8 +11,10 @@ import org.apache.spark.sql.functions._
   * The as-of join has ONE entry, [[JoinOps.asOfJoin]], which builds the
   * native [[graft.plans.AsOfJoin]] node; the planner then picks the exec
   * from stats (broadcast when the right side is dimension-sized,
-  * shuffled streaming merge otherwise). [[JoinOps.asOfJoinTimeSliced]]
-  * and [[JoinOps.asOfJoinAuto]] are the skew paths over that same node.
+  * shuffled streaming merge otherwise). [[JoinOps.asOfJoinAuto]] is the
+  * skew path over that same node: it time-slices hot keys and leaves
+  * cold keys on the plain node. The `ASOF JOIN` SQL syntax always plans
+  * the plain node.
   * The other joins are compositions of stock Catalyst operators, chosen
   * for their scale shape: the range joins equi-join on time bins
   * instead of running an inequality join; the salted join trades k-fold
@@ -77,48 +79,46 @@ object JoinOps {
       rightVals.map(v => col(s"asof_$v")): _*)
   }
 
-  /** Time-sliced skew-split as-of join — the hot-key scale path for
-    * [[asOfJoin]]. AQE's skew-join optimization pattern-matches
-    * only the built-in SortMergeJoin/ShuffledHashJoin execs, so the
-    * native as-of exec's ClusteredDistribution exchanges are OUTSIDE
-    * runtime skew splitting (pinned by AsOfSkewSpec): one key carrying
-    * half the rows lands on one task. This operator is the documented
-    * mitigation, the as-of analogue of the w14 salt planner: partition
-    * the TIME axis into `sliceWidth`-wide slices and join on the
-    * composite key `(key, slice)` — a hot key now spreads across as many
-    * tasks as it has active slices.
+  /** Time-sliced skew-split as-of join — the hot-key path under
+    * [[asOfJoinAuto]] (and e36's fixed-width gate). AQE's skew-join
+    * optimization pattern-matches only the built-in
+    * SortMergeJoin/ShuffledHashJoin execs, so the native as-of exec's
+    * ClusteredDistribution exchanges are OUTSIDE runtime skew splitting
+    * (pinned by AsOfSkewSpec): one key carrying half the rows lands on
+    * one task. This operator partitions the TIME axis into
+    * `sliceWidth`-wide slices and joins on the composite key
+    * `(key, slice)` — a hot key now spreads across as many tasks as it
+    * has active slices.
     *
     * Salting an as-of join needs more than duplicating the build side: a
     * left row's match may live in an EARLIER slice. Correctness comes
     * from carry-ins — for every (key, slice) the left side occupies, the
-    * single latest right row from any earlier slice is replicated into
-    * that slice. The latest right row at-or-before each left time is
-    * then either in the same slice (kept as-is) or the carry-in, never
-    * lost. Carry-ins are computed on AGGREGATED frames (one row per
-    * (key, slice)), so the extra work is metadata-scale: the slice
-    * inequality join touches |keys| x |slices| rows, not the corpus.
+    * representative of the latest earlier slice that has right rows
+    * (that slice's latest row) is replicated into that slice. The latest
+    * right row at-or-before each left time is then either in the same
+    * slice (kept as-is) or the carry-in, never lost. Picking the latest
+    * earlier slice is itself an as-of join: occupied left slices against
+    * per-slice representatives, keyed by key, timed by slice index,
+    * strict. It runs on the native exec over AGGREGATED frames (one row
+    * per (key, slice)), so the extra work is metadata-scale.
     *
     * Same output contract and null semantics as [[asOfJoin]]
     * (NULL key/time never matches; inner drops, `leftOuter` pads) — the
     * composite struct key is nulled whenever either component is null so
     * struct ordering cannot resurrect SQL-null equality. `forward` is
-    * the exact mirror: the carried row becomes the EARLIEST right row
-    * from any LATER slice (min-slice representative, each slice
-    * represented by its earliest row). `tolerance` composes unchanged:
-    * a carried row that is too stale fails the exec's bound exactly
-    * like the unsliced plan.
+    * the exact mirror: the carried row is the representative of the
+    * earliest LATER slice, each slice represented by its earliest row.
+    * `tolerance` composes unchanged: a carried row that is too stale
+    * fails the exec's bound exactly like the unsliced plan.
     * Ties on (key, rightTime) are broken by the payload struct order
     * here vs physical order natively — both unspecified contracts;
     * callers needing determinism must dedup (key, time) first.
     *
     * `sliceWidth` is in the time column's own units (micros for
     * timestamps, via unix_micros — NOT the seconds a timestamp->long
-    * cast would give). Sizing: the w19 slice planner
-    * (`queries/Warehouse.scala`, w14's arithmetic on the time axis)
-    * derives it from the key histogram — per hot key,
-    * span / ceil(rows / targetRowsPerTask); take the MIN across hot
-    * keys as the global width. */
-  def asOfJoinTimeSliced(left: DataFrame, right: DataFrame,
+    * cast would give). [[asOfSlicePlan]] sizes it from the key
+    * histogram. */
+  private[graft] def asOfJoinTimeSliced(left: DataFrame, right: DataFrame,
                          leftKey: String, rightKey: String,
                          leftTime: String, rightTime: String,
                          rightVals: Seq[String],
@@ -164,35 +164,25 @@ object JoinOps {
     // slices the LEFT occupies (only these can emit output)
     val leftSlices = lS.filter(col("__kk").isNotNull)
       .select(col(leftKey).as("__k"), col("__slice").as("__ls")).distinct()
-    // carried row per occupied slice: backward, the latest representative
-    // from any EARLIER slice; forward, the earliest from any LATER one —
-    // an inequality join, but over per-(key,slice) aggregates, so
-    // |keys| x |slices|^2 at worst, never corpus-scale
-    val carries = leftSlices.join(repPerSlice,
-        leftSlices("__k") === repPerSlice("__k") &&
-          (if (forward) col("__rs") > col("__ls")
-           else col("__rs") < col("__ls")))
-      .groupBy(leftSlices("__k").as("__gk"), col("__ls"))
-      .agg((if (forward) min_by(col("__row"), col("__rs"))
-            else max_by(col("__row"), col("__rs"))).as("__row"))
-      .select((right.columns.map(c => col(s"__row.$c")) ++
-        Seq(col("__ls"))).toIndexedSeq: _*)
-      .withColumn("__slice", col("__ls"))
+    // carried row per occupied slice: the representative of the latest
+    // strictly earlier slice (forward: earliest strictly later). The
+    // representatives are unique per (key, slice), so no tie arises
+    val carries = asOfJoin(leftSlices, repPerSlice, "__k", "__k",
+        "__ls", "__rs", Seq("__row"), forward = forward, strict = true)
+      .select((right.columns.map(c => col(s"asof___row.$c")) ++
+        Seq(col("__ls").as("__slice"))).toIndexedSeq: _*)
       // rebuild the composite key in the DESTINATION slice (the carried
       // row's key/time are non-null by construction)
-      .withColumn("__kk", compositeKey(col(rightKey), col("__ls")))
-      .drop("__ls")
+      .withColumn("__kk", compositeKey(col(rightKey), col("__slice")))
     val rAug = rS.select((right.columns.map(col) ++
         Seq(col("__slice"), col("__kk"))).toIndexedSeq: _*)
-      .unionByName(carries.select((right.columns.map(col) ++
-        Seq(col("__slice"), col("__kk"))).toIndexedSeq: _*))
+      .unionByName(carries)
 
     // strict threads straight through: a carried row always comes from
     // a DIFFERENT slice (strictly earlier backward, strictly later
-    // forward — the __rs </> __ls join branch), so its time can never
-    // tie with a left time in the destination slice — only the
-    // within-slice merge needs the tie exclusion, and the native exec
-    // applies it
+    // forward), so its time can never tie with a left time in the
+    // destination slice — only the within-slice merge needs the tie
+    // exclusion, and the native exec applies it
     asOfJoin(lS, rAug, leftKey = "__kk", rightKey = "__kk",
         leftTime = leftTime, rightTime = rightTime,
         rightVals = rightVals, leftOuter = leftOuter,
@@ -202,24 +192,21 @@ object JoinOps {
   }
 
   /** Auto-skew-routed as-of join — the last rung of the as-of planning
-    * ladder (round-16, sketch-fed round-17): the physical TIER is
-    * already cost-based ([[graft.plans.AsOfJoinStrategy]] picks
-    * broadcast vs shuffled merge from stats), but Spark's AQE cannot
-    * split the custom exec's skewed partitions (OptimizeSkewedJoin
-    * pattern-matches only the built-in join execs — pinned in
-    * AsOfSkewSpec), so a hot key serializes onto one task unless the
-    * caller reads the w19 slice plan and calls [[asOfJoinTimeSliced]]
-    * manually. This operator does that read-and-route automatically:
+    * ladder: the physical TIER is already cost-based
+    * ([[graft.plans.AsOfJoinStrategy]] picks broadcast vs shuffled merge
+    * from stats), but Spark's AQE cannot split the custom exec's skewed
+    * partitions (OptimizeSkewedJoin pattern-matches only the built-in
+    * join execs — pinned in AsOfSkewSpec), so a hot key serializes onto
+    * one task. This operator detects hot keys and routes them:
     *
     *  1. [[asOfSkewPlan]] detects hot keys — a Misra-Gries
     *     pass (ds04's `mg_topk_agg`): O(capacity) state per partition,
     *     NO keyed shuffle, so skew detection never pays a
-    *     key-cardinality exchange over a 100 TB input — and derives
-    *     each hot key's slice width from an exact count+span lookup
-    *     over just the candidate keys (a pruned second pass); the MIN
-    *     width across hot keys becomes the global sliceWidth (w19's
-    *     arithmetic). When an explicit `targetRowsPerTask` is finer
-    *     than the sketch can certify, the second pass drops its
+    *     key-cardinality exchange over a 100 TB input — and sizes the
+    *     slices with [[asOfSlicePlan]] over just the candidate keys (a
+    *     pruned second pass); the MIN width across hot keys becomes the
+    *     global sliceWidth. When an explicit `targetRowsPerTask` is
+    *     finer than the sketch can certify, the second pass drops its
     *     candidate filter (one full keyed histogram — the w19 gate
     *     shape);
     *  2. keys above `targetRowsPerTask` (default: left total /
@@ -230,17 +217,19 @@ object JoinOps {
     *     passes a test-scale target that thousands of keys exceed;
     *  3. both inputs split on hot-key membership (an isin predicate —
     *     it folds into the scan as an In filter, no extra shuffle):
-    *     hot rows route through [[asOfJoinTimeSliced]] at the planned
+    *     hot rows route through the time-sliced form at the planned
     *     width, cold rows through [[asOfJoin]] (which keeps the
     *     cost-based broadcast/shuffled choice), results union.
     *
     * No hot keys → the plain native plan, zero routing overhead beyond
     * the detection pass. Requires an ATOMIC key column (the detection
     * collect and the isin literal need a scalar); composite keys:
-    * pre-concat or call the sliced form directly. NULL left keys route
-    * cold, preserving the exec's null semantics (never match; outer
-    * still pads). SQL reaches this router through the `ASOF JOIN`
-    * syntax under `spark.graft.asof.auto`, at the default target. */
+    * pre-concat. NULL left keys route cold, preserving the exec's null
+    * semantics (never match; outer still pads). Detection runs jobs when
+    * this is called, so it is a DataFrame call, never an analysis rule:
+    * a SQL caller routes its tables with
+    * `asOfJoinAuto(spark.table(l), spark.table(r), ...)`, and the
+    * `ASOF JOIN` syntax always plans the plain node. */
   def asOfJoinAuto(left: DataFrame, right: DataFrame,
                    leftKey: String, rightKey: String,
                    leftTime: String, rightTime: String,
@@ -253,7 +242,7 @@ object JoinOps {
     require(!left.schema(leftKey).dataType
       .isInstanceOf[org.apache.spark.sql.types.StructType],
       "asOfJoinAuto requires an atomic key column — composite keys: " +
-        "pre-concat, or size asOfJoinTimeSliced from the w19 plan directly")
+        "pre-concat them into one column")
     def native(l: DataFrame, r: DataFrame): DataFrame =
       asOfJoin(l, r, leftKey, rightKey, leftTime, rightTime,
         rightVals, leftOuter, forward, tolerance, strict)
@@ -288,11 +277,10 @@ object JoinOps {
     *     true count > total/capacity is present, and est >= true -
     *     total/capacity, so filtering est > target - total/capacity
     *     keeps every truly-hot key;
-    *  2. an exact count+span aggregate over ONLY candidate-key rows
-    *     (the isin on the hash folds into the scan; map-side combine
-    *     leaves <= |candidates| rows to shuffle) supplies the exact
-    *     counts the w19 width arithmetic needs — estimates never size
-    *     slices.
+    *  2. [[asOfSlicePlan]] over ONLY candidate-key rows (the isin on the
+    *     hash folds into the scan; map-side combine leaves
+    *     <= |candidates| rows to shuffle) supplies the exact counts the
+    *     width arithmetic needs — estimates never size slices.
     *
     * CAP CAVEAT: the candidate list is truncated at 4*maxHot by MG
     * ESTIMATED count, which need not follow true-count order, so past
@@ -314,8 +302,7 @@ object JoinOps {
     val maxHot = math.max(4 * par, 64)
     // NULL key/time rows are excluded on purpose: they never match in
     // the exec, so they cannot make a key hot — and a key whose times
-    // are ALL null would otherwise surface null mn/mx into the driver
-    // arithmetic below
+    // are ALL null would otherwise surface a null span into the planner
     val filtered = left.filter(
       col(leftKey).isNotNull && micros(left, leftTime).isNotNull)
     val cap = math.max(4096, par)
@@ -342,25 +329,40 @@ object JoinOps {
     // thousands of keys through; keys past the cap just route cold. The
     // secondary sort on the key makes count ties at the cap boundary
     // pick the same hot set on every run
-    val hot = rows
-      .groupBy(col(leftKey).as("__k"))
-      .agg(count(lit(1)).as("__n"),
-        min(micros(left, leftTime)).as("__mn"),
-        max(micros(left, leftTime)).as("__mx"))
-      .filter(col("__n") > lit(target))
-      .orderBy(col("__n").desc, col("__k").asc).limit(maxHot).collect()
+    val hot = asOfSlicePlan(
+        rows.select(col(leftKey).as("key"), micros(left, leftTime).as("tus")),
+        lit(target))
+      .orderBy(col("n_rows").desc, col("key").asc).limit(maxHot)
+      .select(col("key"), col("slice_width")).collect()
+    // global width = MIN, so the hottest key's tasks hit ~target rows
     if (hot.isEmpty) None
-    else {
-      // w19's sizing: per hot key span / ceil(n/target); global = MIN so
-      // the hottest key's tasks hit ~target rows
-      val width = hot.map { r =>
-        val n = r.getLong(1); val span = r.getLong(3) - r.getLong(2) + 1
-        val nSlices = math.max(1L, math.ceil(n.toDouble / target).toLong)
-        math.max(1L, math.ceil(span.toDouble / nSlices).toLong)
-      }.min
-      Some((hot.map(_.get(0)).toSeq, width))
-    }
+    else Some((hot.map(_.get(0)).toSeq, hot.map(_.getLong(1)).min))
   }
+
+  /** The hot-key slice planner, shared by [[asOfSkewPlan]] and the w19
+    * gate (w14's histogram->plan arithmetic on the time axis). `keyed`
+    * has columns `key` and `tus` (a long time in its own units); keys
+    * with more than `target` rows are hot. Per hot key it returns
+    * `(key, n_rows, n_slices, t_min, t_max, slice_width)` with
+    * n_slices = ceil(n_rows / target) and slice_width =
+    * max(1, ceil((t_max - t_min + 1) / n_slices)): the width at which
+    * each of the key's (key, slice) tasks sees ~target rows. Both
+    * ceilings divide in double, as the DuckDB oracle of w19 does. */
+  private[graft] def asOfSlicePlan(keyed: DataFrame,
+                                   target: Column): DataFrame =
+    // the target is one value, so grouping on it splits nothing; it
+    // carries the target through the aggregate as one column, which
+    // plans a subquery target once instead of once per use
+    keyed.groupBy(col("key"), target.as("target"))
+      .agg(count(lit(1)).as("n_rows"),
+        min(col("tus")).as("t_min"), max(col("tus")).as("t_max"))
+      .filter(col("n_rows") > col("target"))
+      .select(col("key"), col("n_rows"),
+        ceil(col("n_rows") / col("target").cast("double")).as("n_slices"),
+        col("t_min"), col("t_max"))
+      .withColumn("slice_width", greatest(lit(1L),
+        ceil((col("t_max") - col("t_min") + 1) /
+          col("n_slices").cast("double"))))
 
   /** a time column as a long in its own units (micros for timestamps) */
   private def micros(df: DataFrame, c: String): Column =

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeMap, AttributeReference, BindReferences, Cast, Descending, Expression, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
@@ -60,9 +60,11 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * OptimizeSkewedJoin pattern-matches only the built-in SortMergeJoin/
   * ShuffledHashJoin execs (pinned by AsOfSkewSpec with a positive
   * control), so a hot key serializes onto one task — the documented
-  * mitigation is `JoinOps.asOfJoinTimeSliced`, which splits the hot
-  * key across time slices with per-slice carry-in rows and feeds THIS
-  * exec a composite (key, slice) key.
+  * mitigation is `JoinOps.asOfJoinAuto`, which splits hot keys across
+  * time slices with per-slice carry-in rows and feeds THIS exec a
+  * composite (key, slice) key; its carry-ins are an as-of join on this
+  * exec too. The `ASOF JOIN` syntax always plans this node as written:
+  * it runs no job at analysis.
   *
   * Contract and bounds:
   *  - key expressions may be ANY orderable type (atomic — bigint,
@@ -169,45 +171,6 @@ object AsOfJoin {
     }
     AsOfJoin(left, fresh, lk, onFresh(rk), lt, onFresh(rt),
       leftOuter, forward, tolerance, strict)
-  }
-
-  /** The analysis-time skew route of the `ASOF JOIN` syntax under
-    * `spark.graft.asof.auto`: hands a built node's inputs to
-    * `JoinOps.asOfJoinAuto` at its default target (hot keys
-    * time-sliced, cold keys on the plain node). Hot-key detection needs
-    * runtime statistics, so this RUNS the detection jobs on the driver
-    * during analysis — plan-only operations (EXPLAIN, re-analysing a
-    * view) pay them too; the sliced plan is a different LOGICAL
-    * composition (filters, a slice-key union, two as-of nodes), which a
-    * physical-planning decision could not express.
-    *
-    * Both sides are renamed positionally first (`__l0..`/`__r0..`, key
-    * and time as `__lk`/`__lt` and `__rk`/`__rt`): the router addresses
-    * columns by name, and a side may carry duplicate names. The result's
-    * output is positionally aligned with `aoj.output` — same names,
-    * fresh exprIds. The router requires an atomic key. */
-  def routeAuto(aoj: AsOfJoin): LogicalPlan = {
-    val spark = SparkSession.active
-    def side(p: LogicalPlan, tag: String, key: Expression,
-             time: Expression) =
-      GraftPlanBridge.ofRows(spark, Project(
-        p.output.zipWithIndex.map { case (a, i) => Alias(a, s"__$tag$i")() } ++
-          Seq(Alias(key, s"__${tag}k")(), Alias(time, s"__${tag}t")()), p))
-    val routed = graft.operators.JoinOps.asOfJoinAuto(
-      side(aoj.left, "l", aoj.leftKey, aoj.leftTime),
-      side(aoj.right, "r", aoj.rightKey, aoj.rightTime),
-      leftKey = "__lk", rightKey = "__rk", leftTime = "__lt",
-      rightTime = "__rt",
-      rightVals = aoj.right.output.indices.map(i => s"__r$i"),
-      leftOuter = aoj.leftOuter, forward = aoj.forward,
-      tolerance = aoj.tolerance, strict = aoj.strict)
-      .queryExecution.analyzed
-    val byName = routed.output.map(a => a.name -> a).toMap
-    val nLeft = aoj.left.output.size
-    Project(aoj.output.zipWithIndex.map { case (a, i) =>
-      val src = if (i < nLeft) s"__l$i" else s"asof___r${i - nLeft}"
-      Alias(byName(src), a.name)()
-    }, routed)
   }
 }
 

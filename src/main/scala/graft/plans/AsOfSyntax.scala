@@ -24,15 +24,10 @@ import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, IntegerType,
   *                                      --   (graft extension, not DuckDB)
   * }}}
   *
-  * Skew: with `SET spark.graft.asof.auto=true` the SAME text routes
-  * through [[AsOfJoin.routeAuto]] at the default target (left rows /
-  * parallelism) — hot keys detected by the Misra-Gries sketch pass and
-  * time-sliced, cold keys on the native plan, identical results by
-  * construction. The detection runs at ANALYSIS time, so EXPLAIN over
-  * the text executes the detection scans while the conf is on;
-  * composite (multi-equality) keys keep the plain native node. A
-  * caller that needs an explicit target calls
-  * `JoinOps.asOfJoinAuto(targetRowsPerTask = ...)`.
+  * The text always plans the one [[AsOfJoin]] node and runs no job at
+  * analysis, EXPLAIN included. Hot-key splitting needs runtime key
+  * counts, so it is a DataFrame call:
+  * `JoinOps.asOfJoinAuto(spark.table(l), spark.table(r), ...)`.
   *
   * Mechanism (three small pieces, each doing what it is best at):
   *
@@ -431,24 +426,10 @@ object ResolveAsOfSyntax extends Rule[LogicalPlan] with PredicateHelper {
             val anyNull = parts.map(IsNull(_): Expression).reduce(Or(_, _))
             If(anyNull, Literal.create(null, struct.dataType), struct)
           }
-        val aoj = AsOfJoin.build(l, r,
+        val planned = AsOfJoin.build(l, r,
           mkKey(eqs.map(e => uncoerced(e._1)).toSeq),
           mkKey(eqs.map(e => uncoerced(e._2)).toSeq),
           uncoerced(ltE), uncoerced(rtE), leftOuter, fwd, tol, strict, fail)
-        // spark.graft.asof.auto=true routes the SAME syntax through the
-        // hot-key slicing router (e42's machinery), so a user writing
-        // the ASOF JOIN text with one hot key does not get the unsplit
-        // native plan and a serialized task. Conf-gated because the
-        // routing detects hot keys AT ANALYSIS TIME: EXPLAIN over the
-        // text executes the detection scans. Composite (struct) keys
-        // keep the native node — the router requires an atomic key for
-        // its isin literal.
-        val autoOn = conf.getConfString("spark.graft.asof.auto",
-          "false").toBoolean
-        val planned =
-          if (autoOn && !aoj.leftKey.dataType.isInstanceOf[StructType])
-            AsOfJoin.routeAuto(aoj)
-          else aoj
         // back onto the Join's own exprIds (the node fresh-aliases the
         // right side), so parents' resolved references survive the swap;
         // outer widens right-side nullability exactly as Join(LeftOuter)

@@ -1208,16 +1208,15 @@ object Events {
         GROUP BY p.event_id, p.user_id, p.ts, p.value""")),
 
     // ---- time-sliced skew-split as-of join -------------------------------
-    //      e24's exact query through JoinOps.asOfJoinTimeSliced — the
-    //      hot-key scale path: AQE's OptimizeSkewedJoin cannot split the
-    //      custom exec's exchanges (AsOfSkewSpec pins this with a
-    //      positive control), so a user whose key histogram shows a hot
-    //      key swaps this operator in; the time axis is sliced at one
-    //      day and the single latest pre-slice right row is carried into
-    //      each occupied slice, making results IDENTICAL to the unsliced
-    //      plan — proven here against the same DuckDB ASOF oracle as
-    //      e24, and against the native exec on a null-mixed Zipf fixture
-    //      in AsOfSkewSpec.
+    //      e24's exact query through JoinOps.asOfJoinTimeSliced, the
+    //      hot-key path of asOfJoinAuto at a fixed width: AQE's
+    //      OptimizeSkewedJoin cannot split the custom exec's exchanges
+    //      (AsOfSkewSpec pins this with a positive control); the time
+    //      axis is sliced at one day and the single latest pre-slice
+    //      right row is carried into each occupied slice, making results
+    //      IDENTICAL to the unsliced plan — proven here against the same
+    //      DuckDB ASOF oracle as e24, and against the native exec on a
+    //      null-mixed Zipf fixture in AsOfSkewSpec.
     Q("e36_asof_time_sliced",
       (s, d) => {
         val ev = Tables.events(s, d)
@@ -1412,7 +1411,7 @@ object Events {
     //      routes keys above targetRowsPerTask through the sliced form
     //      at the planned width, and leaves cold keys on the cost-based
     //      native path. The low target forces real routing on the sf
-    //      fixtures (AsOfSkewSpec pins plan shape — 2 as-of nodes, one
+    //      fixtures (AsOfSkewSpec pins plan shape — 3 as-of nodes, one
     //      struct-keyed — and native equality on the Zipf fixture); the
     //      oracle is e24/e36's plain DuckDB ASOF, because routing must
     //      never change results.
@@ -1438,36 +1437,21 @@ object Events {
                    WHERE event_type = 'click') c
           ON p.user_id = c.user_id AND p.ts >= c.ts""")),
 
-    // ---- auto-skew as-of through PURE SQL (round-17) ----------------------
-    //      the ASOF JOIN syntax under spark.graft.asof.auto, over two
-    //      named temp views: a spark.sql user inherits hot-key
-    //      splitting with no Scala in sight. The fixture key collapses
-    //      75% of users onto k=0 (a CASE both engines evaluate
-    //      identically), so the DEFAULT target (total/parallelism)
-    //      finds a genuinely hot key and the analysis-time router
-    //      plans the sliced+native union — the Misra-Gries sketch
-    //      path end-to-end, sf-independent. The right side pre-
-    //      aggregates to one row per (k, ts) because collapsing keys
+    // ---- auto-skew as-of over SQL-built inputs (round-17) ---------------
+    //      the collapsed-key fixture: 75% of users fold onto k=0 (a CASE
+    //      both engines evaluate identically), so the DEFAULT target
+    //      (total/parallelism) finds a genuinely hot key at any SF and
+    //      JoinOps.asOfJoinAuto plans the sliced+native union — the
+    //      Misra-Gries sketch path end to end. The right side
+    //      pre-aggregates to one row per (k, ts) because collapsing keys
     //      manufactures cross-user time ties, and duplicate (key, rt)
     //      pairs would make the as-of tie-break unspecified in BOTH
     //      engines; MAX(value) restores a deterministic oracle.
-    //      AsOfSyntaxSpec asserts the sliced (struct-keyed) node appears
-    //      in a routed ASOF JOIN plan for the hot key.
     Q("e43_asof_auto_sql",
       (s, d) => {
-        Tables.events(s, d).createOrReplaceTempView("events")
-        s.sql("""CREATE OR REPLACE TEMP VIEW e43_purchases AS
-          SELECT event_id,
-            (CASE WHEN user_id % 4 > 0 THEN 0 ELSE user_id END) AS k, ts
-          FROM events WHERE event_type = 'purchase'""")
-        s.sql("""CREATE OR REPLACE TEMP VIEW e43_clicks AS
-          SELECT (CASE WHEN user_id % 4 > 0 THEN 0 ELSE user_id END) AS k,
-            ts, MAX(value) AS value
-          FROM events WHERE event_type = 'click' GROUP BY 1, 2""")
-        withAsofAuto(s)(s.sql("""
-          SELECT p.event_id, p.k, p.ts, c.ts AS asof_ts, c.value AS asof_value
-          FROM e43_purchases p
-          ASOF INNER JOIN e43_clicks c ON p.k = c.k AND p.ts >= c.ts"""))
+        val (p, c) = collapsedInputs(s, d)
+        graft.operators.JoinOps.asOfJoinAuto(p, c, "k", "k", "ts", "ts",
+          rightVals = Seq("ts", "value"))
       },
       Some("""
         SELECT p.event_id, p.k, p.ts, c.ts AS asof_ts, c.value AS asof_value
@@ -1483,20 +1467,17 @@ object Events {
                    GROUP BY 1, 2) c
           ON p.k = c.k AND p.ts >= c.ts""")),
 
-    // ---- FORWARD auto-skew as-of through PURE SQL (round-18) -----------
-    //      e45's text with the inequality reversed (p.ts <= c.ts),
-    //      under spark.graft.asof.auto. Same collapsed-key fixture as
-    //      e43 (75% of users onto k=0, so the DEFAULT target routes for
-    //      real at any SF), direction flipped: each purchase takes the
+    // ---- FORWARD auto-skew as-of (round-18) ------------------------------
+    //      e43 with the direction flipped: each purchase takes the
     //      user's EARLIEST click at-or-after it, and the oracle is e27's
     //      reversed-inequality DuckDB ASOF over the collapsed key.
-    //      AsOfSkewSpec's matrix test pins every outer x forward x
-    //      strict shape of the routed syntax against the unrouted one.
+    //      AsOfSkewSpec's router matrix pins every outer x forward x
+    //      strict x tolerance shape against the plain node.
     Q("e44_asof_auto_fwd_sql",
       (s, d) => {
-        Tables.events(s, d).createOrReplaceTempView("events")
-        withAsofAuto(s)(s.sql(asofSyntaxCollapsedSql
-          .replace("p.ts >= c.ts", "p.ts <= c.ts")))
+        val (p, c) = collapsedInputs(s, d)
+        graft.operators.JoinOps.asOfJoinAuto(p, c, "k", "k", "ts", "ts",
+          rightVals = Seq("ts", "value"), forward = true)
       },
       Some("""
         SELECT p.event_id, p.k, p.ts, c.ts AS asof_ts, c.value AS asof_value
@@ -1512,36 +1493,35 @@ object Events {
                    GROUP BY 1, 2) c
           ON p.k = c.k AND p.ts <= c.ts""")),
 
-    // ---- parser ASOF JOIN syntax under auto-skew routing (round-18) ----
-    //      spark.graft.asof.auto=true: the e34 SYNTAX over inline
-    //      subqueries with e43's collapsed hot key plans the
-    //      sliced+native union — closing the r17 gap where the same
-    //      text serialized the hot key onto one task. Oracle: the
-    //      IDENTICAL text on DuckDB (its native ASOF JOIN) — routing
-    //      must never change results.
+    // ---- parser ASOF JOIN syntax over the collapsed hot key (round-18) --
+    //      the e34 SYNTAX over inline subqueries with e43's collapsed
+    //      hot key, planned as the one native node. Oracle: the
+    //      IDENTICAL text on DuckDB (its native ASOF JOIN).
     Q("e45_asof_syntax_auto",
       (s, d) => {
         Tables.events(s, d).createOrReplaceTempView("events")
-        withAsofAuto(s)(s.sql(asofSyntaxCollapsedSql))
+        s.sql(asofSyntaxCollapsedSql)
       },
       Some(asofSyntaxCollapsedSql))
   )
 
-  /** runs `body` with `spark.graft.asof.auto` on, then restores the
-    * prior value: `s.sql` analyzes eagerly and routing happens at
-    * analysis, so the returned frame keeps its routed plan and no
-    * other gate inherits the analysis-time detection scans */
-  private def withAsofAuto(s: SparkSession)(body: => DataFrame): DataFrame = {
-    val prev = s.conf.getOption("spark.graft.asof.auto")
-    s.conf.set("spark.graft.asof.auto", "true")
-    try body
-    finally prev.fold(s.conf.unset("spark.graft.asof.auto"))(
-      s.conf.set("spark.graft.asof.auto", _))
+  /** e43/e44's inputs, built with the subqueries of e45's text:
+    * purchases and per-(k, ts) clicks, 75% of users collapsed onto
+    * k = 0 */
+  private def collapsedInputs(s: SparkSession,
+                              d: String): (DataFrame, DataFrame) = {
+    Tables.events(s, d).createOrReplaceTempView("events")
+    (s.sql("""SELECT event_id,
+        (CASE WHEN user_id % 4 > 0 THEN 0 ELSE user_id END) AS k, ts
+      FROM events WHERE event_type = 'purchase'"""),
+     s.sql("""SELECT (CASE WHEN user_id % 4 > 0 THEN 0 ELSE user_id END) AS k,
+        ts, MAX(value) AS value
+      FROM events WHERE event_type = 'click' GROUP BY 1, 2"""))
   }
 
   /** e45's text — valid verbatim on BOTH engines (Spark via the graft
     * parser extension, DuckDB natively), like e34's; the collapsed key
-    * manufactures one hot key so conf-gated auto routing fires */
+    * manufactures one hot key */
   private lazy val asofSyntaxCollapsedSql = """
     SELECT p.event_id, p.k, p.ts, c.ts AS asof_ts, c.value AS asof_value
     FROM (SELECT event_id,

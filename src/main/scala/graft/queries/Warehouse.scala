@@ -1095,36 +1095,29 @@ object Warehouse {
   ) ++ Seq(
 
     // ---- as-of slice planner (w14's sizing step for the TIME axis) -------
-    //      the histogram->plan arithmetic that picks
-    //      asOfJoinTimeSliced's sliceWidth: per hot key (count above the
-    //      per-reducer target, w14's rule on the same synthetic Zipf),
-    //      n_slices = ceil(n/target) and slice_width = its time span
-    //      divided into that many slices — what the hottest key needs so
-    //      each of its (key, slice) tasks sees ~target rows; the caller
-    //      takes MIN(slice_width) across hot keys as the global
-    //      parameter. Pure integer/ceil arithmetic on one keyed
-    //      aggregate + a broadcast one-row total, replayed exactly in
-    //      DuckDB — production would feed the ds04 heavy-hitter sketch
-    //      instead of the exact groupBy, same as w14.
+    //      JoinOps.asOfSlicePlan, the planner asOfJoinAuto sizes its
+    //      slices with, on w14's synthetic Zipf: per hot key (count
+    //      above the per-reducer target, w14's rule), n_slices =
+    //      ceil(n/target) and slice_width = its time span divided into
+    //      that many slices — what the hottest key needs so each of its
+    //      (key, slice) tasks sees ~target rows; the caller takes
+    //      MIN(slice_width) across hot keys as the global parameter.
+    //      The target (total rows div 32) is a scalar subquery in the
+    //      same plan. Pure integer/ceil arithmetic on one keyed
+    //      aggregate, replayed exactly in DuckDB — production would feed
+    //      the ds04 heavy-hitter sketch instead of the exact groupBy,
+    //      as asOfJoinAuto does.
     Q("w19_asof_slice_plan",
       (s, d) => {
         val keyed = Tables.events(s, d).select(
           expr("4096L div (1L + pmod(event_id * 48271L, 4096L))")
             .as("key"),
           unix_micros(col("ts")).as("tus"))
-        val total = keyed.agg(count(lit(1)).as("total_rows"))
-        keyed.groupBy(col("key")).agg(count(lit(1)).as("n_rows"),
-            min(col("tus")).as("t_min"), max(col("tus")).as("t_max"))
-          .crossJoin(broadcast(total))
-          .withColumn("target",
-            greatest(expr("total_rows div 32"), lit(1L)))
-          .filter(col("n_rows") > col("target"))
-          .select(col("key"), col("n_rows"),
-            expr("CAST(ceil(n_rows / CAST(target AS DOUBLE)) AS BIGINT)")
-              .as("n_slices"), col("t_min"), col("t_max"))
-          .withColumn("slice_width", greatest(lit(1L),
-            expr("CAST(ceil((t_max - t_min + 1) / CAST(n_slices AS " +
-              "DOUBLE)) AS BIGINT)")))
+        // greatest outside the subquery keeps the target non-null, so
+        // no null check plans a second copy of the subquery
+        val target =
+          greatest(keyed.agg(expr("count(1) div 32")).scalar(), lit(1L))
+        graft.operators.JoinOps.asOfSlicePlan(keyed, target)
           .withColumn("est_rows_per_slice",
             expr("CAST(ceil(n_rows / CAST(n_slices AS DOUBLE)) AS BIGINT)"))
       },

@@ -39,9 +39,12 @@ object HttpFetch {
     }
   }
 
-  /** fetch a remote Parquet file and open it as a DataFrame */
+  /** fetch a remote Parquet file and open it as a DataFrame. The local
+    * copy stays under the scratch root until the JVM exits: the frame
+    * reads it lazily, so it cannot be deleted on return. */
   def readParquetUrl(spark: SparkSession, url: String): DataFrame = {
-    val tmp = Files.createTempFile("graft_http_", ".parquet")
+    val dir = Files.createDirectories(graft.io.Scratch.dir("http", "fetch"))
+    val tmp = Files.createTempFile(dir, "graft_http_", ".parquet")
     fetchToFile(url, tmp)
     spark.read.parquet(tmp.toString)
   }

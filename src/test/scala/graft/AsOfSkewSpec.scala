@@ -152,6 +152,34 @@ class AsOfSkewSpec extends SparkSpec {
     assert(canon(sliced) == canon(native))
   }
 
+  test("time-sliced == native when carry sources sit 2+ empty slices " +
+      "away") {
+    val s = spark
+    import s.implicits._
+    // key 0's right rows sit at t 5, 7 and 500, 503, so at width 50 its
+    // right side occupies slices 0 and 10 only: left rows in slices 2-9
+    // carry from 2-9 empty slices back (backward) or ahead (forward).
+    // t 500 on both sides is an exact tie for strict to exclude; key 2
+    // has no right rows at all
+    val l = (Seq(1L, 6L, 100L, 200L, 300L, 400L, 499L, 500L, 501L, 700L,
+        900L).map(t => (0L, t)) ++
+      Seq(10L, 250L, 251L, 600L).map(t => (1L, t)) ++ Seq((2L, 50L)))
+      .zipWithIndex.map { case ((k, t), i) => (i.toLong, k, t) }
+      .toDF("id", "k", "t")
+    val r = Seq((0L, 5L, 1.0), (0L, 7L, 2.0), (0L, 500L, 3.0),
+      (0L, 503L, 4.0), (1L, 250L, 5.0)).toDF("k", "rt", "v")
+    for (fwd <- Seq(false, true); strict <- Seq(false, true);
+         w <- Seq(1L, 30L, 50L, 100L)) {
+      val native = JoinOps.asOfJoin(l, r, "k", "k", "t", "rt",
+        rightVals = Seq("rt", "v"), forward = fwd, strict = strict)
+      val sliced = JoinOps.asOfJoinTimeSliced(l, r, "k", "k", "t", "rt",
+        rightVals = Seq("rt", "v"), sliceWidth = w, forward = fwd,
+        strict = strict)
+      assert(canon(sliced) == canon(native),
+        s"fwd=$fwd strict=$strict width=$w")
+    }
+  }
+
   // ---- round-16: automatic skew routing --------------------------------
 
   private def asOfNodes(df: DataFrame): Seq[graft.plans.AsOfJoin] =
@@ -166,10 +194,11 @@ class AsOfSkewSpec extends SparkSpec {
       val auto = JoinOps.asOfJoinAuto(l, r, "k", "k", "t", "rt",
         rightVals = Seq("rt", "v"), leftOuter = outer, forward = fwd)
       // key 0 owns ~80% of 3000 rows >> total/parallelism, so the plan
-      // must carry TWO as-of joins: the sliced one (struct (k, slice)
-      // composite key) for the hot split plus the native cold path
+      // must carry THREE as-of joins: the sliced one (struct (k, slice)
+      // composite key) for the hot split, its carry-in join (atomic key,
+      // slice index as time) and the native cold path
       val nodes = asOfNodes(auto)
-      assert(nodes.size == 2, s"outer=$outer fwd=$fwd:\n$nodes")
+      assert(nodes.size == 3, s"outer=$outer fwd=$fwd:\n$nodes")
       assert(nodes.count(_.leftKey.dataType
         .isInstanceOf[org.apache.spark.sql.types.StructType]) == 1)
       assert(canon(auto) == canon(native), s"outer=$outer fwd=$fwd")
@@ -200,7 +229,7 @@ class AsOfSkewSpec extends SparkSpec {
     // tiny target -> hot routing; strict threads through both branches
     val auto = JoinOps.asOfJoinAuto(l, r, "k", "k", "t", "rt",
       rightVals = Seq("v"), strict = true, targetRowsPerTask = 50L)
-    assert(asOfNodes(auto).size == 2)
+    assert(asOfNodes(auto).size == 3)
     assert(canon(auto) == canon(JoinOps.asOfJoin(l, r, "k", "k",
       "t", "rt", rightVals = Seq("v"), strict = true)))
   }
@@ -226,13 +255,14 @@ class AsOfSkewSpec extends SparkSpec {
         rightVals = Seq("v"), leftOuter = outer)
       val auto = JoinOps.asOfJoinAuto(l, r, "k", "k", "t", "rt",
         rightVals = Seq("v"), leftOuter = outer, targetRowsPerTask = 20L)
-      // key 1 (60 rows, real times) is the only hot key -> 2 nodes
-      assert(asOfNodes(auto).size == 2, s"outer=$outer")
+      // key 1 (60 rows, real times) is the only hot key -> the hot
+      // route's 3 nodes
+      assert(asOfNodes(auto).size == 3, s"outer=$outer")
       assert(canon(auto) == canon(native), s"outer=$outer")
     }
   }
 
-  // ---- round-17: sketch-fed detection, caps, SQL reachability ----------
+  // ---- round-17: sketch-fed detection and caps -------------------------
 
   /** the exact hot-key plan from a plain groupBy histogram over (k, t),
     * sharing no code with asOfSkewPlan: keys with more than `target`
@@ -322,40 +352,10 @@ class AsOfSkewSpec extends SparkSpec {
       val auto = JoinOps.asOfJoinAuto(l, r, "k", "k", "t", "rt",
         rightVals = Seq("rt", "v"), leftOuter = outer, forward = fwd,
         tolerance = tol, strict = strict, targetRowsPerTask = 50L)
-      assert(asOfNodes(auto).size == 2,
+      assert(asOfNodes(auto).size == 3,
         s"outer=$outer fwd=$fwd strict=$strict tol=$tol: routing dead")
       assert(canon(auto) == canon(native),
         s"outer=$outer fwd=$fwd strict=$strict tol=$tol")
-    }
-  }
-
-  test("ASOF JOIN under spark.graft.asof.auto: all 8 shapes route, " +
-      "equal conf-off") {
-    // every outer x forward x strict shape of the syntax must (a)
-    // actually route on the Zipf fixture at the default target (the
-    // struct-keyed sliced node appears) and (b) equal the same text
-    // planned with the conf off, row for row
-    val (l, r) = skewed(1200, seed = 53)
-    l.createOrReplaceTempView("skm_l")
-    r.createOrReplaceTempView("skm_r")
-    try {
-      for (outer <- Seq(false, true); fwd <- Seq(false, true);
-           strict <- Seq(false, true)) {
-        val shape = s"outer=$outer fwd=$fwd strict=$strict"
-        val op = (if (fwd) "<" else ">") + (if (strict) "" else "=")
-        val text = s"""SELECT l.*, r.rt AS asof_rt, r.v AS asof_v
-          FROM skm_l l ASOF ${if (outer) "LEFT " else ""}JOIN skm_r r
-          ON l.k = r.k AND l.t $op r.rt"""
-        val auto = withConf("spark.graft.asof.auto", "true")(spark.sql(text))
-        val nodes = asOfNodes(auto)
-        assert(nodes.size == 2, s"$shape: routing dead\n$nodes")
-        assert(nodes.count(_.leftKey.dataType
-          .isInstanceOf[org.apache.spark.sql.types.StructType]) == 1, shape)
-        assert(canon(auto) == canon(spark.sql(text)), shape)
-      }
-    } finally {
-      spark.catalog.dropTempView("skm_l")
-      spark.catalog.dropTempView("skm_r")
     }
   }
 

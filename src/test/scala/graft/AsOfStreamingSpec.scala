@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
@@ -30,7 +29,7 @@ class AsOfStreamingSpec extends SparkSpec {
       (rnd.nextInt(20).toLong, i.toLong * 157 + 3, rnd.nextDouble())
     }.toDF("k", "rt", "v")
     // three files, one per trigger: the stream runs several batches
-    val src = Files.createTempDirectory("asof_stream").resolve("facts")
+    val src = SparkSpec.tempDir("asof_stream").resolve("facts")
       .toString
     facts.repartition(3).write.parquet(src)
 

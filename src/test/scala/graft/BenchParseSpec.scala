@@ -28,7 +28,7 @@ class BenchParseSpec extends AnyFunSuite {
   }
 
   test("fixtureFingerprint flips on regeneration, is stable otherwise") {
-    val dir = java.nio.file.Files.createTempDirectory("fixtures")
+    val dir = SparkSpec.tempDir("fixtures")
     java.nio.file.Files.writeString(dir.resolve("a.parquet"), "aaaa")
     java.nio.file.Files.writeString(dir.resolve("b.parquet"), "bb")
     val fp1 = Bench.fixtureFingerprint(dir.toString)

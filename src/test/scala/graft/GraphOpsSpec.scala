@@ -450,28 +450,30 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("reliable-checkpoint conf: same labels through the durable cut path") {
-    // spark.graft.graph.reliableCheckpoint=true routes every lineage cut
-    // through Dataset.checkpoint (fault-tolerant blocks) instead of
+    // a checkpoint dir on the context routes every lineage cut through
+    // Dataset.checkpoint (fault-tolerant blocks) instead of
     // localCheckpoint — values must be identical; only durability moves
     val edges = undirected((1L, 2L), (2L, 3L), (5L, 6L), (7L, 7L))
-    def run(): Map[Long, Long] =
+    def cc(): Map[Long, Long] =
       GraphOps.connectedComponents(
         edges.select(col("src").as("u"), col("dst").as("v"))).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val local = run()
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
-    spark.sparkContext.setCheckpointDir(dir.toString)
-    spark.conf.set(GraphOps.ReliableCheckpointConf, "true")
+    def lp(): Map[Long, Long] =
+      GraphOps.labelPropagation(edges, rounds = 2).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    val (ccLocal, lpLocal) = (cc(), lp())
+    spark.sparkContext.setCheckpointDir(
+      SparkSpec.tempDir("graft-ckpt").toString)
     try {
-      val durable = run()
-      assert(durable == local, s"$durable vs $local")
-      // the conf path also serves labelPropagation's rotation
-      val lpA = GraphOps.labelPropagation(edges, rounds = 2).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      spark.conf.set(GraphOps.ReliableCheckpointConf, "false")
-      val lpB = GraphOps.labelPropagation(edges, rounds = 2).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(lpA == lpB)
-    } finally spark.conf.set(GraphOps.ReliableCheckpointConf, "false")
+      assert(cc() == ccLocal)
+      // the same rule serves labelPropagation's rotation
+      assert(lp() == lpLocal)
+      val written = new java.io.File(
+          java.net.URI.create(spark.sparkContext.getCheckpointDir.get))
+        .list().filter(_.startsWith("rdd-"))
+      assert(written.nonEmpty, "no reliable checkpoint was written")
+    } finally org.apache.spark.CheckpointDirs.clear(spark.sparkContext)
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
   }
 }

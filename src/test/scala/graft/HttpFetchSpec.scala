@@ -25,7 +25,7 @@ class HttpFetchSpec extends SparkSpec {
 
   test("readParquetUrl streams a remote parquet into a DataFrame") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_http").toString + "/t"
+    val dir = SparkSpec.tempDir("graft_http").toString + "/t"
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1).write.parquet(dir)
     val part = new java.io.File(dir).listFiles
       .filter(_.getName.endsWith(".parquet")).head
@@ -40,7 +40,8 @@ class HttpFetchSpec extends SparkSpec {
   test("empty payloads are rejected like the reference's guard") {
     serve(Array.emptyByteArray) { url =>
       intercept[Exception] {
-        HttpFetch.fetchToFile(url, Files.createTempFile("graft_e", ".parquet"))
+        HttpFetch.fetchToFile(url,
+          SparkSpec.tempDir("graft_e").resolve("e.parquet"))
       }
     }
   }

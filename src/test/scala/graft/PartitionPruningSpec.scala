@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
 import graft.io.Tables
@@ -12,7 +11,7 @@ import graft.io.Tables
 class PartitionPruningSpec extends SparkSpec {
 
   test("writePartitioned layout prunes partitions at planning time") {
-    val dir = Files.createTempDirectory("part_orders").toString
+    val dir = SparkSpec.tempDir("part_orders").toString
     val orders = Tables.orders(spark, sfTiny)
       .withColumn("order_year", year(col("o_orderdate")))
     Tables.writePartitioned(orders, dir, "order_year")
@@ -40,7 +39,7 @@ class PartitionPruningSpec extends SparkSpec {
   test("range predicate on a string day partition prunes to the window") {
     // the io13 incremental-processing shape: BETWEEN on the partition
     // column must list only the in-window day directories
-    val dir = Files.createTempDirectory("part_events").toString
+    val dir = SparkSpec.tempDir("part_events").toString
     Tables.events(spark, sfTiny)
       .withColumn("day", to_date(col("ts")).cast("string"))
       .write.mode("overwrite").partitionBy("day").parquet(dir)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.io.Tables
 import graft.ops.TripMetrics
 import graft.queries.TripParity
@@ -8,7 +7,7 @@ import graft.queries.TripParity
 class PipelineSpec extends SparkSpec {
 
   private def tmpDir(tag: String) =
-    Files.createTempDirectory(s"graft_$tag").toString
+    SparkSpec.tempDir(s"graft_$tag").toString
 
   test("pipeline: read -> derive -> zstd write, row-preserving mod null drop") {
     val in = tmpDir("pin") + "/taxi"

@@ -12,14 +12,7 @@ import graft.io.Tables
 class SortedLayoutSpec extends SparkSpec {
 
   test("repartitionByRange + sortWithinPartitions writes disjoint file ranges") {
-    val root = java.nio.file.Files.createTempDirectory("graft_sorted_")
-    try { runLayoutTest(root.toString + "/orders") }
-    finally { // don't leak a copy of the orders table per test run
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    runLayoutTest(SparkSpec.tempDir("graft_sorted_").toString + "/orders")
   }
 
   private def runLayoutTest(out: String): Unit = {

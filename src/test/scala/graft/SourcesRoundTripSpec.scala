@@ -24,7 +24,7 @@ class SourcesRoundTripSpec extends SparkSpec {
   }
 
   test("CSV round-trip with declared schema preserves rows and types") {
-    val dir = Files.createTempDirectory("csv_orders").toString
+    val dir = SparkSpec.tempDir("csv_orders").toString
     val src = ordersNorm
     src.write.mode("overwrite").option("header", "true").csv(dir)
     val back = spark.read.schema(src.schema)
@@ -33,7 +33,7 @@ class SourcesRoundTripSpec extends SparkSpec {
   }
 
   test("ORC round-trip preserves rows and types (schema from the footer)") {
-    val dir = Files.createTempDirectory("orc_orders").toString
+    val dir = SparkSpec.tempDir("orc_orders").toString
     val src = ordersNorm
     src.write.mode("overwrite").option("compression", "zstd").orc(dir)
     // ORC carries its schema like parquet — no declaration needed
@@ -41,7 +41,7 @@ class SourcesRoundTripSpec extends SparkSpec {
   }
 
   test("JSON-lines round-trip with declared schema preserves rows and types") {
-    val dir = Files.createTempDirectory("json_orders").toString
+    val dir = SparkSpec.tempDir("json_orders").toString
     val src = ordersNorm
     src.write.mode("overwrite").json(dir)
     val back = spark.read.schema(src.schema).json(dir)
@@ -49,7 +49,7 @@ class SourcesRoundTripSpec extends SparkSpec {
   }
 
   test("declared StructType read rejects nothing silently: corrupt rows surface") {
-    val dir = Files.createTempDirectory("json_bad").toString
+    val dir = SparkSpec.tempDir("json_bad").toString
     Files.writeString(java.nio.file.Path.of(dir, "part-0.json"),
       """{"o_orderkey": 1, "o_totalprice": 10.5}
         |{"o_orderkey": "not-a-number", "o_totalprice": 2.0}

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for test suites — one session per JVM (Spark
@@ -16,6 +16,21 @@ trait SparkSpec extends AnyFunSuite {
 
   val sfTiny = "/root/testdata/sf0.001"
 
+  /** Spark jobs submitted while `body` runs, counted by a listener
+    * after draining the events queued before and by it */
+  def jobsDuring[T](body: => T): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    GraftPlanBridge.drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; GraftPlanBridge.drainListeners(spark); jobs.get }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   /** runs `body` with one session conf set, restoring its prior value */
   def withConf[T](key: String, value: String)(body: => T): T = {
     val prev = spark.conf.getOption(key)
@@ -23,4 +38,17 @@ trait SparkSpec extends AnyFunSuite {
     try body
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
+}
+
+object SparkSpec {
+
+  /** one root per test JVM; Spark's shutdown hook deletes it, with
+    * everything in it, when the JVM exits */
+  private lazy val root: java.nio.file.Path =
+    GraftPlanBridge.tempDirDeletedAtExit("graft_spec")
+
+  /** a fresh directory `<tag><random>` under the per-JVM root: a spec's
+    * scratch files never outlive the test run */
+  def tempDir(tag: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(root, tag)
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.io.Tables
 import graft.streaming.EventStreams
@@ -12,9 +11,9 @@ import graft.streaming.EventStreams
 class StreamingFileSourceSpec extends SparkSpec {
 
   test("file-source stream of events matches the batch windowed counts") {
-    val src = Files.createTempDirectory("graft_stream_src").toString
-    val out = Files.createTempDirectory("graft_stream_out").toString + "/sink"
-    val ckpt = Files.createTempDirectory("graft_stream_ck").toString
+    val src = SparkSpec.tempDir("graft_stream_src").toString
+    val out = SparkSpec.tempDir("graft_stream_out").toString + "/sink"
+    val ckpt = SparkSpec.tempDir("graft_stream_ck").toString
 
     val events = Tables.events(spark, sfTiny)
     events.write.parquet(s"$src/batch0")
@@ -41,9 +40,9 @@ class StreamingFileSourceSpec extends SparkSpec {
   }
 
   test("foreachBatch publishes each micro-batch through the zstd sink") {
-    val src = Files.createTempDirectory("graft_fb_src").toString
-    val out = Files.createTempDirectory("graft_fb_out").toString
-    val ckpt = Files.createTempDirectory("graft_fb_ck").toString
+    val src = SparkSpec.tempDir("graft_fb_src").toString
+    val out = SparkSpec.tempDir("graft_fb_out").toString
+    val ckpt = SparkSpec.tempDir("graft_fb_ck").toString
 
     val events = Tables.events(spark, sfTiny)
     events.write.parquet(s"$src/batch0")
@@ -67,9 +66,9 @@ class StreamingFileSourceSpec extends SparkSpec {
   test("restart from checkpoint ingests only new files, exactly once") {
     import org.apache.spark.sql.functions.{col, countDistinct}
     import org.apache.spark.sql.streaming.Trigger
-    val src = Files.createTempDirectory("graft_ck_src").toString
-    val out = Files.createTempDirectory("graft_ck_out").toString + "/sink"
-    val ckpt = Files.createTempDirectory("graft_ck_ck").toString
+    val src = SparkSpec.tempDir("graft_ck_src").toString
+    val out = SparkSpec.tempDir("graft_ck_out").toString + "/sink"
+    val ckpt = SparkSpec.tempDir("graft_ck_ck").toString
 
     val events = Tables.events(spark, sfTiny)
     def runOnce(): Unit = {

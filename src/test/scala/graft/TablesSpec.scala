@@ -1,15 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{AnalysisException, GraftPlanBridge, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Row}
 import org.apache.spark.sql.types.{BinaryType, StringType}
 
 import graft.io.Tables
@@ -22,19 +20,7 @@ import graft.queries.Registry
 class TablesSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Spark jobs submitted while `body` runs */
-  private def jobsDuring[T](s: SparkSession)(body: => T): Int = {
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    GraftPlanBridge.drainListeners(s)
-    s.sparkContext.addSparkListener(listener)
-    try { body; GraftPlanBridge.drainListeners(s); jobs.get }
-    finally s.sparkContext.removeSparkListener(listener)
-  }
-
-  private def tmp(tag: String): Path = Files.createTempDirectory(s"graft_tables_$tag")
+  private def tmp(tag: String): Path = SparkSpec.tempDir(s"graft_tables_$tag")
 
   /** the one part file Spark wrote under `dir` */
   private def partFile(dir: Path): Path = {
@@ -76,9 +62,9 @@ class TablesSpec extends SparkSpec {
     Seq(1, 2, 3).toDF("a").write.parquet(p)
     // the first read infers the schema from the footers: one job, the
     // cost every read paid before the cache
-    assert(jobsDuring(spark)(Tables.parquet(spark, p)) == 1)
-    assert(jobsDuring(spark)(Tables.parquet(spark, p)) == 0)
-    assert(jobsDuring(spark)(Tables.schemaOf(spark, p)) == 0)
+    assert(jobsDuring(Tables.parquet(spark, p)) == 1)
+    assert(jobsDuring(Tables.parquet(spark, p)) == 0)
+    assert(jobsDuring(Tables.schemaOf(spark, p)) == 0)
   }
 
   test("a session reading binary as string gets its own schema") {
@@ -105,6 +91,23 @@ class TablesSpec extends SparkSpec {
     assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
   }
 
+  test("the footer cache keeps at most its cap; an evicted path re-infers") {
+    val root = tmp("lru")
+    Seq((1L, "x")).toDF("a", "b").coalesce(1).write.parquet(root.resolve("src").toString)
+    val paths = (0 to Tables.FooterCap).map { i =>
+      val f = root.resolve(s"p$i.parquet")
+      Files.copy(partFile(root.resolve("src")), f)
+      f.toString
+    }
+    paths.foreach(Tables.schemaOf(spark, _))
+    assert(Tables.cachedFooters <= Tables.FooterCap, Tables.cachedFooters)
+    // the newest path is still cached; the first one, least recently
+    // read, was evicted and is inferred again, correctly
+    assert(jobsDuring(Tables.schemaOf(spark, paths.last)) == 0)
+    assert(jobsDuring(Tables.schemaOf(spark, paths.head)) == 1)
+    assert(Tables.parquet(spark, paths.head).collect().toSeq == Seq(Row(1L, "x")))
+  }
+
   test("a repeated Q.run of a fixture query submits no Spark job") {
     // jobs in the second Q.run before the footer cache: q04 2 (orders,
     // lineitem), q31 3 (customer, orders, lineitem), s01 1 (embeddings),
@@ -113,7 +116,7 @@ class TablesSpec extends SparkSpec {
         "e24_asof_native")) {
       val q = Registry.byName(name)
       q.setupAndRun(spark, sfTiny)
-      assert(jobsDuring(spark)(q.run(spark, sfTiny)) == 0, name)
+      assert(jobsDuring(q.run(spark, sfTiny)) == 0, name)
     }
   }
 }

@@ -32,7 +32,7 @@ class VectorExpressionsSpec extends SparkSpec {
   test("vec_dot runs inside whole-stage codegen") {
     // a parquet-backed frame — over a local relation the optimizer folds
     // the projection away before any codegen node exists
-    val dir = java.nio.file.Files.createTempDirectory("graft_vec").toString + "/t"
+    val dir = SparkSpec.tempDir("graft_vec").toString + "/t"
     df.write.parquet(dir)
     val plan = spark.read.parquet(dir)
       .select(call_function("vec_dot", col("a"), col("b")))

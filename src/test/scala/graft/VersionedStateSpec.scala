@@ -11,7 +11,7 @@ class VersionedStateSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkState(versions: Range): java.nio.file.Path = {
-    val dir = Files.createTempDirectory("vstate")
+    val dir = SparkSpec.tempDir("vstate")
     versions.foreach { v =>
       Seq((1L, v.toLong)).toDF("user_id", "n")
         .write.mode("overwrite").parquet(dir.resolve(s"v$v").toString)
@@ -44,7 +44,7 @@ class VersionedStateSpec extends SparkSpec {
   }
 
   test("latestVersion ignores non-version entries and empty dirs") {
-    val dir = Files.createTempDirectory("vstate")
+    val dir = SparkSpec.tempDir("vstate")
     assert(VersionedState.latestVersion(dir).isEmpty)
     Files.createDirectories(dir.resolve("_temporary"))
     Files.createDirectories(dir.resolve("v7"))

@@ -31,56 +31,49 @@ class ZOrderLayoutSpec extends SparkSpec {
   }
 
   test("z-order prunes both dimensions; date-sort prunes only dates") {
-    val root = java.nio.file.Files.createTempDirectory("graft_zorder_")
-    try {
-      val orders = Tables.orders(spark, sfTiny)
-      val days = datediff(col("o_orderdate").cast("date"),
-        lit("1992-01-01").cast("date")).cast("long")
-      val Array(cmax, dmax) = orders
-        .agg(max(col("o_custkey")), max(days)).collect()
-        .map(r => Array(r.getLong(0), r.getLong(1))).head
+    val root = SparkSpec.tempDir("graft_zorder_")
+    val orders = Tables.orders(spark, sfTiny)
+    val days = datediff(col("o_orderdate").cast("date"),
+      lit("1992-01-01").cast("date")).cast("long")
+    val Array(cmax, dmax) = orders
+      .agg(max(col("o_custkey")), max(days)).collect()
+      .map(r => Array(r.getLong(0), r.getLong(1))).head
 
-      // normalize both dims into 0..255 so the curve treats them equally
-      val cbit = col("o_custkey") * 256 / (cmax + 1)
-      val dbit = days * 256 / (dmax + 1)
+    // normalize both dims into 0..255 so the curve treats them equally
+    val cbit = col("o_custkey") * 256 / (cmax + 1)
+    val dbit = days * 256 / (dmax + 1)
 
-      val zPath = root.resolve("zorder").toString
-      orders.withColumn("zkey", Layout.zorder16(cbit, dbit))
-        .repartitionByRange(nFiles, col("zkey"))
-        .sortWithinPartitions("zkey").drop("zkey")
-        .write.parquet(zPath)
+    val zPath = root.resolve("zorder").toString
+    orders.withColumn("zkey", Layout.zorder16(cbit, dbit))
+      .repartitionByRange(nFiles, col("zkey"))
+      .sortWithinPartitions("zkey").drop("zkey")
+      .write.parquet(zPath)
 
-      val dPath = root.resolve("datesort").toString
-      orders.repartitionByRange(nFiles, col("o_orderdate"))
-        .sortWithinPartitions("o_orderdate")
-        .write.parquet(dPath)
+    val dPath = root.resolve("datesort").toString
+    orders.repartitionByRange(nFiles, col("o_orderdate"))
+      .sortWithinPartitions("o_orderdate")
+      .write.parquet(dPath)
 
-      val zRanges = perFileRanges(zPath)
-      val dRanges = perFileRanges(dPath)
-      assert(zRanges.size == nFiles && dRanges.size == nFiles)
+    val zRanges = perFileRanges(zPath)
+    val dRanges = perFileRanges(dPath)
+    assert(zRanges.size == nFiles && dRanges.size == nFiles)
 
-      // customer-only box: the lowest eighth of the key space
-      val cCut = cmax / 8
-      val zCust = zRanges.count { case (clo, _, _, _) => clo <= cCut }
-      val dCust = dRanges.count { case (clo, _, _, _) => clo <= cCut }
-      // date-only box: the first eighth of the date span
-      val dCut = dmax / 8
-      val zDate = zRanges.count { case (_, _, dlo, _) => dlo <= dCut }
-      val dDate = dRanges.count { case (_, _, dlo, _) => dlo <= dCut }
+    // customer-only box: the lowest eighth of the key space
+    val cCut = cmax / 8
+    val zCust = zRanges.count { case (clo, _, _, _) => clo <= cCut }
+    val dCust = dRanges.count { case (clo, _, _, _) => clo <= cCut }
+    // date-only box: the first eighth of the date span
+    val dCut = dmax / 8
+    val zDate = zRanges.count { case (_, _, dlo, _) => dlo <= dCut }
+    val dDate = dRanges.count { case (_, _, dlo, _) => dlo <= dCut }
 
-      // date-sort: every file spans ~the full custkey range, so a
-      // customer filter reads everything; z-order confines the box to a
-      // minority of files on EITHER dimension
-      assert(dCust == nFiles, s"date-sorted custkey files: $dCust")
-      assert(zCust <= nFiles / 2, s"z-order custkey files: $zCust")
-      assert(zDate <= nFiles / 2, s"z-order date files: $zDate")
-      assert(dDate <= 3, s"date-sorted date files: $dDate")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    // date-sort: every file spans ~the full custkey range, so a
+    // customer filter reads everything; z-order confines the box to a
+    // minority of files on EITHER dimension
+    assert(dCust == nFiles, s"date-sorted custkey files: $dCust")
+    assert(zCust <= nFiles / 2, s"z-order custkey files: $zCust")
+    assert(zDate <= nFiles / 2, s"z-order date files: $zDate")
+    assert(dDate <= 3, s"date-sorted date files: $dDate")
   }
 
   test("zorder16 interleaves bits correctly on known values") {
